@@ -1023,7 +1023,9 @@ object Dedup {
     * and round count cannot change the answer. Iteration caps at `maxIter`
     * with a convergence check per round (a filter-isEmpty scan of the
     * round's checkpointed blocks — no extra join; rounds are bounded by
-    * log diameter, in practice 3-5 for near-dup clusters).
+    * log diameter, in practice 3-5 for near-dup clusters); reaching the
+    * cap unconverged throws IllegalStateException rather than return
+    * labels that split components.
     *
     * Returns (id, label) for every id appearing in `pairs`; singletons
     * (docs with no dup pair) are absent by construction — callers keep the
@@ -1108,6 +1110,11 @@ object Dedup {
         println(f"[cc] round $iter ${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged changed=$changed")
       }
     }
+    // unconverged labels split components silently; `converged` is the
+    // last round's own check, so failing here costs no extra Spark job
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter = $maxIter rounds")
     labels
   }
 

@@ -6,21 +6,49 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Dedup
 
-/** Streaming exact-dedup gate for document ingestion: emit only the FIRST
-  * occurrence of each content hash, with state BOUNDED by the event-time
-  * watermark (`dropDuplicatesWithinWatermark` — hashes older than the
-  * watermark are evicted from the state store).
+/** Streaming dedup for document ingestion: one exact-dedup gate and seven
+  * micro-batch families (five near-dup sweeps, two stateless gates) that
+  * share one driver.
   *
-  * Contract at 100 TB: this is the bounded-state streaming GATE, not an
-  * exact global dedup — a duplicate arriving more than `lateness` after
-  * its original passes through (its hash has been evicted). Exactness is
-  * restored downstream by the batch sweep (`ops.Dedup.exact` /
-  * `exactCanonicalIds` over the landed corpus) — the standard
-  * streaming-gate + batch-sweep layout; the gate's job is to stop the
-  * (overwhelmingly common) near-in-time duplicates from ever landing.
+  * [[firstSeen]] is the exact-dedup gate: emit only the FIRST occurrence of
+  * each content hash, with state BOUNDED by the event-time watermark
+  * (`dropDuplicatesWithinWatermark` — hashes older than the watermark are
+  * evicted from the state store). Contract at 100 TB: this is the
+  * bounded-state streaming GATE, not an exact global dedup — a duplicate
+  * arriving more than `lateness` after its original passes through (its
+  * hash has been evicted). Exactness is restored downstream by the batch
+  * sweep (`ops.Dedup.exact` / `exactCanonicalIds` over the landed corpus) —
+  * the standard streaming-gate + batch-sweep layout; the gate's job is to
+  * stop the (overwhelmingly common) near-in-time duplicates from ever
+  * landing. Works identically on a batch DataFrame (unified semantics —
+  * then it IS exact); the spec drives both and pins agreement.
   *
-  * Works identically on a batch DataFrame (unified semantics — then it IS
-  * exact); the spec drives both and pins agreement.
+  * The micro-batch families are plain functions of one batch and its
+  * batchId — [[sweepBatch]] (MinHash), [[simHashSweepBatch]],
+  * [[embeddingSweepBatch]], [[semanticSweepBatch]],
+  * [[duplicateSubstringSweepBatch]], [[decontaminationGateBatch]],
+  * [[unigramQualityGateBatch]] — and [[sweep]] runs any of them
+  * continuously under Structured Streaming:
+  * {{{
+  *   StreamingDedup.sweep(docs, checkpointDir)(
+  *     StreamingDedup.simHashSweepBatch(_, _, "text", "doc_id", stateDir,
+  *       maxHamming = 3, maxBucketSize = 64))
+  * }}}
+  * A sweep runs its family's incremental op against the store of
+  * everything previously landed, then appends the batch to the store. By
+  * the telescoping contract (spec-pinned at the ops layer), the per-batch
+  * outputs together equal one full batch run over the whole landed corpus;
+  * each family's doc states how. At 100 TB each sweep costs O(batch)
+  * hashing plus a join against the store — never a full-corpus re-pair.
+  *
+  * State layout, shared by every family: parquet tables under one directory
+  * (`stateDir` for the sweeps, `outDir` for the gates), each partitioned by
+  * `_batch` (the foreachBatch batchId). Replay contract: a replayed batchId
+  * dynamically OVERWRITES only its own `_batch` partition, and the state
+  * reads exclude the current batchId — so a batch re-run after a mid-write
+  * crash neither double-lands rows nor sweeps against its own half-landed
+  * remains. Every batch function is idempotent per batchId, and may also be
+  * called directly by a caller driving its own batch loop.
   */
 object StreamingDedup {
 
@@ -40,41 +68,24 @@ object StreamingDedup {
     else hashed.dropDuplicates("content_hash")
   }
 
-  /** Streaming NEAR-dup sweep: every micro-batch runs
-    * [[graft.ops.Dedup.minHashLshIncremental]] against the band store of
-    * everything previously landed, then appends itself to the store — the
-    * incremental batch-sweep family driven continuously by Structured
-    * Streaming. By the telescoping contract (spec-pinned at the ops
-    * layer), the union of all per-batch pair outputs equals one full
-    * [[graft.ops.Dedup.minHashLsh]] run over the whole landed corpus, with
-    * every pair emitted exactly once, by the batch that completed it.
-    *
-    * State is three parquet tables under `stateDir`, each partitioned by
-    * `_batch` (the foreachBatch batchId): `corpus` (id, text — verify
-    * side), `bands` (the LSH band-row store), `pairs` (the output).
-    * Restart safety: a replayed batchId dynamically OVERWRITES only its
-    * own `_batch` partition, and the state reads exclude the current
-    * batchId — so a batch re-run after a mid-write crash neither
-    * double-lands rows nor pairs the batch against its own half-landed
-    * remains. At 100 TB each sweep costs O(batch) hashing plus a banded
-    * join against the store — never a full-corpus re-pair.
+  /** Runs `batch` on every micro-batch of the streaming `docs`, with
+    * progress checkpointed under `checkpointDir`; `batch` is one of the
+    * family functions below with its own arguments bound.
     */
-  def nearDupSweep(docs: DataFrame, textCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, shingleSize: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, minJaccard: Double = 0.8,
-      seed: Long = 42L, maxBucketSize: Int = 64): StreamingQuery =
+  def sweep(docs: DataFrame, checkpointDir: String)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sweepBatch(batch, batchId, textCol, idCol, stateDir, shingleSize,
-          numHashes, bands, minJaccard, seed, maxBucketSize)
-      }
+      .foreachBatch(batch)
       .start()
 
-  /** One micro-batch of [[nearDupSweep]] (exposed for direct testing and
-    * for callers driving their own batch loop): sweep `batch` against the
-    * landed state under `stateDir`, write this batch's pairs, then land
-    * the batch's band rows and text. Idempotent per batchId.
+  /** MinHash near-dup sweep: runs [[graft.ops.Dedup.minHashLshIncremental]]
+    * against the band store of everything previously landed. The union of
+    * all per-batch pair outputs equals one full [[graft.ops.Dedup.minHashLsh]]
+    * run over the landed corpus, with every pair emitted exactly once, by
+    * the batch that completed it. State under `stateDir`: `corpus` (id,
+    * text — the verify side), `bands` (the LSH band-row store) and `pairs`
+    * (the output).
     */
   def sweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, shingleSize: Int, numHashes: Int,
@@ -94,23 +105,12 @@ object StreamingDedup {
     writeBatch(b, s"$stateDir/corpus", batchId)
   }
 
-  /** SimHash sibling of [[nearDupSweep]]: the persisted state is just the
-    * (id, simhash) table — one long per doc, the cheapest of the three
-    * stores — plus the pairs output. Same telescoping and crash-replay
-    * contracts.
+  /** SimHash near-dup sweep via [[graft.ops.Dedup.simHashIncremental]]: the
+    * persisted state is just the (id, simhash) table — one long per doc,
+    * the cheapest of the stores — plus the `pairs` output. Per-batch pairs
+    * telescope to one full [[graft.ops.Dedup.simHashPairs]] run, each pair
+    * exactly once.
     */
-  def simHashSweep(docs: DataFrame, textCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, maxHamming: Int = 3,
-      maxBucketSize: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        simHashSweepBatch(batch, batchId, textCol, idCol, stateDir,
-          maxHamming, maxBucketSize)
-      }
-      .start()
-
-  /** One micro-batch of [[simHashSweep]]. Idempotent per batchId. */
   def simHashSweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, maxHamming: Int,
       maxBucketSize: Int): Unit = {
@@ -124,26 +124,13 @@ object StreamingDedup {
     writeBatch(sims(b), s"$stateDir/simhash", batchId)
   }
 
-  /** Embedding sibling of [[nearDupSweep]]: the persisted state is the
-    * (id, srp_bucket, vec) table [[graft.ops.Similarity.withSrpBucket]]
+  /** Embedding near-dup sweep via
+    * [[graft.ops.Dedup.embeddingNearDupIncremental]]: the persisted state is
+    * the (id, srp_bucket, vec) table [[graft.ops.Similarity.withSrpBucket]]
     * produces — the SAME table `lshKnn` serves ANN from, maintained here
-    * incrementally as batches stream in. Same telescoping (vs
-    * `embeddingNearDupPairs(probeHamming = 1)`) and crash-replay
-    * contracts.
+    * incrementally as batches stream in. Per-batch pairs telescope to one
+    * full `embeddingNearDupPairs(probeHamming = 1)` run.
     */
-  def embeddingSweep(docs: DataFrame, vecCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, dim: Int, nBits: Int = 6,
-      seed: Long = 42L, minCosine: Double = 0.3,
-      maxBucketSize: Int = 256): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        embeddingSweepBatch(batch, batchId, vecCol, idCol, stateDir, dim,
-          nBits, seed, minCosine, maxBucketSize)
-      }
-      .start()
-
-  /** One micro-batch of [[embeddingSweep]]. Idempotent per batchId. */
   def embeddingSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
       idCol: String, stateDir: String, dim: Int, nBits: Int, seed: Long,
       minCosine: Double, maxBucketSize: Int): Unit = {
@@ -160,30 +147,16 @@ object StreamingDedup {
     writeBatch(bucketed(b), s"$stateDir/buckets", batchId)
   }
 
-  /** SemDeDup sibling of [[nearDupSweep]] (7th family member): the
+  /** SemDeDup sweep via [[graft.ops.Dedup.semanticNearDupIncremental]]: the
     * persisted state is the (id, cluster, vec) table
-    * [[graft.ops.Similarity.withIvfCluster]] produces — the same table
-    * IVF ANN serves probes from — maintained incrementally as batches
-    * stream in. The coarse quantizer is FROZEN (`model` is trained
-    * offline, the SemDeDup deployment shape — same trust model as
-    * [[unigramQualityGate]]'s frozen lexicon), so stored assignments
-    * never go stale. Telescoping vs
-    * `Dedup.semanticNearDupPairs(all batches)` and crash-replay
-    * idempotency are spec-pinned like the other sweeps.
+    * [[graft.ops.Similarity.withIvfCluster]] produces — the same table IVF
+    * ANN serves probes from — maintained incrementally as batches stream
+    * in. The coarse quantizer is FROZEN (`model` is trained offline, the
+    * SemDeDup deployment shape — same trust model as
+    * [[unigramQualityGateBatch]]'s frozen lexicon), so stored assignments
+    * never go stale. Per-batch pairs telescope to one full
+    * `Dedup.semanticNearDupPairs` run over all batches.
     */
-  def semanticSweep(docs: DataFrame, vecCol: String, idCol: String,
-      stateDir: String, checkpointDir: String,
-      model: graft.ops.Similarity.IvfModel, minCosine: Double = 0.9,
-      maxClusterSize: Int = 1024): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticSweepBatch(batch, batchId, vecCol, idCol, stateDir, model,
-          minCosine, maxClusterSize)
-      }
-      .start()
-
-  /** One micro-batch of [[semanticSweep]]. Idempotent per batchId. */
   def semanticSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
       idCol: String, stateDir: String,
       model: graft.ops.Similarity.IvfModel, minCosine: Double,
@@ -201,10 +174,9 @@ object StreamingDedup {
     writeBatch(clustered(b), s"$stateDir/clusters", batchId)
   }
 
-  /** Substring-level sibling of [[nearDupSweep]]: the persisted state is
-    * the per-(gram, doc) window-count table
-    * [[graft.ops.Dedup.duplicateSubstringGramStore]] produces. Each batch
-    * sweeps itself against the landed store via
+  /** Substring-level sweep: the persisted state is the per-(gram, doc)
+    * window-count table [[graft.ops.Dedup.duplicateSubstringGramStore]]
+    * produces. Each batch sweeps itself against the landed store via
     * [[graft.ops.Dedup.duplicateSubstringsIncremental]] and emits every
     * duplicated gram it TOUCHES with counts over the corpus-so-far.
     *
@@ -214,21 +186,7 @@ object StreamingDedup {
     * the LATEST emission per gram across all batches equals the full-run
     * [[graft.ops.Dedup.duplicateSubstrings]] table over the landed corpus
     * (spec-pinned). Readers take max-`_batch` per gram; no retractions
-    * occur because counts are monotone. Same crash-replay contract.
-    */
-  def duplicateSubstringSweep(docs: DataFrame, textCol: String,
-      idCol: String, stateDir: String, checkpointDir: String,
-      windowTokens: Int = 8, minDocs: Int = 2): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        duplicateSubstringSweepBatch(batch, batchId, textCol, idCol,
-          stateDir, windowTokens, minDocs)
-      }
-      .start()
-
-  /** One micro-batch of [[duplicateSubstringSweep]]. Idempotent per
-    * batchId.
+    * occur because counts are monotone.
     */
   def duplicateSubstringSweepBatch(batch: DataFrame, batchId: Long,
       textCol: String, idCol: String, stateDir: String, windowTokens: Int,
@@ -243,29 +201,16 @@ object StreamingDedup {
     writeBatch(grams(b), s"$stateDir/grams", batchId)
   }
 
-  /** Streaming eval-set decontamination GATE: each micro-batch is checked
-    * against the STATIC benchmark table via
-    * [[graft.ops.Dedup.contaminationCounts]] (broadcast benchmark window
-    * hashes + exact gram re-verify); contaminated docs' counts land under
-    * `outDir/contam`, clean rows under `outDir/clean`. Unlike the pair
-    * sweeps this needs NO persisted sweep state — the benchmark is fixed
-    * and contamination is a per-document fact, so the union of per-batch
-    * outputs IS the full-run [[graft.ops.Dedup.decontaminate]] over the
-    * landed corpus, exactly (spec-pinned). Same `_batch`-partitioned
-    * crash-replay contract as the sweeps.
+  /** Eval-set decontamination GATE: the batch is checked against the
+    * STATIC benchmark table via [[graft.ops.Dedup.contaminationCounts]]
+    * (broadcast benchmark window hashes + exact gram re-verify);
+    * contaminated docs' counts land under `outDir/contam`, clean rows
+    * under `outDir/clean`. Unlike the sweeps this needs NO persisted sweep
+    * state — the benchmark is fixed and contamination is a per-document
+    * fact, so the union of per-batch outputs IS the full-run
+    * [[graft.ops.Dedup.decontaminate]] over the landed corpus, exactly
+    * (spec-pinned).
     */
-  def decontaminationGate(docs: DataFrame, benchmark: DataFrame,
-      textCol: String, idCol: String, outDir: String, checkpointDir: String,
-      windowTokens: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontaminationGateBatch(batch, batchId, benchmark, textCol, idCol,
-          outDir, windowTokens)
-      }
-      .start()
-
-  /** One micro-batch of [[decontaminationGate]]. Idempotent per batchId. */
   def decontaminationGateBatch(batch: DataFrame, batchId: Long,
       benchmark: DataFrame, textCol: String, idCol: String, outDir: String,
       windowTokens: Int): Unit = {
@@ -277,28 +222,15 @@ object StreamingDedup {
       "left_anti"), s"$outDir/clean", batchId)
   }
 
-  /** Unigram-LM quality gate on a stream — the 6th gate family member,
-    * stateless like [[decontaminationGate]]: each micro-batch is scored
-    * against a FROZEN lexicon ([[graft.ops.TextAnalysis.unigramLm]],
-    * trained offline on a reference corpus — the CCNet deployment shape:
-    * the LM is a fixed artifact, documents flow past it) and split into
-    * `pass`/`fail` partitions on the mean-surprisal cap. A document's
-    * score depends only on its own tokens and the frozen lexicon, so the
-    * per-batch union equals the full batch-mode run exactly and a
-    * crash-replayed batch overwrites its own partition idempotently.
+  /** Unigram-LM quality GATE, stateless like [[decontaminationGateBatch]]:
+    * the batch is scored against a FROZEN lexicon
+    * ([[graft.ops.TextAnalysis.unigramLm]], trained offline on a reference
+    * corpus — the CCNet deployment shape: the LM is a fixed artifact,
+    * documents flow past it) and split into `pass`/`fail` partitions on the
+    * mean-surprisal cap. A document's score depends only on its own tokens
+    * and the frozen lexicon, so the per-batch union equals the full
+    * batch-mode run exactly.
     */
-  def unigramQualityGate(docs: DataFrame, lexicon: DataFrame,
-      textCol: String, idCol: String, outDir: String, checkpointDir: String,
-      maxMeanNllMicro: Long, oovNllMicro: Long): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unigramQualityGateBatch(batch, batchId, lexicon, textCol, idCol,
-          outDir, maxMeanNllMicro, oovNllMicro)
-      }
-      .start()
-
-  /** One micro-batch of [[unigramQualityGate]]. Idempotent per batchId. */
   def unigramQualityGateBatch(batch: DataFrame, batchId: Long,
       lexicon: DataFrame, textCol: String, idCol: String, outDir: String,
       maxMeanNllMicro: Long, oovNllMicro: Long): Unit = {
@@ -315,14 +247,17 @@ object StreamingDedup {
   /** Landed state under `dir` excluding the current batchId's partition —
     * a crash-replayed batch must not sweep against its own half-landed
     * remains (partition-pruned); `template.limit(0)` supplies the schema
-    * before the first batch lands.
+    * before the first batch lands. Only `_batch=` partitions count as
+    * landed: a first write that crashed mid-job leaves just `_temporary/`,
+    * from which parquet cannot infer a schema.
     */
   private def landed(session: DataFrame, dir: String, template: DataFrame,
       batchId: Long): DataFrame = {
     val spark = session.sparkSession
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path) && fs.listStatus(path).nonEmpty)
+    if (fs.exists(path) &&
+        fs.listStatus(path).exists(_.getPath.getName.startsWith("_batch=")))
       spark.read.parquet(dir).filter(col("_batch") =!= batchId)
         .drop("_batch")
     else template.limit(0)

@@ -1281,6 +1281,13 @@ class OpsSpec extends SparkTestBase {
     assert((100L to 163L).forall(cc(_) == 100L))
     assert(cc(10L) == 10L && cc(20L) == 10L)
     assert(cc.size == 66)
+    // one round cannot settle the 64-node path: stopping there must fail
+    // loudly, not hand back labels that split the component
+    val capped = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path.toDF("idA", "idB"), "idA", "idB",
+        maxIter = 1)
+    }
+    assert(capped.getMessage.contains("maxIter = 1"))
   }
 
   test("brute knn cosine: self is top hit with score 1") {

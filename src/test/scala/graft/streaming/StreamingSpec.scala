@@ -73,6 +73,39 @@ class StreamingSpec extends SparkTestBase {
     assert(Snapshot.load(dir).get.baseVersions.nonEmpty)
   }
 
+  test("streaming dedup gate: first-seen wins across micro-batches") {
+    implicit val sqlCtx = spark.sqlContext
+    def ts(minutes: Long) =
+      new java.sql.Timestamp(1700000000000L + minutes * 60000L)
+    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
+    val q = StreamingDedup.firstSeen(
+        stream.toDF().toDF("doc_id", "ts", "text"), "text", "ts")
+      .writeStream.format("memory").queryName("dedup_gate")
+      .outputMode("append").start()
+    // batch 1: two distinct texts + an in-batch duplicate
+    stream.addData((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma"),
+      (3L, ts(2), "alpha beta"))
+    q.processAllAvailable()
+    // batch 2: a cross-batch duplicate within the watermark + a new text
+    stream.addData((4L, ts(10), "alpha beta"), (5L, ts(11), "delta"))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("dedup_gate")
+      .select("doc_id", "text").as[(Long, String)].collect().toSet
+    // first occurrence of each content hash, and only that one
+    assert(out.map(_._2) == Set("alpha beta", "gamma", "delta"))
+    assert(out.contains((1L, "alpha beta")) && !out.exists(_._1 == 3L) &&
+      !out.exists(_._1 == 4L))
+    // unified semantics: on a bounded batch the same transform is an
+    // EXACT dedup (the downstream sweep's contract)
+    val batchRows = Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma"),
+      (3L, ts(2), "alpha beta"), (4L, ts(10), "alpha beta"),
+      (5L, ts(11), "delta")).toDF("doc_id", "ts", "text")
+    val batchOut = StreamingDedup.firstSeen(batchRows, "text", "ts")
+      .select("text").as[String].collect().toSet
+    assert(batchOut == Set("alpha beta", "gamma", "delta"))
+  }
+
   test("streaming near-dup sweep telescopes to the full batch run") {
     import graft.ops.Dedup
     import org.apache.spark.sql.functions.col
@@ -81,8 +114,13 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
     val source = stream.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.nearDupSweep(source, "text", "doc_id", state,
-      ckpt, shingleSize = 2, numHashes = 64, bands = 32, minJaccard = 0.5)
+    // a first band-store write that crashed mid-job leaves only
+    // _temporary/ behind: it must not count as landed state
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$state/bands/_temporary/0"))
+    val q = StreamingDedup.sweep(source, ckpt)(StreamingDedup.sweepBatch(
+      _, _, "text", "doc_id", state, shingleSize = 2, numHashes = 64,
+      bands = 32, minJaccard = 0.5, seed = 42L, maxBucketSize = 64))
     // the OpsSpec near-dup fixture split across three micro-batches: the
     // (0,1),(0,2),(1,2) component lands across batches 0/1 and the (3,5)
     // pair across batches 1/2 — every pair must be found by the batch
@@ -132,8 +170,9 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
     val source = stream.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.simHashSweep(source, "text", "doc_id", state,
-      ckpt, maxHamming = 3)
+    val q = StreamingDedup.sweep(source, ckpt)(
+      StreamingDedup.simHashSweepBatch(_, _, "text", "doc_id", state,
+        maxHamming = 3, maxBucketSize = 64))
     // the OpsSpec simhash fixture across two micro-batches: the (0,1)
     // exact dup lands inside batch 0; batch 1 brings 4 (dup of 0/1) and
     // must pair it against the landed store without re-deriving (0,1)
@@ -168,8 +207,9 @@ class StreamingSpec extends SparkTestBase {
     val stream = MemoryStream[(Long, String)]
     val source = stream.toDF().toDF("doc_id", "text")
     val L = 4
-    val q = StreamingDedup.duplicateSubstringSweep(source, "text",
-      "doc_id", state, ckpt, windowTokens = L, minDocs = 2)
+    val q = StreamingDedup.sweep(source, ckpt)(
+      StreamingDedup.duplicateSubstringSweepBatch(_, _, "text", "doc_id",
+        state, windowTokens = L, minDocs = 2))
     // the shared 'the quick brown fox' windows straddle batches: doc 2
     // (batch 1) must re-emit them with counts over docs 0..2, and doc 4
     // (batch 2) grows them again — latest emission per gram is the truth
@@ -222,8 +262,9 @@ class StreamingSpec extends SparkTestBase {
       (3L, "u v w x y z a b")) // clean
     val stream = MemoryStream[(Long, String)]
     val source = stream.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.decontaminationGate(source, bench, "text",
-      "doc_id", out, ckpt, windowTokens = L)
+    val q = StreamingDedup.sweep(source, ckpt)(
+      StreamingDedup.decontaminationGateBatch(_, _, bench, "text", "doc_id",
+        out, windowTokens = L))
     // contaminated and clean docs in BOTH batches
     stream.addData(all.take(2): _*)
     q.processAllAvailable()
@@ -269,9 +310,9 @@ class StreamingSpec extends SparkTestBase {
       (3L, "the zz qq ww rr"))               // mostly OOV -> fails
     val cap = 4000000L // in-vocab means land well under 4.0 mean micro-nats
     val stream = MemoryStream[(Long, String)]
-    val q = StreamingDedup.unigramQualityGate(stream.toDF()
-      .toDF("doc_id", "text"), lex, "text", "doc_id", out, ckpt,
-      maxMeanNllMicro = cap, oovNllMicro = 5000000L)
+    val q = StreamingDedup.sweep(stream.toDF().toDF("doc_id", "text"),
+      ckpt)(StreamingDedup.unigramQualityGateBatch(_, _, lex, "text",
+      "doc_id", out, maxMeanNllMicro = cap, oovNllMicro = 5000000L))
     stream.addData(all.take(2): _*)
     q.processAllAvailable()
     stream.addData(all.drop(2): _*)
@@ -310,8 +351,9 @@ class StreamingSpec extends SparkTestBase {
       Array.fill(3)(Array.fill(dim)(rnd.nextGaussian().toFloat)))
     val stream = MemoryStream[(Long, Seq[Float])]
     val source = stream.toDF().toDF("vec_id", "embedding")
-    val q = StreamingDedup.semanticSweep(source, "embedding", "vec_id",
-      state, ckpt, model, minCosine = 0.9)
+    val q = StreamingDedup.sweep(source, ckpt)(
+      StreamingDedup.semanticSweepBatch(_, _, "embedding", "vec_id", state,
+        model, minCosine = 0.9, maxClusterSize = 1024))
     // the planted near-dup (0,1) straddles batches 0 and 1 — it must be
     // found by batch 1's sweep against the landed cluster store
     stream.addData(vecs.take(1): _*)
@@ -353,8 +395,9 @@ class StreamingSpec extends SparkTestBase {
           (i, Array.fill(dim)(rnd.nextGaussian().toFloat).toSeq))
     val stream = MemoryStream[(Long, Seq[Float])]
     val source = stream.toDF().toDF("vec_id", "embedding")
-    val q = StreamingDedup.embeddingSweep(source, "embedding", "vec_id",
-      state, ckpt, dim, nBits = 4, minCosine = 0.9)
+    val q = StreamingDedup.sweep(source, ckpt)(
+      StreamingDedup.embeddingSweepBatch(_, _, "embedding", "vec_id", state,
+        dim, nBits = 4, seed = 42L, minCosine = 0.9, maxBucketSize = 256))
     // the planted near-dup (0,1) straddles batches 0 and 1 — it must be
     // found by batch 1's sweep against the landed SRP-bucket store
     stream.addData(vecs.take(1): _*)
