@@ -3,37 +3,46 @@ package graft.surface
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.analyzer.Analyzer
-import graft.index.{IndexSchemas, Posting, PostingCodec, Snapshot}
+import graft.analyzer.{Analyzer, Analyzers}
+import graft.index.{IndexSchemas, Posting, PostingCodec, Snapshot, SnapshotMeta}
 import graft.query.{BM25, FuzzyExpand, Searcher}
 
 import scala.collection.mutable
 
-/** Distributed entity detection over an arbitrarily large message corpus:
-  * the (tiny, by construction) dictionary index is broadcast ONCE and each
-  * partition runs the full chatbot_ner detection lifecycle — analyze →
-  * fuzzy resolve → BM25 variant scoring → R1 coverage → R2/R3 greedy spans —
-  * locally, in one Spark job with zero driver-side collection.
+/** Entity detection against a dictionary index held in memory, on two
+  * paths:
   *
-  * This is the 100-TB shape of the reference's detect_bulk
+  *   - the request path: TextSurface.searchVariantsBulk scores a `/v2/text`
+  *     request's messages on the driver through `scoreMessage` over the
+  *     store's `cached` index — no Spark job per request;
+  *   - the corpus path: `detect` broadcasts the (tiny, by construction)
+  *     index ONCE and each partition runs the full chatbot_ner detection
+  *     lifecycle — analyze → fuzzy resolve → BM25 variant scoring → R1
+  *     coverage → R2/R3 greedy spans — locally, in one Spark job with zero
+  *     driver-side collection.
+  *
+  * The corpus path is the 100-TB shape of the reference's detect_bulk
   * (ner_v2/detectors/textual/text_detection.py:562-775): the reference caps
   * a bulk HTTP request at 100 messages (R8 — kept in TextSurface as the API
   * contract), but the underlying corpus-scale operation is a broadcast join
   * of messages × dictionary, not a driver loop of 100-message chunks
   * (round-1 verdict item 1).
   *
-  * Parity: scoring reuses the identical kernels (Analyzer, FuzzyExpand,
-  * BM25, lexicographic-term summation order) as TextSurface.searchVariants,
-  * so detections are bit-identical to the bulk surface path (SurfaceSpec).
+  * Parity: scoring reuses the identical kernels (the manifest's analyzer,
+  * FuzzyExpand, BM25, lexicographic-term summation order) as
+  * TextSurface.searchVariantsDistributed, so hits are bit-identical to the
+  * relational plan (SurfaceSpec).
   */
 object LocalDetector {
+
+  private val MaxPostingBytes = 256L << 20
 
   final case class DocEntry(entity: String, value: String, variant: String,
       variantTerms: Array[String], lang: String)
 
   /** A broadcastable snapshot of a dictionary index. */
   final case class LocalIndex(
-      numDocs: Long, avgDocLen: Double, k1: Double, b: Double,
+      meta: SnapshotMeta,
       dict: Map[String, Searcher.TermStats],
       segs: Map[(String, Int), Seq[Array[Byte]]],
       docs: Map[Long, DocEntry]) extends Serializable
@@ -43,7 +52,7 @@ object LocalDetector {
     * for corpus-scale indexes; entity dictionaries are small).
     */
   def load(spark: SparkSession, storeDir: String,
-      maxPostingBytes: Long = 256L << 20): LocalIndex = {
+      maxPostingBytes: Long = MaxPostingBytes): LocalIndex = {
     import spark.implicits._
     val meta = Snapshot.load(storeDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot at $storeDir"))
@@ -74,30 +83,46 @@ object LocalDetector {
       .as[(Long, String, String, String, String, Map[String, Int])].collect()
       .map(r => r._1 -> DocEntry(r._2, r._3, r._4, r._6.keys.toArray, r._5))
       .toMap
-    LocalIndex(meta.numDocs, meta.avgDocLen, meta.k1, meta.b, dict, segs, docs)
+    LocalIndex(meta, dict, segs, docs)
   }
 
-  /** In-memory twin of TextSurface.searchVariants: same resolution, same
-    * BM25 kernel, same lexicographic-term float summation, same
-    * (entity, language) filter context, same R1 full-coverage filter and
-    * (-score, docId) ordering.
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, LocalIndex]()
+
+  /** The current snapshot of `storeDir` in driver memory: loaded on the
+    * first call after each commit, one entry per store, replaced when the
+    * snapshot pointer moves. None when the store has no snapshot, or its
+    * manifest records no posting size or one above `load`'s default budget —
+    * such stores are served by the distributed plan.
+    */
+  def cached(spark: SparkSession, storeDir: String): Option[LocalIndex] =
+    Snapshot.load(storeDir)
+      .filter(m => m.sizedPostingBytes >= 0 && m.sizedPostingBytes <= MaxPostingBytes)
+      .map(meta => loaded.compute(storeDir, (_, old) =>
+        if (old != null && old.meta == meta) old else load(spark, storeDir)))
+
+  /** Scored variant hits for one message, in memory: the in-memory twin of
+    * TextSurface.searchVariantsDistributed — same resolution (the index's
+    * own analyzer), same BM25 kernel, same lexicographic-term float
+    * summation, same (entity, language) filter context, same R1
+    * full-coverage filter and (-score, docId) ordering.
     */
   private[surface] def scoreMessage(idx: LocalIndex,
       termCache: mutable.Map[String, Array[Posting]], message: String,
       entities: Set[String], languages: Set[String], fuzzy: Boolean,
       size: Int): Seq[TextSurface.VariantHit] = {
-    val tokens = Analyzer.analyze(message).distinct.sorted.toSeq
+    val meta = idx.meta
+    val tokens = Analyzers.analyze(meta.analyzer, message).distinct.sorted.toSeq
     if (tokens.isEmpty) return Seq.empty
     val resolved =
       (if (fuzzy) FuzzyExpand.expand(idx.dict, tokens)
        else tokens.flatMap(idx.dict.get)).sortBy(_.term)
     if (resolved.isEmpty) return Seq.empty
-    val bm25 = BM25(idx.k1, idx.b)
+    val bm25 = BM25(meta.k1, meta.b)
 
     val scores = mutable.HashMap.empty[Long, Double]
     val matched = mutable.HashMap.empty[Long, mutable.ArrayBuffer[String]]
     for (t <- resolved) { // lexicographic term order = the summation contract
-      val idf = bm25.idf(t.df, idx.numDocs)
+      val idf = bm25.idf(t.df, meta.numDocs)
       val postings = termCache.getOrElseUpdate(t.term, {
         (0 until t.numSalts).iterator
           .flatMap(s => idx.segs.getOrElse((t.term, s), Nil).iterator)
@@ -109,7 +134,7 @@ object LocalDetector {
         val p = postings(i)
         scores.update(p.docId,
           scores.getOrElse(p.docId, 0.0) +
-            idf * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, idx.avgDocLen)))
+            idf * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen)))
         matched.getOrElseUpdate(p.docId, mutable.ArrayBuffer.empty) += t.term
         i += 1
       }

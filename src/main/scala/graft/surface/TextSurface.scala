@@ -3,8 +3,10 @@ package graft.surface
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 import graft.analyzer.Analyzer
-import graft.index.PostingCodec
+import graft.index.{Posting, PostingCodec}
 import graft.query.{BM25, IndexReader, Searcher}
 
 /** The `/v2/text` detection path (SURVEY.md §3.1) on the engine:
@@ -20,6 +22,10 @@ import graft.query.{BM25, IndexReader, Searcher}
   *        should: [match variants fuzzy], minimum_should_match: 1 } with
   * highlights. Filter clauses do not contribute to the BM25 score (filter
   * context); idf is index-global — both reproduced here.
+  *
+  * Scoring runs on the driver, from LocalDetector's cached in-memory index,
+  * when the store's postings fit its budget (entity dictionaries do), and
+  * as one relational Spark plan otherwise; both give bit-identical hits.
   */
 object TextSurface {
 
@@ -32,75 +38,13 @@ object TextSurface {
   final case class Detection(entity: String, value: String,
       original_text: String, detection: String, language: String)
 
-  /** Scored variant hits for a message: the engine half (steps 4-8 of the
-    * reference lifecycle). One relational plan: decode postings of the query
-    * terms → per-doc score + matched-term set → join the (filtered) forward
-    * index with parquet pushdown on entity/language → R1 full-coverage →
-    * top `size` by score.
-    */
-  def searchVariants(spark: SparkSession, storeDir: String, message: String,
-      entities: Seq[String], languages: Seq[String] = Seq("en"),
-      fuzzy: Boolean = true, size: Int = 1000): Seq[VariantHit] = {
-    import spark.implicits._
-    val reader = IndexReader.open(spark, storeDir)
-    val meta = reader.meta
-    val rq = reader.resolve(message, fuzzy)
-    if (rq.terms.isEmpty) return Seq.empty
-    val bm25 = BM25(meta.k1, meta.b)
-    val idf = rq.terms.map(t => t.term -> bm25.idf(t.df, meta.numDocs)).toMap
-    val termNames = rq.terms.map(_.term)
-    val idfB = spark.sparkContext.broadcast(idf)
-
-    // per-doc (score, matched terms) from the compressed postings
-    val scored = graft.index.IndexSchemas
-      .readSegments(spark, meta.segmentsDirs(storeDir))
-      .filter(col("term").isin(termNames: _*))
-      .select("term", "postings").as[(String, Array[Byte])]
-      .flatMap { case (term, postings) =>
-        PostingCodec.decode(postings).iterator
-          .map(p => (p.docId, term,
-            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-      }
-      .toDF("docId", "term", "contrib")
-      .groupBy("docId")
-      .agg(sum("contrib").as("rawScore"), // display only; order uses sorted sum
-        sort_array(collect_list(struct(col("term"), col("contrib")))).as("cs"),
-        collect_set("term").as("matched"))
-      .withColumn("score",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("contrib")))
-      .select("docId", "score", "matched")
-
-    // filter context: entity/language predicates (non-scoring) + R1
-    val docs = spark.read.schema(graft.index.IndexSchemas.docs)
-      .parquet(meta.docsDirs(storeDir): _*)
-      .filter(col("repo").isin(entities: _*) &&
-        (if (languages.nonEmpty) col("lang").isin(languages: _*) else lit(true)))
-      .select(col("docId"), col("repo").as("entity"), col("path").as("value"),
-        col("commit").as("variant"), map_keys(col("tfs")).as("variantTerms"))
-
-    docs.join(scored, "docId")
-      .filter(forall(col("variantTerms"), t => array_contains(col("matched"), t)))
-      .select("entity", "value", "variant", "score", "docId")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(size)
-      .as[(String, String, String, Double, Long)]
-      .collect()
-      .map(r => VariantHit(r._1, r._2, r._3, r._4))
-      .toSeq
-  }
-
   /** Full detection for one message (steps 8-9: R2 + R3). */
   def detect(spark: SparkSession, storeDir: String, message: String,
       entities: Seq[String], languages: Seq[String] = Seq("en"),
       fuzzy: Boolean = true, lo: Int = 4, hi: Int = 7,
-      minTokenSize: Int = 4): Map[String, Seq[Detection]] = {
-    val hits = searchVariants(spark, storeDir, message, entities, languages, fuzzy)
-    val language = languages.headOption.getOrElse("en")
-    // canonical query text: lowercase + tokenize + rejoin
-    // (text_detection.py:153-164)
-    val processedText = Analyzer.lower(message)
-    postProcess(hits, processedText, entities, language, lo, hi, minTokenSize)
-  }
+      minTokenSize: Int = 4): Map[String, Seq[Detection]] =
+    detectBulk(spark, storeDir, Seq(message), entities, languages, fuzzy, lo,
+      hi, minTokenSize).head
 
   /** R2 + R3, pure client-side logic (deterministic greedy — the order IS
     * the contract, text_detection.py:256-331).
@@ -187,11 +131,12 @@ object TextSurface {
     ds.toSeq ++ extra.result()
   }
 
-  /** Bulk variant search — the msearch batch fusion (reference
-    * elastic_search.py:153-163, rewrite noted at SURVEY §4.1): ALL messages'
-    * terms resolve once, the postings of the union term set decode in ONE
-    * pass, and scoring fans back out per message via a broadcast
-    * (message, term) join. One job for N messages instead of N jobs.
+  /** Scored variant hits per message: the engine half (steps 4-8 of the
+    * reference lifecycle), the msearch batch fusion (reference
+    * elastic_search.py:153-163, rewrite noted at SURVEY §4.1). A store whose
+    * postings fit LocalDetector's budget is scored on the driver from its
+    * cached in-memory index, with no Spark job; a larger one runs the
+    * relational plan of `searchVariantsDistributed`.
     */
   def searchVariantsBulk(spark: SparkSession, storeDir: String,
       messages: Seq[String], entities: Seq[String],
@@ -201,6 +146,29 @@ object TextSurface {
       s"at most $MaxBulkMessages messages per bulk request (reference R8)")
     require(entities.length <= MaxEntities,
       s"at most $MaxEntities entities per request (reference R8)")
+    LocalDetector.cached(spark, storeDir) match {
+      case Some(idx) =>
+        val termCache = mutable.HashMap.empty[String, Array[Posting]]
+        val (entitySet, langSet) = (entities.toSet, languages.toSet)
+        messages.map(m => LocalDetector.scoreMessage(idx, termCache, m,
+          entitySet, langSet, fuzzy, size))
+      case None => searchVariantsDistributed(spark, storeDir, messages,
+        entities, languages, fuzzy, size)
+    }
+  }
+
+  /** The relational plan of searchVariantsBulk: ALL messages' terms resolve
+    * once, the postings of the union term set decode in ONE pass, and
+    * scoring fans back out per message via a broadcast (message, term)
+    * join → per-doc score + matched-term set → join the (filtered) forward
+    * index with parquet pushdown on entity/language → R1 full-coverage →
+    * top `size` per message by score. One job for N messages instead of N
+    * jobs.
+    */
+  private[surface] def searchVariantsDistributed(spark: SparkSession,
+      storeDir: String, messages: Seq[String], entities: Seq[String],
+      languages: Seq[String], fuzzy: Boolean,
+      size: Int): Seq[Seq[VariantHit]] = {
     import spark.implicits._
     val reader = IndexReader.open(spark, storeDir)
     val meta = reader.meta

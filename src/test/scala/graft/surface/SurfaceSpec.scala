@@ -65,10 +65,10 @@ class SurfaceSpec extends SparkTestBase {
   }
 
   test("language filter restricts variants") {
-    val en = TextSurface.searchVariants(spark, storeDir, "मुंबई", Seq("city"),
-      languages = Seq("en"))
-    val hi = TextSurface.searchVariants(spark, storeDir, "मुंबई", Seq("city"),
-      languages = Seq("hi"))
+    val en = TextSurface.searchVariantsBulk(spark, storeDir, Seq("मुंबई"),
+      Seq("city"), languages = Seq("en")).head
+    val hi = TextSurface.searchVariantsBulk(spark, storeDir, Seq("मुंबई"),
+      Seq("city"), languages = Seq("hi")).head
     assert(en.isEmpty)
     assert(hi.map(_.value).distinct == Seq("Mumbai"))
   }
@@ -120,8 +120,8 @@ class SurfaceSpec extends SparkTestBase {
   }
 
   test("entity filter is filter-context (no score contribution)") {
-    val hits = TextSurface.searchVariants(spark, storeDir,
-      "pizza in mumbai", Seq("cuisine"))
+    val hits = TextSurface.searchVariantsBulk(spark, storeDir,
+      Seq("pizza in mumbai"), Seq("cuisine")).head
     assert(hits.nonEmpty && hits.forall(_.entity == "cuisine"))
   }
 
@@ -149,7 +149,13 @@ class SurfaceSpec extends SparkTestBase {
     val d2 = TextSurface.detect(spark, dir, "flying to punee", Seq("city"))
     assert(d2("city").map(_.value) == Seq("Pune"))
 
+    assert(TextSurface.detect(spark, dir, "fly to goa", Seq("city"))("city")
+      .map(_.value) == Seq("Goa"))
+
     val m3 = EntityStore.deleteValues(spark, dir, "city", Seq("Goa"))
+    // the request path's in-memory index follows the snapshot pointer
+    assert(TextSurface.detect(spark, dir, "fly to goa", Seq("city"))("city")
+      .isEmpty)
     assert(EntityStore.uniqueValues(spark, dir, "city").as[String].collect()
       .toSeq == Seq("Pune"))
 
@@ -201,6 +207,48 @@ class SurfaceSpec extends SparkTestBase {
     assert(dist == expected)
     // and the plan is one distributed pass: no unbounded collect
     assert(dist.nonEmpty)
+  }
+
+  test("driver-local variant search equals the distributed plan bit for bit") {
+    val messages = Seq(
+      "book a flight to Chennai",
+      "I will visit Delehi next year",
+      "best pizza in mumbai or bangalore",
+      "nothing to see here",
+      "dosa in madras",
+      "dosa dosa in chennai",
+      "pizza pasta italian in new delhi and blore",
+      "मुंबई")
+    assert(LocalDetector.cached(spark, storeDir).nonEmpty)
+    for {
+      fuzzy <- Seq(true, false)
+      languages <- Seq(Seq("en"), Seq("hi"))
+      entities <- Seq(Seq("city"), Seq("cuisine"), Seq("city", "cuisine"))
+    } {
+      val local = TextSurface.searchVariantsBulk(spark, storeDir, messages,
+        entities, languages, fuzzy)
+      val distributed = TextSurface.searchVariantsDistributed(spark,
+        storeDir, messages, entities, languages, fuzzy, 1000)
+      assert(local == distributed, s"fuzzy=$fuzzy $languages $entities")
+    }
+  }
+
+  test("in-memory detection analyzes with the index's own analyzer") {
+    // a whitespace-analyzed index keeps case: the message must not be
+    // lowercased by the standard analyzer before lookup
+    val dir = tmpDir("graft-store-ws")
+    val corpus = Seq(("city", "Mumbai", "Mumbai", "en", "Mumbai"))
+      .toDF("repo", "path", "commit", "lang", "content")
+    graft.index.IndexBuilder.build(corpus, dir,
+      graft.index.IndexConfig(analyzer = graft.analyzer.Analyzers.Whitespace))
+    val msg = "fly to Mumbai"
+    val dets = LocalDetector.detect(spark, dir, Seq((0L, msg)).toDF("id", "text"),
+      Seq("city")).select("entity", "value").as[(String, String)].collect()
+    assert(dets.toSeq == Seq(("city", "Mumbai")))
+    val local = TextSurface.searchVariantsBulk(spark, dir, Seq(msg), Seq("city"))
+    assert(local.head.map(_.value) == Seq("Mumbai"))
+    assert(local == TextSurface.searchVariantsDistributed(spark, dir, Seq(msg),
+      Seq("city"), Seq("en"), fuzzy = true, 1000))
   }
 
   test("LocalDetector refuses indexes above the broadcast budget") {
