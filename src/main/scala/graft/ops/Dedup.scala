@@ -93,6 +93,82 @@ object Dedup {
     m.join(broadcast(bad.select(keys: _*)), partCols, "left_anti")
   }
 
+  /** The blocked-pair kernel under the four capped near-dup families —
+    * MinHash bands, SimHash chunks, SRP buckets and SemDeDup clusters —
+    * shaped as SparkER's stages over one block collection: blocking (the
+    * family's keys), block purging (the audited cap) and matching (the
+    * family's verify, which the caller applies to the result).
+    *
+    * `newRows` and the optional `store` hold `_id`, the block `keys` and
+    * the payload columns the verify reads. The cap sizes blocks on their
+    * union, then new rows join all rows on the key. One rule makes a full
+    * run and an incremental sweep the same operator: a new×old match is
+    * always kept, a new×new match only once — with `idN < idO`, or, for a
+    * probe match, only from the lower bucket (`probe > home`). With no
+    * store every row is new, the rule reduces to `idA < idB`, and the join
+    * is the plain self-join of the capped rows.
+    *
+    * Telescoping contract (spec-pinned per family): as the cap sees union
+    * widths, a sweep's output equals the full run over store ∪ new
+    * restricted to pairs with at least one new id. Chained sweeps —
+    * sweep(b1 vs ∅) ∪ sweep(b2 vs store(b1)) ∪ … — are disjoint (each
+    * pair comes from the batch that completed it) and together equal one
+    * full run, EXCEPT pairs whose block was under the cap at their sweep
+    * but crosses it later: a full re-run skips those, and earlier sweeps
+    * are never revisited. Ids must be unique across store ∪ new, and the
+    * store must come from the same key parameters.
+    *
+    * `probeMasks` (SRP only; `keys` is then the one long bucket column):
+    * new rows also probe the bucket `home ^ mask` for each mask. Two
+    * buckets differ by exactly one mask, so a new×old probe match appears
+    * once (stored rows never probe) and a new×new one once from each side.
+    * A full run's downward probes can never be kept, so they are dropped
+    * before the join.
+    *
+    * Returns `keys` (the probed bucket for probe matches), idA/idB (least/
+    * greatest of the two ids) and each payload column `p` as `pN` (the
+    * new, probing side) and `pO`. A pair sharing several keys (bands,
+    * chunks) appears once per key; those callers dedup.
+    */
+  private def blockedPairs(newRows: DataFrame, store: Option[DataFrame],
+      keys: Seq[String], cap: Int, op: String, guidance: String,
+      spreadIfNarrow: Boolean = false,
+      probeMasks: Seq[Long] = Nil): DataFrame = {
+    val payload = newRows.columns.toSeq
+      .filterNot(c => c == "_id" || keys.contains(c))
+    val rows = store.fold(newRows)(s =>
+      s.select(newRows.columns.toSeq.map(col): _*)
+        .withColumn("isNew", lit(false))
+        .union(newRows.withColumn("isNew", lit(true))))
+    val capped = capBucketsAudited(rows, keys, cap, op,
+      if (store.isEmpty) guidance
+      else s"$guidance Sweeps cap the union store, whose widths only grow " +
+        "as batches land.", spreadIfNarrow)
+    def side(s: String): Seq[Column] = keys.map(col) ++
+      (col("_id").as(s"id$s") +: payload.map(p => col(p).as(p + s)))
+    val home = store.fold(capped)(_ => capped.filter(col("isNew")))
+      .select(side("N"): _*)
+    val all = capped.select(
+      side("O") ++ store.map(_ => col("isNew").as("newO")): _*)
+    val isOld = if (store.isEmpty) lit(false) else !col("newO")
+    val idRule = col("idN") < col("idO")
+    val (probing, newRule) =
+      if (probeMasks.isEmpty) (home, idRule)
+      else {
+        val (k, h) = (keys.head, col("_home"))
+        val probes = home.withColumnRenamed(k, "_home").select(
+          explode(array(h +: probeMasks.map(m => h.bitwiseXOR(lit(m))): _*))
+            .as(k), col("*"))
+        (if (store.isEmpty) probes.filter(col(k) >= h) else probes,
+          when(col(k) === h, idRule).otherwise(col(k) > h))
+      }
+    probing.join(all, keys)
+      .filter((isOld && col("idN") =!= col("idO")) || newRule)
+      .select(keys.map(col) ++ Seq(least(col("idN"), col("idO")).as("idA"),
+        greatest(col("idN"), col("idO")).as("idB")) ++
+        payload.flatMap(p => Seq(col(p + "N"), col(p + "O"))): _*)
+  }
+
   /** Integral-id guard for operators that cast the id column to long: a
     * lossy cast (string UUIDs, decimals) would null out and silently DROP
     * rows instead of failing — so fail fast here.
@@ -184,13 +260,11 @@ object Dedup {
     * Pipeline (shuffles: one per stage, all on small keys):
     *   single-pass signature UDF (one md5 per shingle + 2 multiplies per
     *   hash function — NOT numHashes re-walks of the shingle array) →
-    *   band keys (signature slices) → bucket-width cap (buckets with more
-    *   than `maxBucketSize` members are skipped — the standard large-scale
-    *   guard: a degenerate bucket would otherwise explode the self-join
-    *   quadratically; skips are AUDITED — counted, WARN-logged with sizing
-    *   guidance, and readable via [[lastCapDrops]]("minHashLsh"), never
-    *   silent) → self-join within buckets → EXACT shingle Jaccard on
-    *   the candidate pairs only → threshold filter.
+    *   band keys (signature slices) → [[blockedPairs]] under the audited
+    *   bucket-width cap (a degenerate bucket would otherwise explode the
+    *   self-join quadratically; drops are WARN-logged with sizing guidance
+    *   and readable via [[lastCapDrops]]("minHashLsh"), never silent) →
+    *   EXACT shingle Jaccard on the candidate pairs only → threshold.
     *
     * Returns (idA, idB, inter, uni, jaccard) with idA < idB and
     * jaccard = inter/uni the exact n-gram Jaccard (the estimate is only used
@@ -201,38 +275,10 @@ object Dedup {
   def minHashLsh(df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
       minJaccard: Double = 0.8, seed: Long = 42L,
-      maxBucketSize: Int = 64): DataFrame = {
-    val bandRows = minHashBandRows(df, textCol, idCol, shingleSize,
-      numHashes, bands, seed)
-
-    // bucket-width cap + drop audit, materialized once past the window
-    // (localCheckpoint blocks are GC-reclaimed with the plan, unlike
-    // registered caches)
-    val capped = capBucketsAudited(bandRows, Seq("band", "key"),
-      maxBucketSize, "minHashLsh",
-      "Dense band keys = low-content docs or too-coarse bands; raise " +
-        "maxBucketSize, raise bands (narrower keys), or pre-filter " +
-        "near-empty docs.")
-
-    val a = capped.select(col("band"), col("key"), col("_id").as("idA"))
-    val b = capped.select(col("band"), col("key"), col("_id").as("idB"))
-    // candidates are SMALL by construction (bucket cap bounds the fan-out)
-    val cand = a.join(b, Seq("band", "key"))
-      .filter(col("idA") < col("idB"))
-      .select("idA", "idB")
-      .dropDuplicates("idA", "idB")
-      .localCheckpoint(true)
-
-    // exact verify on candidates only (ADVICE round 1: the threshold must
-    // operate on the exact Jaccard, not the signature estimate);
-    // jaccardVerify semi-prunes the shingle scan to candidate ids
-    jaccardVerify(cand, df, textCol, idCol, shingleSize)
-      .filter(col("exact_jaccard") >= minJaccard)
-      .select(col("idA"), col("idB"),
-        col("inter").cast("long").as("inter"),
-        col("uni").cast("long").as("uni"),
-        col("exact_jaccard").as("jaccard"))
-  }
+      maxBucketSize: Int = 64): DataFrame =
+    minHashPairs(minHashBandRows(df, textCol, idCol, shingleSize, numHashes,
+      bands, seed), None, df, textCol, idCol, shingleSize, minJaccard,
+      maxBucketSize, "minHashLsh")
 
   /** The banded-bucket rows of [[minHashLsh]] as a standalone table:
     * (_id, band, key) — one row per (doc, band), key = the band's raw
@@ -279,61 +325,51 @@ object Dedup {
       .select(col("_id"), col("bb.band"), col("bb.key"))
   }
 
-  /** Incremental near-dup: candidate pairs TOUCHING a newly ingested batch
-    * — new×new and new×existing, never existing×existing — against a
-    * persisted [[minHashBandRows]] store, so each ingested batch pays
-    * O(batch) signature hashing and a banded join instead of a full-corpus
-    * re-pair. This is the batch-sweep half of the streaming layout
-    * completed: [[graft.streaming.StreamingDedup.firstSeen]] gates exact
-    * in-window duplicates on the stream; this sweeps each landed batch for
-    * near-dups against everything already landed.
-    *
-    * Exactness contract (spec-pinned): with the bucket cap evaluated on
-    * the UNION store (old ∪ new rows — identical widths to a full batch
-    * run), the result equals `minHashLsh(corpus ∪ newDocs)` restricted to
-    * pairs with at least one new id. Requires ids unique across
-    * corpus ∪ newDocs and the same hash-family parameters as the store.
-    * Chained sweeps telescope — sweep(b1 vs ∅) ∪ sweep(b2 vs store(b1))
-    * ∪ … equals one full run (spec-pinned) — EXCEPT pairs whose bucket
-    * was under `maxBucketSize` at their sweep but crosses the cap later:
-    * a full re-run would skip those (the cap is evaluated against each
-    * sweep's union store, and earlier sweeps are never revisited).
-    *
-    * `corpus` supplies text for the exact-Jaccard verify only — it is
-    * scanned (two pruned joins on candidate ids), never re-hashed and
-    * never self-joined. Append `minHashBandRows(newDocs)` to the store
-    * after each sweep.
+  /** Incremental near-dup: the [[minHashLsh]] pairs TOUCHING a newly
+    * ingested batch, against a persisted [[minHashBandRows]] store — each
+    * batch pays O(batch) signature hashing and a banded join instead of a
+    * full-corpus re-pair, under [[blockedPairs]]' telescoping contract.
+    * This is the batch-sweep half of the streaming layout:
+    * [[graft.streaming.StreamingDedup.firstSeen]] gates exact in-window
+    * duplicates on the stream; this sweeps each landed batch for near-dups
+    * against everything already landed. `corpus` supplies text for the
+    * exact-Jaccard verify only — scanned by two pruned joins on candidate
+    * ids, never re-hashed. The store must use the same hash-family
+    * parameters; append `minHashBandRows(newDocs)` to it after each sweep.
     */
   def minHashLshIncremental(newDocs: DataFrame, corpus: DataFrame,
       bandStore: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
       minJaccard: Double = 0.8, seed: Long = 42L,
-      maxBucketSize: Int = 64): DataFrame = {
-    val newRows = minHashBandRows(newDocs, textCol, idCol, shingleSize,
-      numHashes, bands, seed)
-    val all = bandStore.select(col("_id"), col("band"), col("key"))
-      .withColumn("isNew", lit(false))
-      .union(newRows.withColumn("isNew", lit(true)))
-    // one audited materialization past the cap window — both join branches
-    // (new side, all side) read it; see minHashLsh
-    val capped = capBucketsAudited(all, Seq("band", "key"), maxBucketSize,
-      "minHashLshIncremental",
-      "The cap is evaluated on the UNION store — widths only grow across " +
-        "sweeps; raise maxBucketSize or bands before the store gets dense.")
-    val a = capped.filter(col("isNew"))
-      .select(col("band"), col("key"), col("_id").as("idN"))
-    val b = capped.select(col("band"), col("key"), col("_id").as("idO"))
-    val cand = a.join(b, Seq("band", "key"))
-      .filter(col("idN") =!= col("idO"))
-      .select(least(col("idN"), col("idO")).as("idA"),
-        greatest(col("idN"), col("idO")).as("idB"))
+      maxBucketSize: Int = 64): DataFrame =
+    minHashPairs(minHashBandRows(newDocs, textCol, idCol, shingleSize,
+      numHashes, bands, seed), Some(bandStore), corpus.select(col(idCol),
+      col(textCol)).union(newDocs.select(col(idCol), col(textCol))),
+      textCol, idCol, shingleSize, minJaccard, maxBucketSize,
+      "minHashLshIncremental")
+
+  /** [[minHashLsh]] / [[minHashLshIncremental]] past the band rows: the
+    * blocked candidates, deduped (a pair can share several bands) and
+    * materialized once, verify by exact shingle Jaccard against `text`.
+    */
+  private def minHashPairs(newRows: DataFrame, store: Option[DataFrame],
+      text: DataFrame, textCol: String, idCol: String, shingleSize: Int,
+      minJaccard: Double, cap: Int, op: String): DataFrame = {
+    // candidates are SMALL by construction (bucket cap bounds the fan-out)
+    val cand = blockedPairs(newRows, store, Seq("band", "key"), cap, op,
+      "Dense band keys = low-content docs or too-coarse bands; raise " +
+        "maxBucketSize, raise bands (narrower keys), or pre-filter " +
+        "near-empty docs.")
+      .select("idA", "idB")
       .dropDuplicates("idA", "idB")
       .localCheckpoint(true)
-    val text = corpus.select(col(idCol), col(textCol))
-      .union(newDocs.select(col(idCol), col(textCol)))
+    // exact verify on candidates only (ADVICE round 1: the threshold must
+    // operate on the exact Jaccard, not the signature estimate);
+    // jaccardVerify semi-prunes the shingle scan to candidate ids
     jaccardVerify(cand, text, textCol, idCol, shingleSize)
       .filter(col("exact_jaccard") >= minJaccard)
-      .select(col("idA"), col("idB"), col("inter").cast("long").as("inter"),
+      .select(col("idA"), col("idB"),
+        col("inter").cast("long").as("inter"),
         col("uni").cast("long").as("uni"),
         col("exact_jaccard").as("jaccard"))
   }
@@ -370,142 +406,85 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs — the vector-space sibling of
     * minHashLsh: SRP buckets (Similarity.SrpModel — pure functions of
-    * (seed, bit, i)) block the corpus, buckets wider than `maxBucketSize`
-    * are skipped (the same degenerate-key guard as the other dedup ops),
-    * and candidates within a bucket verify with EXACT cosine against the
-    * threshold. Returns (idA, idB, cosine) with idA < idB.
+    * (seed, bit, i)) block the corpus through [[blockedPairs]], buckets
+    * wider than `maxBucketSize` are skipped (the same degenerate-key guard
+    * as the other dedup ops), and candidates verify with EXACT cosine
+    * against the threshold. Returns (idA, idB, cosine) with idA < idB.
     *
     * Recall: a pair whose vectors straddle one SRP hyperplane lands in
     * buckets at Hamming distance 1 and would be invisible to exact-bucket
-    * blocking. `probeHamming = 1` (default) closes that: each row is ALSO
-    * emitted under its 1-bit-flip neighbor buckets, but ONLY the flips
-    * that are numerically greater than home (bit 0 -> 1) — a Hamming-1
-    * pair's two buckets differ in exactly one bit, so the lower-bucket row
-    * probes the higher-bucket row's home exactly once and the reverse
-    * direction never materializes (vs emitting all nBits flips and
-    * discarding half the matches at the id filter: expected probe fan-out
-    * drops from nBits to nBits/2 per row and the join never sees the
-    * mirror-image candidates at all). Probe matches re-canonicalize with
-    * least/greatest on ids; cosine is evaluated on (va, vb) as joined —
-    * bit-identical either way since every per-element product and the
-    * final sqrt(na)*sqrt(nb) are commutative. `probeHamming = 0` is plain
-    * exact-bucket blocking; `probeHamming = 2` additionally probes every
-    * 2-bit XOR mask (C(nBits, 2) extra probes per row, upward-only as
-    * well) — a pair's buckets differ by exactly ONE mask, so every route
-    * stays unique and no dedup pass is needed at any probe depth. The
-    * width cap applies to HOME buckets before expansion, and drops are
-    * audited (WARN + [[lastCapDrops]]("embeddingNearDupPairs")): the
-    * 2^nBits key space is fixed, so at growing corpus size n size
+    * blocking. `probeHamming = 1` (default) closes that: each row also
+    * probes its 1-bit-flip neighbor buckets, upward only (bit 0 -> 1), so
+    * a Hamming-1 pair is enumerated exactly once, from its lower bucket —
+    * expected probe fan-out nBits/2 per row. Cosine is evaluated on the
+    * vectors as joined — bit-identical either way since every per-element
+    * product and the final sqrt(na)*sqrt(nb) are commutative.
+    * `probeHamming = 0` is plain exact-bucket blocking; `probeHamming = 2`
+    * additionally probes every 2-bit XOR mask (C(nBits, 2) extra probes
+    * per row, upward-only as well) — a pair's buckets differ by exactly ONE
+    * mask, so every route stays unique and no dedup pass is needed at any
+    * probe depth. The width cap applies to HOME buckets before expansion,
+    * and drops are audited (WARN + [[lastCapDrops]]("embeddingNearDupPairs")):
+    * the 2^nBits key space is fixed, so at growing corpus size n size
     * `nBits >= log2(n / maxBucketSize)` to keep the expected bucket width
     * n/2^nBits under the cap — the default nBits=6 is sized for test-scale
-    * corpora, NOT for 100-TB row counts. Every arithmetic
-    * step is an explicit-order double fold, so the DuckDB oracle replays
-    * the identical output set bit-identically (the oracle constrains
-    * bucket Hamming distance, not probe direction, so it is unchanged by
-    * this optimization).
+    * corpora, NOT for 100-TB row counts. Every arithmetic step is an
+    * explicit-order double fold, so the DuckDB oracle replays the identical
+    * output set bit-identically (the oracle constrains bucket Hamming
+    * distance, not probe direction).
     */
   def embeddingNearDupPairs(df: DataFrame, vecCol: String, idCol: String,
       dim: Int, nBits: Int = 6, seed: Long = 42L, minCosine: Double = 0.3,
-      maxBucketSize: Int = 256, probeHamming: Int = 1): DataFrame = {
-    import graft.ops.Similarity
-    require(probeHamming <= 2, "probe ring supports Hamming <= 2")
-    val bucketed = Similarity.withSrpBucket(df, vecCol, dim, nBits, seed)
-      .select(col(idCol).as("_id"), col("srp_bucket"), col(vecCol).as("_v"))
-    // audited cap, materialized once: the self-join would otherwise re-run
-    // the bucket UDF + cap window on BOTH branches (same trick as
-    // minHashLsh's candidate materialization)
-    val capped = capBucketsAudited(bucketed, Seq("srp_bucket"),
-      maxBucketSize, "embeddingNearDupPairs",
-      "The 2^nBits key space is FIXED — expected bucket width is " +
-        "n/2^nBits, so grow nBits with the corpus: " +
-        "nBits >= log2(n / maxBucketSize).",
-      // the b side broadcasts under AQE, so the probe side's cosine work
-      // parallelizes only as wide as these blocks — spread when narrow
-      spreadIfNarrow = true)
-    val b = capped.select(col("srp_bucket"), col("_id").as("idB"), col("_v").as("vb"))
-    val cosU = exactCosineUdf
-    val aHome = capped.select(col("srp_bucket"), col("_id").as("idA"), col("_v").as("va"))
-    val homeCand = aHome.join(b, Seq("srp_bucket"))
-      .filter(col("idA") < col("idB"))
-      .withColumn("cosine", cosU(col("va"), col("vb")))
-      .select("idA", "idB", "cosine")
-    val cand = if (probeHamming >= 1) {
-      // upward-only probing: each Hamming-d bucket pair differs by exactly
-      // one XOR mask, and the probe > home filter keeps only the flip
-      // emitted from the pair's LOWER bucket — enumerated exactly once
-      val masks: Seq[Long] = (0 until nBits).map(b => 1L << b) ++
-        (if (probeHamming >= 2)
-          for { i <- 0 until nBits; j <- i + 1 until nBits }
-            yield (1L << i) | (1L << j)
-        else Seq.empty)
-      val flips = masks.map(m => col("home").bitwiseXOR(lit(m)))
-      val aProbe = capped
-        .select(col("srp_bucket").as("home"), col("_id").as("idA"), col("_v").as("va"))
-        .select(explode(array(flips: _*)).as("srp_bucket"), col("home"),
-          col("idA"), col("va"))
-        .filter(col("srp_bucket") > col("home"))
-        .drop("home")
-      val probeCand = aProbe.join(b, Seq("srp_bucket"))
-        .filter(col("idA") =!= col("idB"))
-        .withColumn("cosine", cosU(col("va"), col("vb")))
-        .select(least(col("idA"), col("idB")).as("idA"),
-          greatest(col("idA"), col("idB")).as("idB"), col("cosine"))
-      homeCand.union(probeCand)
-    } else homeCand
-    cand.filter(col("cosine") >= minCosine)
-  }
+      maxBucketSize: Int = 256, probeHamming: Int = 1): DataFrame =
+    srpPairs(srpRows(Similarity.withSrpBucket(df, vecCol, dim, nBits, seed),
+      idCol, vecCol), None, nBits, probeHamming, minCosine, maxBucketSize,
+      "embeddingNearDupPairs")
 
   /** Incremental embedding near-dup — the vector-space sibling of
-    * [[minHashLshIncremental]]: candidate pairs touching a newly ingested
-    * batch against a persisted SRP-bucket store, which is EXACTLY the
-    * (id, srp_bucket, vec) table [[Similarity.withSrpBucket]] produces and
-    * `lshKnn` already materializes `partitionBy("srp_bucket")` — one
-    * persisted table serves both ANN search and incremental dedup. SRP
-    * buckets are pure functions of (seed, vector), so unlike the ngram
-    * join's df-dependent prefix order the store never goes stale.
-    *
-    * New rows probe ALL nBits 1-bit flips (both directions — the stored
-    * side does not probe back), pairs canonicalize with least/greatest and
-    * dedup, the width cap applies to UNION home-bucket widths; the result
-    * equals `embeddingNearDupPairs(corpus ∪ newDocs, probeHamming = 1)`
-    * restricted to pairs with at least one new id (spec-pinned). Ids must
-    * be unique across store ∪ newDocs.
+    * [[minHashLshIncremental]]: the [[embeddingNearDupPairs]]
+    * (`probeHamming = 1`) pairs touching a newly ingested batch, against a
+    * persisted SRP-bucket store, which is EXACTLY the (id, srp_bucket, vec)
+    * table [[Similarity.withSrpBucket]] produces and `lshKnn` already
+    * materializes `partitionBy("srp_bucket")` — one persisted table serves
+    * both ANN search and incremental dedup. SRP buckets are pure functions
+    * of (seed, vector), so unlike the ngram join's df-dependent prefix
+    * order the store never goes stale. New rows probe all nBits 1-bit
+    * flips (stored rows do not probe back); see [[blockedPairs]].
     */
   def embeddingNearDupIncremental(newDocs: DataFrame, bucketStore: DataFrame,
       vecCol: String, idCol: String, dim: Int, nBits: Int = 6,
       seed: Long = 42L, minCosine: Double = 0.3,
-      maxBucketSize: Int = 256): DataFrame = {
-    import graft.ops.Similarity
-    val newRows = Similarity.withSrpBucket(newDocs, vecCol, dim, nBits, seed)
-      .select(col(idCol).as("_id"), col("srp_bucket"), col(vecCol).as("_v"),
-        lit(true).as("isNew"))
-    val all = bucketStore
-      .select(col(idCol).as("_id"), col("srp_bucket"), col(vecCol).as("_v"),
-        lit(false).as("isNew"))
-      .union(newRows)
-    // one audited materialization past the cap window — both join branches
-    // read it
-    val capped = capBucketsAudited(all, Seq("srp_bucket"), maxBucketSize,
-      "embeddingNearDupIncremental",
-      "The cap applies to UNION home-bucket widths, which only grow as " +
-        "batches land; grow nBits with the corpus " +
-        "(nBits >= log2(n / maxBucketSize)) and rebuild the store.")
-    val cosU = exactCosineUdf
-    val b = capped.select(col("srp_bucket"), col("_id").as("idO"),
-      col("_v").as("vb"))
-    val flips = (0 until nBits).map(bb =>
-      col("srp_bucket").bitwiseXOR(lit(1L << bb)))
-    val aNew = capped.filter(col("isNew"))
-      .select(explode(array((col("srp_bucket") +: flips): _*)).as("srp_bucket"),
-        col("_id").as("idN"), col("_v").as("va"))
-    aNew.join(b, Seq("srp_bucket"))
-      .filter(col("idN") =!= col("idO"))
-      // canonicalize and dedup BEFORE the cosine UDF: new×new pairs are
-      // enumerated from both sides and would pay the verify twice
-      .select(least(col("idN"), col("idO")).as("idA"),
-        greatest(col("idN"), col("idO")).as("idB"), col("va"), col("vb"))
-      .dropDuplicates("idA", "idB")
-      .withColumn("cosine", cosU(col("va"), col("vb")))
+      maxBucketSize: Int = 256): DataFrame =
+    srpPairs(srpRows(Similarity.withSrpBucket(newDocs, vecCol, dim, nBits,
+        seed), idCol, vecCol), Some(srpRows(bucketStore, idCol, vecCol)),
+      nBits, 1, minCosine, maxBucketSize, "embeddingNearDupIncremental")
+
+  private def srpRows(bucketed: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    bucketed.select(col(idCol).as("_id"), col("srp_bucket"),
+      col(vecCol).as("_v"))
+
+  /** SRP rows → [[blockedPairs]] with the Hamming-`probeHamming` probe
+    * ring → exact cosine. No pair dedup: every route is unique.
+    */
+  private def srpPairs(newRows: DataFrame, store: Option[DataFrame],
+      nBits: Int, probeHamming: Int, minCosine: Double, cap: Int,
+      op: String): DataFrame = {
+    require(probeHamming <= 2, "probe ring supports Hamming <= 2")
+    val masks: Seq[Long] =
+      (if (probeHamming >= 1) (0 until nBits).map(b => 1L << b) else Nil) ++
+        (if (probeHamming >= 2)
+          for { i <- 0 until nBits; j <- i + 1 until nBits }
+            yield (1L << i) | (1L << j)
+        else Nil)
+    blockedPairs(newRows, store, Seq("srp_bucket"), cap, op,
+      "The 2^nBits key space is FIXED — expected bucket width is " +
+        "n/2^nBits, so grow nBits with the corpus: " +
+        "nBits >= log2(n / maxBucketSize).",
+      // a full run's stored side broadcasts under AQE, so its cosine work
+      // parallelizes only as wide as these blocks — spread when narrow
+      spreadIfNarrow = store.isEmpty, probeMasks = masks)
+      .withColumn("cosine", exactCosineUdf(col("_vN"), col("_vO")))
       .filter(col("cosine") >= minCosine)
       .select("idA", "idB", "cosine")
   }
@@ -535,11 +514,11 @@ object Dedup {
     * web-scale through semantic deduplication", arXiv:2303.09540):
     * semantically-redundant pairs found WITHIN k-means clusters of the
     * embedding space — the coarse quantizer's cluster replaces
-    * [[embeddingNearDupPairs]]'s SRP bucket as the blocking key, which is
-    * the paper's exact shape: cluster once, compare only inside clusters,
-    * prune one side of every pair above the cosine threshold (feed the
-    * output to [[survivorsFromPairs]] / [[connectedComponents]] like any
-    * other pair table).
+    * [[embeddingNearDupPairs]]'s SRP bucket as the [[blockedPairs]] key,
+    * which is the paper's exact shape: cluster once, compare only inside
+    * clusters, prune one side of every pair above the cosine threshold
+    * (feed the output to [[survivorsFromPairs]] / [[connectedComponents]]
+    * like any other pair table).
     *
     * Takes a PRE-CLUSTERED table — e.g. the
     * `Similarity.withIvfCluster` output that IVF ANN already materializes
@@ -561,71 +540,46 @@ object Dedup {
     */
   def semanticNearDupPairs(clustered: DataFrame, vecCol: String,
       idCol: String, clusterCol: String = "ivf_cluster",
-      minCosine: Double = 0.9, maxClusterSize: Int = 1024): DataFrame = {
-    val rows = clustered.select(col(clusterCol).as("_cl"),
-      col(idCol).as("_id"), col(vecCol).as("_v"))
-    val capped = capBucketsAudited(rows, Seq("_cl"), maxClusterSize,
-      "semanticNearDupPairs",
-      "Cluster count k is the blocking knob — grow it with the corpus " +
-        "(k >= n / maxClusterSize on average) and re-train the coarse " +
-        "quantizer when clusters overflow.")
-    val a = capped.select(col("_cl"), col("_id").as("idA"), col("_v").as("va"))
-    val b = capped.select(col("_cl"), col("_id").as("idB"), col("_v").as("vb"))
-    a.join(b, Seq("_cl"))
-      .filter(col("idA") < col("idB"))
-      .withColumn("cosine", exactCosineUdf(col("va"), col("vb")))
-      .filter(col("cosine") >= minCosine)
-      .select(col("_cl").as("cluster"), col("idA"), col("idB"), col("cosine"))
-  }
+      minCosine: Double = 0.9, maxClusterSize: Int = 1024): DataFrame =
+    semanticPairs(clusterRows(clustered, clusterCol, idCol, vecCol), None,
+      minCosine, maxClusterSize, "semanticNearDupPairs")
 
   /** Incremental SemDeDup — the cluster-blocked sibling of
-    * [[embeddingNearDupIncremental]]: candidate pairs touching a newly
-    * ingested batch against a persisted cluster store, which is EXACTLY
-    * the (id, cluster, vec) table `Similarity.withIvfCluster` produces
-    * and IVF ANN already materializes `partitionBy(ivf_cluster)` — one
-    * persisted table serves ANN probes, batch semantic dedup AND this
-    * sweep. The quantizer is FROZEN (centroids are a pure function
-    * passed in as `model`), so cluster assignment of stored rows never
-    * goes stale — the same property that lets the SRP store persist,
-    * and the reason the k-means is trained offline in the SemDeDup
-    * deployment shape.
-    *
-    * New rows assign through the frozen model, join the capped UNION
-    * store within their cluster, canonicalize with least/greatest, and
-    * dedup BEFORE the cosine verify (new×new pairs enumerate from both
-    * sides). The result equals `semanticNearDupPairs(store ∪ batch)`
-    * restricted to pairs with at least one new id (spec-pinned). Ids
-    * must be unique across store ∪ batch.
+    * [[embeddingNearDupIncremental]]: the [[semanticNearDupPairs]] pairs
+    * touching a newly ingested batch, against a persisted cluster store,
+    * which is EXACTLY the (id, cluster, vec) table
+    * `Similarity.withIvfCluster` produces and IVF ANN already materializes
+    * `partitionBy(ivf_cluster)` — one persisted table serves ANN probes,
+    * batch semantic dedup AND this sweep. The quantizer is FROZEN
+    * (centroids are a pure function passed in as `model`), so cluster
+    * assignment of stored rows never goes stale — the same property that
+    * lets the SRP store persist, and the reason the k-means is trained
+    * offline in the SemDeDup deployment shape. New rows assign through
+    * the frozen model; see [[blockedPairs]] for the contract.
     */
   def semanticNearDupIncremental(newDocs: DataFrame, clusterStore: DataFrame,
       vecCol: String, idCol: String, model: graft.ops.Similarity.IvfModel,
       clusterCol: String = "ivf_cluster", minCosine: Double = 0.9,
-      maxClusterSize: Int = 1024): DataFrame = {
-    import graft.ops.Similarity
-    val newRows = Similarity.withIvfCluster(newDocs, vecCol, model)
-      .select(col("ivf_cluster").as("_cl"), col(idCol).as("_id"),
-        col(vecCol).as("_v"), lit(true).as("isNew"))
-    val all = clusterStore
-      .select(col(clusterCol).as("_cl"), col(idCol).as("_id"),
-        col(vecCol).as("_v"), lit(false).as("isNew"))
-      .union(newRows)
-    val capped = capBucketsAudited(all, Seq("_cl"), maxClusterSize,
-      "semanticNearDupIncremental",
-      "The cap applies to UNION cluster widths, which only grow as " +
-        "batches land; grow k and re-train the frozen quantizer " +
-        "(k >= n / maxClusterSize on average), then rebuild the store.")
-    val a = capped.filter(col("isNew"))
-      .select(col("_cl"), col("_id").as("idN"), col("_v").as("va"))
-    val b = capped.select(col("_cl"), col("_id").as("idO"), col("_v").as("vb"))
-    a.join(b, Seq("_cl"))
-      .filter(col("idN") =!= col("idO"))
-      .select(col("_cl"), least(col("idN"), col("idO")).as("idA"),
-        greatest(col("idN"), col("idO")).as("idB"), col("va"), col("vb"))
-      .dropDuplicates("idA", "idB")
-      .withColumn("cosine", exactCosineUdf(col("va"), col("vb")))
+      maxClusterSize: Int = 1024): DataFrame =
+    semanticPairs(clusterRows(Similarity.withIvfCluster(newDocs, vecCol,
+        model), "ivf_cluster", idCol, vecCol),
+      Some(clusterRows(clusterStore, clusterCol, idCol, vecCol)), minCosine,
+      maxClusterSize, "semanticNearDupIncremental")
+
+  private def clusterRows(df: DataFrame, clusterCol: String, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(clusterCol).as("_cl"), col(idCol).as("_id"),
+      col(vecCol).as("_v"))
+
+  private def semanticPairs(newRows: DataFrame, store: Option[DataFrame],
+      minCosine: Double, cap: Int, op: String): DataFrame =
+    blockedPairs(newRows, store, Seq("_cl"), cap, op,
+      "Cluster count k is the blocking knob — grow it with the corpus " +
+        "(k >= n / maxClusterSize on average) and re-train the coarse " +
+        "quantizer when clusters overflow.")
+      .withColumn("cosine", exactCosineUdf(col("_vN"), col("_vO")))
       .filter(col("cosine") >= minCosine)
       .select(col("_cl").as("cluster"), col("idA"), col("idB"), col("cosine"))
-  }
 
   /** EXACT n-gram Jaccard self-join via prefix filtering (the SSJoin /
     * PPJoin family — Chaudhuri et al., "A Primitive Operator for Similarity
@@ -1069,7 +1023,6 @@ object Dedup {
       .localCheckpoint(true)
     var iter = 0
     var converged = false
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && iter < maxIter) {
       val tRound = System.nanoTime()
       // (a) neighbor-min: the smallest label among me and my neighbors
@@ -1105,10 +1058,9 @@ object Dedup {
       converged = next.filter(col("label") =!= col("prev")).isEmpty
       labels = next.select(col("id"), col("label"))
       iter += 1
-      if (ccDebug) {
-        val changed = next.filter(col("label") =!= col("prev")).count()
-        println(f"[cc] round $iter ${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged changed=$changed")
-      }
+      if (log.isDebugEnabled)
+        log.debug(f"connectedComponents round $iter: " +
+          f"${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged")
     }
     // unconverged labels split components silently; `converged` is the
     // last round's own check, so failing here costs no extra Spark job
@@ -1154,85 +1106,51 @@ object Dedup {
     * verify with exact Hamming. Standard scalable SimHash dedup layout.
     *
     * Buckets wider than `maxBucketSize` are skipped before the self-join —
-    * the same guard minHashLsh applies: degenerate chunk keys (e.g. every
-    * near-empty doc simhashes to 0, so all four of its chunk keys collide)
-    * would otherwise self-join quadratically at scale. Pairs inside a
-    * skipped bucket can still surface via one of their three other chunks.
+    * the same audited guard minHashLsh applies: degenerate chunk keys (e.g.
+    * every near-empty doc simhashes to 0, so all four of its chunk keys
+    * collide) would otherwise self-join quadratically at scale. Pairs
+    * inside a skipped bucket can still surface via one of their three
+    * other chunks.
     */
   def simHashPairs(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 64): DataFrame = {
-    val withSim = simHash(df, textCol, idCol)
-      .select(col(idCol).as("_id"), col("simhash"))
-    val chunked = withSim.select(col("_id"), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL).as("key"))
-      }: _*)).as("ck"))
-      .select(col("_id"), col("simhash"), col("ck.chunk"), col("ck.key"))
-    // audited cap, materialized once: the self-join reads capped chunks
-    // from two plan branches — without this the simhash UDF + explode +
-    // cap window subtree runs twice (same fix as ngramJaccardPairs /
-    // minHashLsh)
-    val capped = capBucketsAudited(chunked, Seq("chunk", "key"),
-      maxBucketSize, "simHashPairs",
-      "Dense chunk keys usually mean degenerate simhashes (near-empty " +
-        "docs all hash to 0); pre-filter them or raise maxBucketSize — " +
-        "a capped pair can still surface via its three other chunks.")
-    val a = capped.select(col("chunk"), col("key"),
-      col("_id").as("idA"), col("simhash").as("simA"))
-    val b = capped.select(col("chunk"), col("key"),
-      col("_id").as("idB"), col("simhash").as("simB"))
-    a.join(b, Seq("chunk", "key"))
-      .filter(col("idA") < col("idB"))
-      .dropDuplicates("idA", "idB")
-      .withColumn("hamming", hamming(col("simA"), col("simB")))
-      .filter(col("hamming") <= maxHamming)
-      .select("idA", "idB", "hamming")
-  }
+      maxHamming: Int = 3, maxBucketSize: Int = 64): DataFrame =
+    simHashChunkPairs(simRows(simHash(df, textCol, idCol), idCol), None,
+      maxHamming, maxBucketSize, "simHashPairs")
 
-  /** Incremental SimHash near-dup — completes the incremental trio
-    * ([[minHashLshIncremental]], [[embeddingNearDupIncremental]]): the
-    * persisted store is simply the (id, simhash) table [[simHash]]
-    * produces — ONE long per doc, the cheapest of the three stores — and
-    * each ingested batch hashes only itself, chunks new∪old, and joins
-    * new chunk rows against the union. Equals
-    * `simHashPairs(corpus ∪ newDocs)` restricted to pairs touching a new
-    * id, with the width cap evaluated on union chunk-bucket widths
-    * (spec-pinned); ids must be unique across store ∪ newDocs.
+  /** Incremental SimHash near-dup — the [[simHashPairs]] pairs touching a
+    * newly ingested batch (see [[blockedPairs]]): the persisted store is
+    * simply the (id, simhash) table [[simHash]] produces — ONE long per
+    * doc, the cheapest of the stores — and each ingested batch hashes only
+    * itself; stored simhashes are re-chunked on the fly.
     */
   def simHashIncremental(newDocs: DataFrame, simHashStore: DataFrame,
       textCol: String, idCol: String, maxHamming: Int = 3,
-      maxBucketSize: Int = 64): DataFrame = {
-    val withSim = simHash(newDocs, textCol, idCol)
-      .select(col(idCol).as("_id"), col("simhash"), lit(true).as("isNew"))
-    val all = simHashStore
-      .select(col(idCol).as("_id"), col("simhash"), lit(false).as("isNew"))
-      .union(withSim)
-    val chunked = all.select(col("_id"), col("simhash"), col("isNew"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL).as("key"))
-      }: _*)).as("ck"))
-      .select(col("_id"), col("simhash"), col("isNew"),
-        col("ck.chunk"), col("ck.key"))
-    // one audited materialization past the cap window — both join branches
-    // read it
-    val capped = capBucketsAudited(chunked, Seq("chunk", "key"),
-      maxBucketSize, "simHashIncremental",
-      "The cap is evaluated on union chunk-bucket widths, which only " +
-        "grow across sweeps; pre-filter degenerate docs or raise " +
-        "maxBucketSize before the store gets dense.")
-    val a = capped.filter(col("isNew")).select(col("chunk"), col("key"),
-      col("_id").as("idN"), col("simhash").as("simN"))
-    val b = capped.select(col("chunk"), col("key"),
-      col("_id").as("idO"), col("simhash").as("simO"))
-    a.join(b, Seq("chunk", "key"))
-      .filter(col("idN") =!= col("idO"))
-      .select(least(col("idN"), col("idO")).as("idA"),
-        greatest(col("idN"), col("idO")).as("idB"),
-        // hamming is symmetric, so the (simN, simO) orientation is moot
-        hamming(col("simN"), col("simO")).as("hamming"))
+      maxBucketSize: Int = 64): DataFrame =
+    simHashChunkPairs(simRows(simHash(newDocs, textCol, idCol), idCol),
+      Some(simRows(simHashStore, idCol)), maxHamming, maxBucketSize,
+      "simHashIncremental")
+
+  private def simRows(df: DataFrame, idCol: String): DataFrame =
+    df.select(col(idCol).as("_id"), col("simhash"))
+
+  private def simHashChunkPairs(newRows: DataFrame, store: Option[DataFrame],
+      maxHamming: Int, cap: Int, op: String): DataFrame = {
+    def chunks(rows: DataFrame): DataFrame =
+      rows.select(col("_id"), col("simhash"),
+        explode(array((0 until 4).map { c =>
+          struct(lit(c).as("chunk"),
+            shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL).as("key"))
+        }: _*)).as("ck"))
+        .select(col("_id"), col("simhash"), col("ck.chunk"), col("ck.key"))
+    blockedPairs(chunks(newRows), store.map(chunks), Seq("chunk", "key"),
+      cap, op,
+      "Dense chunk keys usually mean degenerate simhashes (near-empty " +
+        "docs all hash to 0); pre-filter them or raise maxBucketSize — " +
+        "a capped pair can still surface via its three other chunks.")
+      // a pair can share several chunks
       .dropDuplicates("idA", "idB")
+      // hamming is symmetric, so the (N, O) orientation is moot
+      .withColumn("hamming", hamming(col("simhashN"), col("simhashO")))
       .filter(col("hamming") <= maxHamming)
       .select("idA", "idB", "hamming")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Similarity}
 
 /** Streaming dedup for document ingestion: one exact-dedup gate and seven
   * micro-batch families (five near-dup sweeps, two stateless gates) that
@@ -35,11 +35,13 @@ import graft.ops.Dedup
   *       maxHamming = 3, maxBucketSize = 64))
   * }}}
   * A sweep runs its family's incremental op against the store of
-  * everything previously landed, then appends the batch to the store. By
-  * the telescoping contract (spec-pinned at the ops layer), the per-batch
-  * outputs together equal one full batch run over the whole landed corpus;
-  * each family's doc states how. At 100 TB each sweep costs O(batch)
-  * hashing plus a join against the store — never a full-corpus re-pair.
+  * everything previously landed, then appends the batch to the store. The
+  * four pair sweeps share one body, and their ops share `Dedup`'s
+  * blocked-pair kernel, whose telescoping contract (spec-pinned at the ops
+  * layer) makes the per-batch pair outputs disjoint and together equal to
+  * one full run over the whole landed corpus, each pair emitted by the
+  * batch that completed it. At 100 TB each sweep costs O(batch) hashing
+  * plus a join against the store — never a full-corpus re-pair.
   *
   * State layout, shared by every family: parquet tables under one directory
   * (`stateDir` for the sweeps, `outDir` for the gates), each partitioned by
@@ -79,72 +81,56 @@ object StreamingDedup {
       .foreachBatch(batch)
       .start()
 
-  /** MinHash near-dup sweep: runs [[graft.ops.Dedup.minHashLshIncremental]]
-    * against the band store of everything previously landed. The union of
-    * all per-batch pair outputs equals one full [[graft.ops.Dedup.minHashLsh]]
-    * run over the landed corpus, with every pair emitted exactly once, by
-    * the batch that completed it. State under `stateDir`: `corpus` (id,
-    * text — the verify side), `bands` (the LSH band-row store) and `pairs`
-    * (the output).
+  /** MinHash near-dup sweep via [[graft.ops.Dedup.minHashLshIncremental]].
+    * State under `stateDir`: `bands` (the LSH band-row store), `corpus`
+    * (id, text — the verify side) and `pairs` (the output).
     */
   def sweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, shingleSize: Int, numHashes: Int,
       bands: Int, minJaccard: Double, seed: Long,
       maxBucketSize: Int): Unit = {
     val b = batch.select(col(idCol), col(textCol))
-    val corpus = landed(b, s"$stateDir/corpus", b, batchId)
-    val store = landed(b, s"$stateDir/bands",
-      Dedup.minHashBandRows(b.limit(0), textCol, idCol, shingleSize,
-        numHashes, bands, seed), batchId)
-    val pairs = Dedup.minHashLshIncremental(b, corpus, store, textCol,
-      idCol, shingleSize, numHashes, bands, minJaccard, seed, maxBucketSize)
-    // pairs first (they read the PRE-batch state), then the state appends
-    writeBatch(pairs, s"$stateDir/pairs", batchId)
-    writeBatch(Dedup.minHashBandRows(b, textCol, idCol, shingleSize,
-      numHashes, bands, seed), s"$stateDir/bands", batchId)
-    writeBatch(b, s"$stateDir/corpus", batchId)
+    pairSweep(b, batchId, stateDir,
+      "bands" -> ((d: DataFrame) => Dedup.minHashBandRows(d, textCol, idCol,
+        shingleSize, numHashes, bands, seed)),
+      "corpus" -> ((d: DataFrame) => d)) { case Seq(store, corpus) =>
+      Dedup.minHashLshIncremental(b, corpus, store, textCol, idCol,
+        shingleSize, numHashes, bands, minJaccard, seed, maxBucketSize)
+    }
   }
 
   /** SimHash near-dup sweep via [[graft.ops.Dedup.simHashIncremental]]: the
     * persisted state is just the (id, simhash) table — one long per doc,
-    * the cheapest of the stores — plus the `pairs` output. Per-batch pairs
-    * telescope to one full [[graft.ops.Dedup.simHashPairs]] run, each pair
-    * exactly once.
+    * the cheapest of the stores — plus the `pairs` output.
     */
   def simHashSweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, maxHamming: Int,
       maxBucketSize: Int): Unit = {
     val b = batch.select(col(idCol), col(textCol))
-    def sims(df: DataFrame): DataFrame =
-      Dedup.simHash(df, textCol, idCol).select(col(idCol), col("simhash"))
-    val store = landed(b, s"$stateDir/simhash", sims(b.limit(0)), batchId)
-    val pairs = Dedup.simHashIncremental(b, store, textCol, idCol,
-      maxHamming, maxBucketSize)
-    writeBatch(pairs, s"$stateDir/pairs", batchId)
-    writeBatch(sims(b), s"$stateDir/simhash", batchId)
+    pairSweep(b, batchId, stateDir, "simhash" -> ((d: DataFrame) =>
+        Dedup.simHash(d, textCol, idCol).select(col(idCol), col("simhash")))) {
+      case Seq(store) => Dedup.simHashIncremental(b, store, textCol, idCol,
+        maxHamming, maxBucketSize)
+    }
   }
 
   /** Embedding near-dup sweep via
     * [[graft.ops.Dedup.embeddingNearDupIncremental]]: the persisted state is
     * the (id, srp_bucket, vec) table [[graft.ops.Similarity.withSrpBucket]]
     * produces — the SAME table `lshKnn` serves ANN from, maintained here
-    * incrementally as batches stream in. Per-batch pairs telescope to one
-    * full `embeddingNearDupPairs(probeHamming = 1)` run.
+    * incrementally as batches stream in. The matching full run is
+    * `embeddingNearDupPairs(probeHamming = 1)`.
     */
   def embeddingSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
       idCol: String, stateDir: String, dim: Int, nBits: Int, seed: Long,
       minCosine: Double, maxBucketSize: Int): Unit = {
-    import graft.ops.Similarity
     val b = batch.select(col(idCol), col(vecCol))
-    def bucketed(df: DataFrame): DataFrame =
-      Similarity.withSrpBucket(df, vecCol, dim, nBits, seed)
-        .select(col(idCol), col("srp_bucket"), col(vecCol))
-    val store = landed(b, s"$stateDir/buckets", bucketed(b.limit(0)),
-      batchId)
-    val pairs = Dedup.embeddingNearDupIncremental(b, store, vecCol, idCol,
-      dim, nBits, seed, minCosine, maxBucketSize)
-    writeBatch(pairs, s"$stateDir/pairs", batchId)
-    writeBatch(bucketed(b), s"$stateDir/buckets", batchId)
+    pairSweep(b, batchId, stateDir, "buckets" -> ((d: DataFrame) =>
+        Similarity.withSrpBucket(d, vecCol, dim, nBits, seed)
+          .select(col(idCol), col("srp_bucket"), col(vecCol)))) {
+      case Seq(store) => Dedup.embeddingNearDupIncremental(b, store, vecCol,
+        idCol, dim, nBits, seed, minCosine, maxBucketSize)
+    }
   }
 
   /** SemDeDup sweep via [[graft.ops.Dedup.semanticNearDupIncremental]]: the
@@ -154,24 +140,35 @@ object StreamingDedup {
     * in. The coarse quantizer is FROZEN (`model` is trained offline, the
     * SemDeDup deployment shape — same trust model as
     * [[unigramQualityGateBatch]]'s frozen lexicon), so stored assignments
-    * never go stale. Per-batch pairs telescope to one full
-    * `Dedup.semanticNearDupPairs` run over all batches.
+    * never go stale.
     */
   def semanticSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
-      idCol: String, stateDir: String,
-      model: graft.ops.Similarity.IvfModel, minCosine: Double,
-      maxClusterSize: Int): Unit = {
-    import graft.ops.Similarity
+      idCol: String, stateDir: String, model: Similarity.IvfModel,
+      minCosine: Double, maxClusterSize: Int): Unit = {
     val b = batch.select(col(idCol), col(vecCol))
-    def clustered(df: DataFrame): DataFrame =
-      Similarity.withIvfCluster(df, vecCol, model)
-        .select(col(idCol), col("ivf_cluster"), col(vecCol))
-    val store = landed(b, s"$stateDir/clusters", clustered(b.limit(0)),
-      batchId)
-    val pairs = Dedup.semanticNearDupIncremental(b, store, vecCol, idCol,
-      model, minCosine = minCosine, maxClusterSize = maxClusterSize)
-    writeBatch(pairs, s"$stateDir/pairs", batchId)
-    writeBatch(clustered(b), s"$stateDir/clusters", batchId)
+    pairSweep(b, batchId, stateDir, "clusters" -> ((d: DataFrame) =>
+        Similarity.withIvfCluster(d, vecCol, model)
+          .select(col(idCol), col("ivf_cluster"), col(vecCol)))) {
+      case Seq(store) => Dedup.semanticNearDupIncremental(b, store, vecCol,
+        idCol, model, minCosine = minCosine, maxClusterSize = maxClusterSize)
+    }
+  }
+
+  /** The body of the four pair sweeps: `stores` name the state tables under
+    * `stateDir` and how a batch's rows become theirs. `pairs` runs on the
+    * tables as landed before this batch (`rows(b.limit(0))` gives the
+    * schema until one lands) and is written as this batch's `pairs`
+    * partition FIRST — it reads the pre-batch state — then each store
+    * appends `rows(b)`.
+    */
+  private def pairSweep(b: DataFrame, batchId: Long, stateDir: String,
+      stores: (String, DataFrame => DataFrame)*)(
+      pairs: Seq[DataFrame] => DataFrame): Unit = {
+    val before = stores.map { case (name, rows) =>
+      landed(b, s"$stateDir/$name", rows(b.limit(0)), batchId)
+    }
+    writeBatch(pairs(before), s"$stateDir/pairs", batchId)
+    for ((name, rows) <- stores) writeBatch(rows(b), s"$stateDir/$name", batchId)
   }
 
   /** Substring-level sweep: the persisted state is the per-(gram, doc)

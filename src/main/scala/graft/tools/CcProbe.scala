@@ -3,10 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Round-count probe for Dedup.connectedComponents on synthetic graphs:
-  * `runMain graft.tools.CcProbe <pathLen>` runs CC (with GRAFT_CC_DEBUG=1
-  * in the env to see per-round lines) on a path graph 0-1-...-(n-1) and on
-  * the q_curation_sem semantic pair list shape, printing label histograms.
+/** Path-graph probe for Dedup.connectedComponents:
+  * `runMain graft.tools.CcProbe [pathLen]` (default 200) runs CC on the
+  * path 0-1-...-(n-1) and prints its distinct-label count (expect 1) and
+  * wall time.
   */
 object CcProbe {
   def main(args: Array[String]): Unit = {

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Time a single SparkEntry contract query: `runMain graft.tools.QueryTime
   * <sfDir> <queryName> [trials]`. Prints per-trial wall seconds and row
-  * count so per-query optimizations can be measured without a full Bench
-  * or Verify pass.
+  * count, then the median and minimum over the trials, so per-query
+  * optimizations can be measured without a full Bench or Verify pass. The
+  * session uses Bench's settings (AQE on, 4 MiB max partition bytes,
+  * 256 KiB open cost), so a query timed here runs the plan Bench runs.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -13,12 +15,16 @@ object QueryTime {
     val name = args(1)
     val trials = args.lift(2).filter(_.forall(_.isDigit))
       .map(_.toInt).getOrElse(3)
+    require(trials >= 1, s"trials must be >= 1: $trials")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
+      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
@@ -27,11 +33,18 @@ object QueryTime {
       // check pushdown (PushedFilters/ReadSchema), codegen spans, and
       // exchange count the way the scale review expects
       fn(spark, sfDir).explain("formatted")
-    } else (1 to trials).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[querytime] $name trial $i: $sec%.2f s ($n rows)")
+    } else {
+      val secs = (1 to trials).map { i =>
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        println(f"[querytime] $name trial $i: $sec%.2f s ($n rows)")
+        sec
+      }.sorted
+      val mid = secs.length / 2
+      val median =
+        if (secs.length % 2 == 1) secs(mid) else (secs(mid - 1) + secs(mid)) / 2
+      println(f"[querytime] $name median $median%.2f s min ${secs.head}%.2f s")
     }
     spark.stop()
   }

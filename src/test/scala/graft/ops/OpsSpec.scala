@@ -1,6 +1,9 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.SparkTestBase
 
 class OpsSpec extends SparkTestBase {
@@ -1037,6 +1040,148 @@ class OpsSpec extends SparkTestBase {
     assert(sweep1.nonEmpty && sweep2.nonEmpty)
     assert((sweep1 & sweep2).isEmpty, "no pair found twice")
     assert((sweep1 | sweep2) == full)
+  }
+
+  // ---- incremental ≡ full over random corpora and batch splits ----------
+  // scalacheck Gen driven by fixed seeds (the PostingCodecSpec style): each
+  // corpus holds noisy copies of a few base items under distinct shuffled
+  // ids (so the batch is not an id range), split at random into old rows
+  // and a new batch. Even seeds use a cap that binds, odd seeds one that
+  // does not.
+
+  private case class SplitCorpus[T](rows: Seq[(Long, T)],
+      batch: Set[Long], cap: Int)
+
+  private def splitCorpora[T](base: Gen[T], noisy: T => Gen[T],
+      caps: (Int, Int), n: Int): Seq[SplitCorpus[T]] = {
+    val g = for {
+      size <- Gen.chooseNum(16, 32)
+      bases <- Gen.listOfN(3, base)
+      items <- Gen.listOfN(size, Gen.oneOf(bases).flatMap(noisy))
+      idSeed <- Gen.long
+      inBatch <- Gen.listOfN(size, Gen.prob(0.35))
+    } yield {
+      val ids = new scala.util.Random(idSeed).shuffle((0L until 200L).toVector)
+      val rows = ids.zip(items)
+      (rows, rows.zip(inBatch).collect { case ((id, _), true) => id }.toSet)
+    }
+    (1 to n).map { i =>
+      val (rows, batch) = g(Gen.Parameters.default, Seed(i.toLong)).get
+      SplitCorpus(rows, batch, if (i % 2 == 0) caps._1 else caps._2)
+    }
+  }
+
+  /** The incremental-family contract on each corpus: the sweep of the batch
+    * against the store of the old rows equals the full run restricted to
+    * pairs touching the batch; and when the full run's cap dropped nothing,
+    * the sweep of the old rows against an empty store and the batch sweep
+    * are disjoint and together equal the full run. `full(rows, cap)` and
+    * `inc(batch, old, cap)` build the operator outputs.
+    */
+  private def checkIncremental[T](corpora: Seq[SplitCorpus[T]], fullOp: String,
+      full: (Seq[(Long, T)], Int) => DataFrame,
+      inc: (Seq[(Long, T)], Seq[(Long, T)], Int) => DataFrame): Unit = {
+    var (capped, uncapped, newPairs, oldPairs) = (0, 0, 0, 0)
+    for ((c, i) <- corpora.zipWithIndex) {
+      def pairs(df: DataFrame) = {
+        val rs = df.collect().toSeq
+        assert(rs.size == rs.toSet.size, s"corpus $i: a pair emitted twice")
+        rs.toSet
+      }
+      def touches(r: Row) =
+        c.batch(r.getAs[Long]("idA")) || c.batch(r.getAs[Long]("idB"))
+      val (fresh, old) = c.rows.partition(r => c.batch(r._1))
+      val all = pairs(full(c.rows, c.cap))
+      val drops = Dedup.lastCapDrops(fullOp).get
+      val sweep1 = pairs(inc(old, Seq.empty, c.cap))
+      val sweep2 = pairs(inc(fresh, old, c.cap))
+      assert(sweep2 == all.filter(touches), s"corpus $i: batch sweep")
+      newPairs += sweep2.size
+      oldPairs += all.count(r => !touches(r))
+      if (drops == Dedup.CapDrops(0, 0)) {
+        uncapped += 1
+        assert((sweep1 & sweep2).isEmpty, s"corpus $i: a pair swept twice")
+        assert((sweep1 | sweep2) == all, s"corpus $i: sweeps != full run")
+      } else capped += 1
+    }
+    // both cap regimes and both pair kinds were exercised
+    assert(capped > 0 && uncapped > 0 && newPairs > 0 && oldPairs > 0,
+      s"capped=$capped uncapped=$uncapped new=$newPairs old=$oldPairs")
+  }
+
+  private val propWords = Vector("alpha", "beta", "gamma", "delta", "eps",
+    "zeta", "eta", "theta", "iota", "kappa", "lambda", "mu")
+
+  private lazy val textCorpora: Seq[SplitCorpus[String]] = {
+    val base = Gen.listOfN(10, Gen.oneOf(propWords)).map(_.toVector)
+    def noisy(s: Vector[String]) = for {
+      k <- Gen.chooseNum(0, 2)
+      at <- Gen.listOfN(k, Gen.chooseNum(0, s.length - 1))
+      ws <- Gen.listOfN(k, Gen.oneOf(propWords))
+    } yield at.zip(ws).foldLeft(s) { case (v, (p, w)) => v.updated(p, w) }
+    splitCorpora(base, noisy, (4, 64), 4)
+      .map(c => c.copy(rows = c.rows.map { case (id, t) => (id, t.mkString(" ")) }))
+  }
+
+  private def vecCorpora(dim: Int, caps: (Int, Int)): Seq[SplitCorpus[Array[Float]]] = {
+    def vec(r: Double) = Gen.listOfN(dim, Gen.choose(-r, r)).map(_.map(_.toFloat))
+    def noisy(v: List[Float]) = vec(0.3).map(e => v.zip(e).map(p => p._1 + p._2))
+    splitCorpora(vec(1.0), noisy, caps, 4)
+      .map(c => c.copy(rows = c.rows.map { case (id, v) => (id, v.toArray) }))
+  }
+
+  private def textDf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+  private def vecDf(rows: Seq[(Long, Array[Float])]) =
+    rows.toDF("vec_id", "embedding")
+
+  test("property: MinHash incremental ≡ full run over random batch splits") {
+    def bandRows(rows: Seq[(Long, String)]) = Dedup.minHashBandRows(
+      textDf(rows), "text", "doc_id", shingleSize = 2, bands = 16)
+    checkIncremental[String](textCorpora, "minHashLsh",
+      (rows, cap) => Dedup.minHashLsh(textDf(rows), "text", "doc_id",
+        shingleSize = 2, bands = 16, minJaccard = 0.5, maxBucketSize = cap),
+      (fresh, old, cap) => Dedup.minHashLshIncremental(textDf(fresh),
+        textDf(old), bandRows(old), "text", "doc_id", shingleSize = 2,
+        bands = 16, minJaccard = 0.5, maxBucketSize = cap))
+  }
+
+  test("property: SimHash incremental ≡ full run over random batch splits") {
+    checkIncremental[String](textCorpora, "simHashPairs",
+      (rows, cap) => Dedup.simHashPairs(textDf(rows), "text", "doc_id",
+        maxHamming = 8, maxBucketSize = cap),
+      (fresh, old, cap) => Dedup.simHashIncremental(textDf(fresh),
+        Dedup.simHash(textDf(old), "text", "doc_id")
+          .select("doc_id", "simhash"),
+        "text", "doc_id", maxHamming = 8, maxBucketSize = cap))
+  }
+
+  test("property: SRP-embedding incremental ≡ full run over random batch splits") {
+    val (dim, nBits, seed) = (8, 4, 7L)
+    checkIncremental[Array[Float]](vecCorpora(dim, (6, 256)),
+      "embeddingNearDupPairs",
+      (rows, cap) => Dedup.embeddingNearDupPairs(vecDf(rows), "embedding",
+        "vec_id", dim, nBits = nBits, seed = seed, minCosine = 0.5,
+        maxBucketSize = cap, probeHamming = 1),
+      (fresh, old, cap) => Dedup.embeddingNearDupIncremental(vecDf(fresh),
+        Similarity.withSrpBucket(vecDf(old), "embedding", dim, nBits, seed),
+        "embedding", "vec_id", dim, nBits = nBits, seed = seed,
+        minCosine = 0.5, maxBucketSize = cap))
+  }
+
+  test("property: SemDeDup incremental ≡ full run over random batch splits") {
+    val dim = 8
+    val rnd = new scala.util.Random(5)
+    val model = Similarity.IvfModel(
+      Array.fill(3)(Array.fill(dim)(rnd.nextGaussian().toFloat)))
+    def clustered(rows: Seq[(Long, Array[Float])]) =
+      Similarity.withIvfCluster(vecDf(rows), "embedding", model)
+    checkIncremental[Array[Float]](vecCorpora(dim, (6, 1024)),
+      "semanticNearDupPairs",
+      (rows, cap) => Dedup.semanticNearDupPairs(clustered(rows), "embedding",
+        "vec_id", minCosine = 0.5, maxClusterSize = cap),
+      (fresh, old, cap) => Dedup.semanticNearDupIncremental(vecDf(fresh),
+        clustered(old), "embedding", "vec_id", model, minCosine = 0.5,
+        maxClusterSize = cap))
   }
 
   test("survivorsFromPairs composes with the exact ngram join") {
