@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSessio
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.{functions => gf}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
 /** Build-time configuration.
@@ -39,6 +40,16 @@ final case class SegmentRow(
     term: String, salt: Int, numSalts: Int,
     shardDf: Long, maxTf: Int, postings: Array[Byte], bucket: Int)
 
+/** Internal row of the forward index (docs/ table). Top-level on purpose:
+  * nested inside the object, Spark's generated code references
+  * `IndexBuilder$DocRow` and janino fails to resolve the accessor methods,
+  * silently dropping the encoder projection of the HOTTEST build stage to
+  * interpreted mode ("Expr codegen error ... falling back" in stderr).
+  */
+private[index] final case class DocRow(docId: Long, repo: String,
+    path: String, commit: String, lang: String, sha256: String,
+    tfs: Map[String, Int], doclen: Int)
+
 /** Inverted-index construction over an Iceberg-shaped corpus
   * `(repo, path, commit, lang, content)`.
   *
@@ -55,6 +66,18 @@ final case class SegmentRow(
   *   manifest vN + atomic pointer swap ─► meta/
   * }}}
   *
+  * A delta (`buildDelta`) runs the same five stages as generation N+1
+  * layered on a base snapshot; a full build is the delta with no base.
+  * {{{
+  *   1  corpus ─ dropDuplicates(key) ─ left-anti join on the base keys;
+  *      each docShard's ranks start after its base doc count ─► docs/
+  *   2  base dict ∪ delta partials ─ groupBy(term); existing terms keep
+  *      their FROZEN salt counts ─► dict/ (rewritten whole)
+  *   3-4  segments/ and lineage/ of the delta's docs only
+  *   5  stats and sizing over base ∪ delta docs/lineage; the manifest's
+  *      baseVersions = base.allVersions (manifest union)
+  * }}}
+  *
   * Scale properties: corpus content is exchanged exactly once (docId
   * assignment); the posting exchange carries compressed partial lists —
   * byte volume ≈ final index size and row count = |vocab| x partitions, not
@@ -62,36 +85,18 @@ final case class SegmentRow(
   * shuffle, so no reducer receives a whole skewed posting list (north_rule
   * skew handling). Dense docIds over per-shard key order keep delta gaps in
   * the 1-2 byte range AND make each docs partition a contiguous docId range,
-  * so the merge is ordered concatenation, not a k-way heap. Each stage
-  * leaves a parquet `_SUCCESS` marker; re-running the same version resumes
-  * after the last complete stage (checkpoint resumability per north_rule).
+  * so the merge is ordered concatenation, not a k-way heap.
+  *
+  * Resume, in both modes: each stage leaves a parquet `_SUCCESS` marker and
+  * a `_GRAFT_STAMP` build token; re-running the same version resumes after
+  * the last complete stage (checkpoint resumability per north_rule). The
+  * token names the base generations, so a delta and a full build at the
+  * same version number never reuse each other's stage output.
   */
-/** Internal row of the forward index (docs/ table). Top-level on purpose:
-  * nested inside the object, Spark's generated code references
-  * `IndexBuilder$DocRow` and janino fails to resolve the accessor methods,
-  * silently dropping the encoder projection of the HOTTEST build stage to
-  * interpreted mode ("Expr codegen error ... falling back" in stderr).
-  */
-private[index] final case class DocRow(docId: Long, repo: String,
-    path: String, commit: String, lang: String, sha256: String,
-    tfs: Map[String, Int], doclen: Int)
-
 object IndexBuilder {
 
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def toHex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      out(i * 2) = hexDigits(b >>> 4)
-      out(i * 2 + 1) = hexDigits(b & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
+  private def toHex(bytes: Array[Byte]): String =
+    java.util.HexFormat.of().formatHex(bytes)
 
   /** Per-partition (term, df, cf, maxTf) dictionary partials — map-side
     * pre-aggregation by hand: each partition folds its tf maps into one
@@ -135,8 +140,13 @@ object IndexBuilder {
     * bucket-partitioned to `segmentsDir`. Phase A (map side): each docs
     * partition builds COMPLETE compressed partial posting lists per
     * (term, salt) for its doc range; the exchange carries one byte-array
-    * per (partition, term, salt). Hot terms split across salts BEFORE the
-    * shuffle (north_rule skew handling). Shared by full and delta builds.
+    * per (partition, term, salt) — posting-count-independent row count,
+    * ~160x fewer rows and a fraction of the bytes of a per-posting shuffle.
+    * Dense docIds over the sorted corpus make each partition a contiguous
+    * docId range, so phase B (reduce side) merges partials by ordered
+    * concatenation. Hot terms split across salts BEFORE the shuffle, so no
+    * reducer receives a whole skewed posting list (north_rule skew
+    * handling).
     */
   private def writeSegments(spark: SparkSession, docs: DataFrame,
       hotTerms: Map[String, Int], segmentsDir: String, numBuckets: Int,
@@ -289,180 +299,14 @@ object IndexBuilder {
       indexDir: String,
       cfg: IndexConfig = IndexConfig(),
       versionOpt: Option[Int] = None,
-      onStageTime: (String, Double) => Unit = (_, _) => ()): SnapshotMeta = {
-    // b = 0 (the reference's norms-off mode, create.py:177) stores no
-    // doclens and pays zero codec overhead; b > 0 stores per-posting norms
-    // (doclen) so standard BM25 length normalization scores from the
-    // postings alone — no side lookup at query time.
-    val storeNorms = cfg.b > 0.0
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    val version = versionOpt.getOrElse(
-      Snapshot.listVersions(indexDir).lastOption.getOrElse(0) + 1)
-    val base = s"$indexDir/v$version"
-    val docsDir = s"$base/docs"
-    val dictDir = s"$base/dict"
-    val segmentsDir = s"$base/segments"
-    val lineageDir = s"$base/lineage"
-
-    // Stage-resume safety (round-1 advice): a _SUCCESS marker alone would
-    // let a crashed version re-run with a DIFFERENT corpus or config reuse
-    // stale stage outputs. Every completed stage is stamped with a build
-    // token = hash of (config, input schema, input files, normalized plan);
-    // a mismatch rebuilds the stage. (In-memory test corpora with identical
-    // schemas hash alike — acceptable: versions are fresh per build and
-    // resume only ever applies to a same-version re-run.)
-    val buildToken: String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val planNorm = corpus.queryExecution.analyzed.toString
-        .replaceAll("#\\d+", "")
-      val idText = cfg.toString + "\u0000" + corpus.schema.catalogString +
-        "\u0000" + corpus.inputFiles.sorted.mkString(",") + "\u0000" + planNorm
-      toHex(md.digest(idText.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    }
-    def stampPath(dir: String) = java.nio.file.Paths.get(dir, "_GRAFT_STAMP")
-    def stamp(dir: String): Unit =
-      java.nio.file.Files.write(stampPath(dir),
-        buildToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def done(dir: String): Boolean =
-      new java.io.File(dir, "_SUCCESS").exists() &&
-        java.nio.file.Files.exists(stampPath(dir)) &&
-        new String(java.nio.file.Files.readAllBytes(stampPath(dir)),
-          java.nio.charset.StandardCharsets.UTF_8) == buildToken
-
-    val verbose = spark.conf.getOption("graft.build.verbose").contains("true")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      onStageTime(label, sec)
-      if (verbose) println(f"[build] $label: $sec%.2f s")
-      r
-    }
-
-    // ---- stage 1: forward index (docId, metadata, sha256, tfs, doclen) ----
-    // Bucket-dense docIds: docId = docShard << 40 | rankWithinShard, where
-    // docShard = hash(repo,path,commit) % docShards and the rank follows the
-    // per-shard lexicographic key order. Properties:
-    //  - deterministic at ANY parallelism (shard and rank are pure functions
-    //    of row values + the fixed docShards config — north_rule N vs 4N)
-    //  - dense within shard runs → delta gaps stay 1-2 bytes (uniform hash
-    //    ids would leave ~45-bit gaps: incompressible); one large jump per
-    //    shard boundary per posting list is amortized away by varlong
-    //  - ONE hash exchange of the corpus + per-shard sort; no global sort,
-    //    no range-sampling job, no zipWithIndex passes
-    // The analyze pass (sha256 + tf map) rides the same pass that assigns
-    // ids, so corpus content is read and materialized exactly once.
-    if (!done(docsDir)) timed("stage1 docs") {
-      val docShards = cfg.docShards
-      val analyzerName = cfg.analyzer
-      corpus
-        .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"))
-        .repartition(docShards, col("repo"), col("path"), col("commit"))
-        .sortWithinPartitions("repo", "path", "commit")
-        .as[(String, String, String, String, String)]
-        .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.get().partitionId().toLong
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          var i = 0L
-          it.map { case (repo, path, commit, lang, content) =>
-            val docId = (pid << 40) | i
-            i += 1
-            md.reset()
-            val sha = toHex(
-              md.digest(content.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            val tfs = graft.analyzer.Analyzers.termFrequencies(analyzerName, content)
-            var doclen = 0
-            var j = 0
-            while (j < tfs.length) { doclen += tfs(j)._2; j += 1 }
-            DocRow(docId, repo, path, commit, lang, sha, tfs.toMap, doclen)
-          }
-        }
-        .write.mode(SaveMode.Overwrite).parquet(docsDir)
-      stamp(docsDir)
-    }
-    val docs = spark.read.schema(IndexSchemas.docs).parquet(docsDir)
-
-    // ---- stage 2: term dictionary / stats ----
-    // Map-side pre-aggregation by hand: each partition folds its tf maps
-    // into one HashMap and emits per-partition (term, df, cf, maxTf)
-    // partials — the exchange carries |vocab| x partitions skinny rows
-    // instead of one row per posting (~160x fewer at code-corpus shapes).
-    if (!done(dictDir)) timed("stage2 dict") {
-      val saltThreshold = cfg.saltThreshold
-      val maxSalts = cfg.maxSalts
-      val numSaltsU = udf((df: Long) => Hashing.numSaltsFor(df, saltThreshold, maxSalts))
-      dictPartials(spark, docs)
-        .groupBy("term")
-        .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-        .withColumn("numSalts", numSaltsU(col("df")))
-        .write.mode(SaveMode.Overwrite).parquet(dictDir)
-      stamp(dictDir)
-    }
-    val dict = spark.read.schema(IndexSchemas.dict).parquet(dictDir)
-
-    // hot terms: tiny by construction (df > saltThreshold) → driver map
-    val hotTerms: Map[String, Int] = timed("hot-term collect")(dict.filter(col("numSalts") > 1)
-      .select("term", "numSalts").as[(String, Int)].collect().toMap)
-
-    // ---- stage 3: posting segments — two-phase partial build + merge ----
-    // Phase A (map side): each docs partition builds COMPLETE compressed
-    // partial posting lists per (term, salt) for its doc range. Dense docIds
-    // assigned over the sorted corpus make each partition a contiguous docId
-    // range, so phase B (reduce side) merges partials by simple ordered
-    // concatenation. The exchange carries one compressed byte-array per
-    // (partition, term, salt) — posting-count-independent row count, ~160x
-    // fewer rows and a fraction of the bytes of a per-posting shuffle. Hot
-    // terms are split across salts BEFORE the shuffle, so no reducer ever
-    // receives a whole skewed posting list (north_rule skew handling).
-    if (!done(segmentsDir)) timed("stage3 segments") {
-      writeSegments(spark, docs, hotTerms, segmentsDir, cfg.numBuckets, storeNorms)
-      stamp(segmentsDir)
-    }
-
-    // ---- stage 4: per-partition lineage + metrics ----
-    if (!done(lineageDir)) timed("stage4 lineage") {
-      spark.read.schema(IndexSchemas.segments).parquet(segmentsDir)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("numShards"),
-          sum("shardDf").as("numPostings"),
-          sum(length(col("postings"))).as("postingBytes"))
-        .withColumn("snapshotVersion", lit(version))
-        .write.mode(SaveMode.Overwrite).parquet(lineageDir)
-      stamp(lineageDir)
-    }
-
-    // ---- stage 5: manifest + atomic pointer swap ----
-    val statsRow = timed("stage5 stats")(docs.agg(
-      count(lit(1)).as("n"),
-      avg(col("doclen")).as("avgdl"),
-      // order-independent corpus fingerprint over the per-row sha256
-      // invariant; decimal sum avoids ANSI long-overflow at scale
-      sum(xxhash64(col("sha256")).cast(DecimalType(38, 0))).as("fp"))
-      .collect()(0))
-    val n = statsRow.getLong(0)
-    val avgdl = if (statsRow.isNullAt(1)) 0.0 else statsRow.getDouble(1)
-    val fp = if (statsRow.isNullAt(2)) 0L
-      else statsRow.getDecimal(2).toBigInteger.longValue()
-
-    // sizing totals into the manifest: readers pick their serving tier
-    // with zero Spark jobs at open()
-    val sizing = spark.read.schema(IndexSchemas.lineage).parquet(lineageDir)
-      .agg(sum("numShards"), sum("postingBytes")).collect()(0)
-    val meta = SnapshotMeta(version, n, avgdl, cfg.numBuckets,
-      cfg.saltThreshold, cfg.maxSalts, cfg.k1, cfg.b, fp, hotTerms,
-      sizedShards = if (sizing.isNullAt(0)) 0L else sizing.getLong(0),
-      sizedPostingBytes = if (sizing.isNullAt(1)) 0L else sizing.getLong(1),
-      analyzer = cfg.analyzer)
-    Snapshot.commit(indexDir, meta)
-    meta
-  }
+      onStageTime: (String, Double) => Unit = (_, _) => ()): SnapshotMeta =
+    run(corpus, indexDir, cfg, versionOpt.getOrElse(nextVersion(indexDir)),
+      None, onStageTime)
 
   /** Incremental (delta) build — the streaming-scale path: index ONLY
     * `newCorpus` as generation N+1 LAYERED on the current snapshot instead
     * of rebuilding everything (per-batch full rebuild is O(corpus); a delta
-    * is O(batch)).
+    * is O(batch)). With no snapshot yet this is a full build.
     *
     * Contract (same on-disk format, manifest-union semantics):
     *  - new docs continue each docShard's dense rank (per-shard base offsets
@@ -494,21 +338,62 @@ object IndexBuilder {
       s"snapshot at $indexDir has a stale on-disk format " +
         s"(${anySnapshot.get.formatVersion} != ${Snapshot.CurrentFormatVersion})" +
         " — rebuild with a full build over the complete corpus")
-    if (prevOpt.isEmpty) return build(newCorpus, indexDir, cfg, None, onStageTime)
-    val prev = prevOpt.get
-    require(prev.numBuckets == cfg.numBuckets && prev.maxSalts == cfg.maxSalts &&
-      prev.k1 == cfg.k1 && prev.b == cfg.b && prev.analyzer == cfg.analyzer,
-      "delta builds must use the snapshot's own IndexConfig")
-    val spark = newCorpus.sparkSession
-    import spark.implicits._
-    val storeNorms = cfg.b > 0.0
+    prevOpt.foreach(prev => require(prev.numBuckets == cfg.numBuckets &&
+      prev.maxSalts == cfg.maxSalts && prev.k1 == cfg.k1 && prev.b == cfg.b &&
+      prev.analyzer == cfg.analyzer,
+      "delta builds must use the snapshot's own IndexConfig"))
+    run(newCorpus, indexDir, cfg, nextVersion(indexDir), prevOpt, onStageTime)
+  }
 
-    val version = Snapshot.listVersions(indexDir).lastOption.getOrElse(0) + 1
-    val base = s"$indexDir/v$version"
-    val docsDir = s"$base/docs"
-    val dictDir = s"$base/dict"
-    val segmentsDir = s"$base/segments"
-    val lineageDir = s"$base/lineage"
+  private def nextVersion(indexDir: String): Int =
+    Snapshot.listVersions(indexDir).lastOption.getOrElse(0) + 1
+
+  /** The one five-stage body (see the object doc): a full build of `corpus`
+    * when `base` is None, else a delta of `corpus` layered on `base`. Stages
+    * report to `onStageTime` as `stage1 docs` … `stage5 stats` in full mode
+    * and `delta1 docs` … `delta5 stats` in delta mode, plus
+    * `hot-term collect` in both.
+    */
+  private def run(corpus: DataFrame, indexDir: String, cfg: IndexConfig,
+      version: Int, base: Option[SnapshotMeta],
+      onStageTime: (String, Double) => Unit): SnapshotMeta = {
+    // b = 0 (the reference's norms-off mode, create.py:177) stores no
+    // doclens and pays zero codec overhead; b > 0 stores per-posting norms
+    // (doclen) so standard BM25 length normalization scores from the
+    // postings alone — no side lookup at query time.
+    val storeNorms = cfg.b > 0.0
+    val spark = corpus.sparkSession
+    import spark.implicits._
+
+    val baseVersions = base.fold(Seq.empty[Int])(_.allVersions)
+    def dirs(table: String): Seq[String] =
+      (baseVersions :+ version).map(v => s"$indexDir/v$v/$table")
+    val docsDir = s"$indexDir/v$version/docs"
+    val dictDir = s"$indexDir/v$version/dict"
+    val segmentsDir = s"$indexDir/v$version/segments"
+    val lineageDir = s"$indexDir/v$version/lineage"
+
+    // Stage-resume safety (round-1 advice): a _SUCCESS marker alone would
+    // let a crashed version re-run with a DIFFERENT corpus or config reuse
+    // stale stage outputs. Every completed stage is stamped with a build
+    // token = hash of (config, input schema, input files, normalized plan,
+    // base generations); a mismatch rebuilds the stage. (In-memory test
+    // corpora with identical schemas hash alike — acceptable: versions are
+    // fresh per build and resume only ever applies to a same-version re-run.)
+    val buildToken: String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val planNorm = corpus.queryExecution.analyzed.toString
+        .replaceAll("#\\d+", "")
+      val idText = cfg.toString + "\u0000" + corpus.schema.catalogString +
+        "\u0000" + corpus.inputFiles.sorted.mkString(",") + "\u0000" + planNorm +
+        base.fold("")("\u0000" + _.allVersions.mkString(","))
+      toHex(md.digest(idText.getBytes(UTF_8)))
+    }
+    def stampPath(dir: String) = Paths.get(dir, "_GRAFT_STAMP")
+    def done(dir: String): Boolean =
+      new java.io.File(dir, "_SUCCESS").exists() &&
+        Files.exists(stampPath(dir)) &&
+        new String(Files.readAllBytes(stampPath(dir)), UTF_8) == buildToken
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -516,26 +401,47 @@ object IndexBuilder {
       onStageTime(label, (System.nanoTime() - t0) / 1e9)
       r
     }
+    val mode = if (base.isEmpty) "stage" else "delta"
+    // stage n writes `dir` unless a completed, same-token output is there
+    def stage(n: Int, name: String, dir: String)(write: => Unit): Unit =
+      if (!done(dir)) timed(s"$mode$n $name") {
+        write
+        Files.write(stampPath(dir), buildToken.getBytes(UTF_8))
+      }
 
-    val prevDocs = spark.read.schema(IndexSchemas.docs)
-      .parquet(prev.docsDirs(indexDir): _*)
-
-    // ---- stage 1: delta forward index ----
-    timed("delta1 docs") {
-      // per-shard dense-rank base offsets: docShard = docId >>> 40
-      val offsets: Map[Long, Long] = prevDocs
-        .groupBy(shiftrightunsigned(col("docId"), 40).as("shard"))
-        .agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      val offsetsB = spark.sparkContext.broadcast(offsets)
+    // ---- stage 1: forward index (docId, metadata, sha256, tfs, doclen) ----
+    // Bucket-dense docIds: docId = docShard << 40 | rankWithinShard, where
+    // docShard = hash(repo,path,commit) % docShards and the rank follows the
+    // per-shard lexicographic key order. Properties:
+    //  - deterministic at ANY parallelism (shard and rank are pure functions
+    //    of row values + the fixed docShards config — north_rule N vs 4N)
+    //  - dense within shard runs → delta gaps stay 1-2 bytes (uniform hash
+    //    ids would leave ~45-bit gaps: incompressible); one large jump per
+    //    shard boundary per posting list is amortized away by varlong
+    //  - ONE hash exchange of the corpus + per-shard sort; no global sort,
+    //    no range-sampling job, no zipWithIndex passes
+    // The analyze pass (sha256 + tf map) rides the same pass that assigns
+    // ids, so corpus content is read and materialized exactly once.
+    stage(1, "docs", docsDir) {
+      val rows = corpus
+        .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"))
+      val baseDocs = base.map(prev => spark.read.schema(IndexSchemas.docs)
+        .parquet(prev.docsDirs(indexDir): _*))
+      // per-shard dense-rank offsets (docShard = docId >>> 40): a delta
+      // continues each shard after its base docs, a full build starts at 0.
+      // At most docShards entries, so the map rides in the task closure.
+      val offsets: Map[Long, Long] = baseDocs.fold(Map.empty[Long, Long])(
+        _.groupBy(shiftrightunsigned(col("docId"), 40).as("shard"))
+          .agg(count(lit(1)).as("n"))
+          .as[(Long, Long)].collect().toMap)
+      // a delta skips keys the base already indexes (upsert identity)
+      val fresh = baseDocs.fold(rows)(prev => rows
+        .dropDuplicates("repo", "path", "commit")
+        .join(prev.select("repo", "path", "commit"),
+          Seq("repo", "path", "commit"), "left_anti")
+        .select("repo", "path", "commit", "lang", "content"))
       val docShards = cfg.docShards
       val analyzerName = cfg.analyzer
-      val fresh = newCorpus
-        .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"))
-        .dropDuplicates("repo", "path", "commit")
-        .join(prevDocs.select("repo", "path", "commit"),
-          Seq("repo", "path", "commit"), "left_anti")
-        .select("repo", "path", "commit", "lang", "content")
       fresh
         .repartition(docShards, col("repo"), col("path"), col("commit"))
         .sortWithinPartitions("repo", "path", "commit")
@@ -543,13 +449,12 @@ object IndexBuilder {
         .mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.get().partitionId().toLong
           val md = java.security.MessageDigest.getInstance("SHA-256")
-          var i = offsetsB.value.getOrElse(pid, 0L)
+          var i = offsets.getOrElse(pid, 0L)
           it.map { case (repo, path, commit, lang, content) =>
             val docId = (pid << 40) | i
             i += 1
             md.reset()
-            val sha = toHex(
-              md.digest(content.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+            val sha = toHex(md.digest(content.getBytes(UTF_8)))
             val tfs = graft.analyzer.Analyzers.termFrequencies(analyzerName, content)
             var doclen = 0
             var j = 0
@@ -559,40 +464,47 @@ object IndexBuilder {
         }
         .write.mode(SaveMode.Overwrite).parquet(docsDir)
     }
-    val deltaDocs = spark.read.schema(IndexSchemas.docs).parquet(docsDir)
+    val docs = spark.read.schema(IndexSchemas.docs).parquet(docsDir)
 
-    // ---- stage 2: merged dictionary (old stats + delta partials) ----
-    timed("delta2 dict") {
+    // ---- stage 2: term dictionary / stats ----
+    // Map-side pre-aggregation by hand: each partition folds its tf maps
+    // into one HashMap and emits per-partition (term, df, cf, maxTf)
+    // partials — the exchange carries |vocab| x partitions skinny rows
+    // instead of one row per posting (~160x fewer at code-corpus shapes).
+    stage(2, "dict", dictDir) {
       val saltThreshold = cfg.saltThreshold
       val maxSalts = cfg.maxSalts
       val numSaltsU = udf((df: Long) => Hashing.numSaltsFor(df, saltThreshold, maxSalts))
-      val oldDict = spark.read.schema(IndexSchemas.dict).parquet(prev.dictDir(indexDir))
-        .select(col("term"), col("df"), col("cf"), col("maxTf"),
-          col("numSalts").as("oldSalts"))
-      val delta = dictPartials(spark, deltaDocs)
+      val partials = dictPartials(spark, docs)
         .groupBy("term")
         .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-        .withColumn("oldSalts", lit(null).cast("int"))
-      oldDict.unionByName(delta)
-        .groupBy("term")
-        .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"),
-          max("oldSalts").as("oldSalts"))
-        .withColumn("numSalts", coalesce(col("oldSalts"), numSaltsU(col("df"))))
-        .drop("oldSalts")
-        .write.mode(SaveMode.Overwrite).parquet(dictDir)
+      // a delta merges the base dict's stats; existing terms keep their salt
+      // counts, so every stored segment stays addressable
+      base.fold(partials.withColumn("numSalts", numSaltsU(col("df")))) { prev =>
+        spark.read.schema(IndexSchemas.dict).parquet(prev.dictDir(indexDir))
+          .select(col("term"), col("df"), col("cf"), col("maxTf"),
+            col("numSalts").as("oldSalts"))
+          .unionByName(partials.withColumn("oldSalts", lit(null).cast("int")))
+          .groupBy("term")
+          .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"),
+            max("oldSalts").as("oldSalts"))
+          .withColumn("numSalts", coalesce(col("oldSalts"), numSaltsU(col("df"))))
+          .drop("oldSalts")
+      }.write.mode(SaveMode.Overwrite).parquet(dictDir)
     }
     val dict = spark.read.schema(IndexSchemas.dict).parquet(dictDir)
-    val hotTerms: Map[String, Int] = dict.filter(col("numSalts") > 1)
-      .select("term", "numSalts").as[(String, Int)].collect().toMap
 
-    // ---- stage 3: delta posting segments only ----
-    timed("delta3 segments") {
-      writeSegments(spark, deltaDocs, hotTerms, segmentsDir, cfg.numBuckets,
-        storeNorms)
+    // hot terms: tiny by construction (df > saltThreshold) → driver map
+    val hotTerms: Map[String, Int] = timed("hot-term collect")(dict.filter(col("numSalts") > 1)
+      .select("term", "numSalts").as[(String, Int)].collect().toMap)
+
+    // ---- stage 3: posting segments of this generation's docs ----
+    stage(3, "segments", segmentsDir) {
+      writeSegments(spark, docs, hotTerms, segmentsDir, cfg.numBuckets, storeNorms)
     }
 
-    // ---- stage 4: delta lineage (readers sum across generations) ----
-    timed("delta4 lineage") {
+    // ---- stage 4: per-partition lineage + metrics ----
+    stage(4, "lineage", lineageDir) {
       spark.read.schema(IndexSchemas.segments).parquet(segmentsDir)
         .groupBy("bucket")
         .agg(count(lit(1)).as("numShards"),
@@ -602,25 +514,27 @@ object IndexBuilder {
         .write.mode(SaveMode.Overwrite).parquet(lineageDir)
     }
 
-    // ---- stage 5: global stats over ALL generations + pointer swap ----
-    val statsRow = timed("delta5 stats")(
-      spark.read.schema(IndexSchemas.docs)
-        .parquet((prev.docsDirs(indexDir) :+ docsDir): _*)
-        .agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl"),
-          sum(xxhash64(col("sha256")).cast(DecimalType(38, 0))).as("fp"))
+    // ---- stage 5: stats over every generation + manifest + pointer swap ----
+    val statsRow = timed(s"${mode}5 stats")(
+      spark.read.schema(IndexSchemas.docs).parquet(dirs("docs"): _*).agg(
+        count(lit(1)).as("n"),
+        avg(col("doclen")).as("avgdl"),
+        // order-independent corpus fingerprint over the per-row sha256
+        // invariant; decimal sum avoids ANSI long-overflow at scale
+        sum(xxhash64(col("sha256")).cast(DecimalType(38, 0))).as("fp"))
         .collect()(0))
     val n = statsRow.getLong(0)
     val avgdl = if (statsRow.isNullAt(1)) 0.0 else statsRow.getDouble(1)
     val fp = if (statsRow.isNullAt(2)) 0L
       else statsRow.getDecimal(2).toBigInteger.longValue()
 
-    // sizing totals across ALL contributing generations (manifest union)
-    val sizing = spark.read.schema(IndexSchemas.lineage)
-      .parquet((prev.lineageDirs(indexDir) :+ lineageDir): _*)
+    // sizing totals into the manifest: readers pick their serving tier
+    // with zero Spark jobs at open()
+    val sizing = spark.read.schema(IndexSchemas.lineage).parquet(dirs("lineage"): _*)
       .agg(sum("numShards"), sum("postingBytes")).collect()(0)
     val meta = SnapshotMeta(version, n, avgdl, cfg.numBuckets,
       cfg.saltThreshold, cfg.maxSalts, cfg.k1, cfg.b, fp, hotTerms,
-      baseVersions = prev.allVersions,
+      baseVersions = baseVersions,
       sizedShards = if (sizing.isNullAt(0)) 0L else sizing.getLong(0),
       sizedPostingBytes = if (sizing.isNullAt(1)) 0L else sizing.getLong(1),
       analyzer = cfg.analyzer)

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Time a single SparkEntry contract query: `runMain graft.tools.QueryTime
   * <sfDir> <queryName> [trials]`. Prints per-trial wall seconds and row
-  * count, then the median and minimum over the trials, so per-query
-  * optimizations can be measured without a full Bench or Verify pass. The
+  * count, then the median and minimum over trials 2..n, so per-query
+  * optimizations can be measured without a full Bench or Verify pass.
+  * Trial 1 is a warm-up (it pays seconds of class loading and JIT) and is
+  * left out of the summary, so at least 2 trials are required. The
   * session uses Bench's settings (AQE on, 4 MiB max partition bytes,
   * 256 KiB open cost), so a query timed here runs the plan Bench runs.
   */
@@ -15,7 +17,7 @@ object QueryTime {
     val name = args(1)
     val trials = args.lift(2).filter(_.forall(_.isDigit))
       .map(_.toInt).getOrElse(3)
-    require(trials >= 1, s"trials must be >= 1: $trials")
+    require(trials >= 2, s"trials must be >= 2 (trial 1 is a warm-up): $trials")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,9 +40,10 @@ object QueryTime {
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[querytime] $name trial $i: $sec%.2f s ($n rows)")
+        val warm = if (i == 1) " (warm-up)" else ""
+        println(f"[querytime] $name trial $i$warm: $sec%.2f s ($n rows)")
         sec
-      }.sorted
+      }.tail.sorted
       val mid = secs.length / 2
       val median =
         if (secs.length % 2 == 1) secs(mid) else (secs(mid - 1) + secs(mid)) / 2

@@ -137,6 +137,64 @@ class EngineSpec extends SparkTestBase {
       Searcher.resolve(spark, dirDelta, "import"), 10).nonEmpty)
   }
 
+  /** sha-256 over the sorted rows of the current dict, the docs (tfs
+    * sorted by term) and segments (postings bytes as hex) of every
+    * generation in the chain, and the current manifest JSON. */
+  private def indexDigest(dir: String): String = {
+    import org.apache.spark.sql.Row
+    val meta = Snapshot.load(dir).get
+    def rows(df: org.apache.spark.sql.DataFrame)(f: Row => String): Seq[String] =
+      df.collect().toSeq.map(f).sorted
+    val dict = rows(spark.read.schema(IndexSchemas.dict)
+      .parquet(meta.dictDir(dir)))(_.mkString("|"))
+    val gens = meta.allVersions.flatMap { v =>
+      val docs = rows(spark.read.schema(IndexSchemas.docs)
+        .parquet(s"$dir/v$v/docs")) { r =>
+        val tfs = r.getMap[String, Int](6).toSeq.sorted.mkString(",")
+        (0 until 6).map(r.get).mkString("|") + s"|$tfs|${r.getInt(7)}"
+      }
+      val segs = rows(spark.read.schema(IndexSchemas.segments)
+        .parquet(s"$dir/v$v/segments")) { r =>
+        val hex = r.getAs[Array[Byte]](5).map(b => f"${b & 0xff}%02x").mkString
+        (0 until 5).map(r.get).mkString("|") + s"|$hex|${r.getInt(6)}"
+      }
+      s"v$v docs" +: docs ++: s"v$v segments" +: segs
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.digest(((dict ++ gens) :+ meta.toJson).mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("output pin: full and full-plus-delta builds write fixed bytes (b = 0 and b > 0)") {
+    // Constants computed when full and delta builds had separate stage
+    // bodies; any change to docIds, dict stats, frozen salt counts,
+    // posting bytes or manifest fields shows here. The delta corpus
+    // repeats every key (dedup) and includes the base keys (anti-join);
+    // at this threshold some terms are hot at v1 and others cross it in
+    // the delta (frozen salts).
+    val expected = Map(
+      (0.0, "full") -> "0c61f13373f9b6dd43641ea9441e13e96ae603769faf3fecbf59151630dce4d9",
+      (0.0, "delta") -> "88a2ba57e70858dbf12a8395caf61e8467a8ce9c81dc04d517d224129e72bb8d",
+      (0.75, "full") -> "e861287a25c86476f07e6cc5df17dc5c1d5e1d50303ce9db04763e0e3e70b239",
+      (0.75, "delta") -> "42bacdb0307a043be281478c84c4394a498b63ea5b43a3b4d9e2297e88f3d848")
+    val got = Seq(0.0, 0.75).flatMap { b =>
+      val cfg = IndexConfig(numBuckets = 4, saltThreshold = 300L, maxSalts = 8, b = b)
+      val dir = tmpDir("graft-pin")
+      val m1 = IndexBuilder.build(CodeCorpus.generate(spark, 400L, seed = 5L), dir, cfg)
+      val full = indexDigest(dir)
+      val c2 = CodeCorpus.generate(spark, 800L, seed = 5L)
+      val m2 = IndexBuilder.buildDelta(c2.unionByName(c2), dir, cfg)
+      assert(m2.baseVersions == Seq(1) && m2.numDocs == 800)
+      assert(m1.hotTerms.nonEmpty)
+      assert(spark.read.schema(IndexSchemas.dict).parquet(m2.dictDir(dir))
+        .filter(col("df") > 300L && col("numSalts") === 1).count() > 0,
+        "some term crosses the threshold in the delta and keeps one salt")
+      Seq((b, "full") -> full, (b, "delta") -> indexDigest(dir))
+    }.toMap
+    assert(got == expected)
+  }
+
   test("compaction re-salts terms that became hot mid-delta-chain") {
     import spark.implicits._
     val cfg = IndexConfig(numBuckets = 8, saltThreshold = 600L, maxSalts = 8)
@@ -399,6 +457,35 @@ class EngineSpec extends SparkTestBase {
       versionOpt = Some(m1.version))
     assert(m1b.numDocs == m1.numDocs)
     assert(docsFile.lastModified() == before, "docs stage should not rerun")
+
+    // a delta that crashed after its stages but before the commit resumes
+    // too: un-commit v2 and re-run the same delta
+    val corpus2 = CodeCorpus.generate(spark, 250, seed = 3L)
+    val m2 = IndexBuilder.buildDelta(corpus2, dir, IndexConfig(numBuckets = 2))
+    assert(m2.version == 2 && m2.numDocs == 250)
+    def uncommitV2(): Unit = {
+      Snapshot.commit(dir, m1)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "meta", "v2.json"))
+    }
+    uncommitV2()
+    val docs2 = new java.io.File(s"$dir/v2/docs")
+    val before2 = docs2.lastModified()
+    Thread.sleep(20)
+    val m2b = IndexBuilder.buildDelta(corpus2, dir, IndexConfig(numBuckets = 2))
+    assert(m2b.version == 2 && m2b.baseVersions == Seq(1))
+    assert(m2b.numDocs == m2.numDocs)
+    assert(m2b.corpusFingerprint == m2.corpusFingerprint)
+    assert(docs2.lastModified() == before2, "delta docs stage should not rerun")
+
+    // a full build at the same version number must not reuse the delta's
+    // stages (their token names base v1): v2/docs holds only the 100 new
+    // docs, the full build indexes all 250
+    uncommitV2()
+    val m2f = IndexBuilder.build(corpus2, dir, IndexConfig(numBuckets = 2),
+      versionOpt = Some(2))
+    assert(m2f.baseVersions.isEmpty && m2f.numDocs == 250)
+    assert(spark.read.parquet(s"$dir/v2/docs").count() == 250)
+    assert(m2f.corpusFingerprint == m2.corpusFingerprint)
   }
 
   test("queries with no matching terms return empty") {
