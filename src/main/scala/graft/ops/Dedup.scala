@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.CrossHash
 
@@ -1056,7 +1057,14 @@ object Dedup {
         .repartition(col("id"))
         .localCheckpoint(true)
       converged = next.filter(col("label") =!= col("prev")).isEmpty
-      labels = next.select(col("id"), col("label"))
+      // a further round plans against an unknown size: the estimate the
+      // checkpoint carries over compounds every round (a join's estimate is
+      // the product of its children's), and a graph needing a few dozen
+      // rounds spent minutes planning, not seconds. Already the seed's
+      // estimate is past any broadcast threshold, so the joins plan as
+      // before; converged labels go back to the caller untouched
+      labels = (if (converged) next else Bridge.withUnknownSize(next))
+        .select(col("id"), col("label"))
       iter += 1
       if (log.isDebugEnabled)
         log.debug(f"connectedComponents round $iter: " +

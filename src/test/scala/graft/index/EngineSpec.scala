@@ -306,7 +306,7 @@ class EngineSpec extends SparkTestBase {
     assert(dRq.terms.toSet == cRq.terms.toSet, "fuzzy expansion differs across tiers")
   }
 
-  test("shard-cache policy: LRU keeps the re-hit term resident, FIFO cycles it") {
+  test("shard-cache policy: LRU keeps the re-hit term resident") {
     import graft.query.IndexReader
     val terms = Seq("parser", "codec", "builder")
     // size each term's resident shard bytes with an unbounded cache
@@ -321,17 +321,12 @@ class EngineSpec extends SparkTestBase {
     // any two terms fit, all three never — the regime where policy matters
     val budget = sizes.sum - sizes.min
     val accesses = Seq(0, 1, 0, 2, 0, 1, 0, 2, 0).map(terms)
-    def run(lru: Boolean): (Long, Long) = {
-      val r = IndexReader.open(spark, indexDir,
-        IndexReader.ReaderConfig(0, 0, budget, shardCacheLru = lru))
-      accesses.foreach(q => r.searchHits(r.resolve(q), 10))
-      r.shardCacheStats
-    }
-    // LRU: every re-access of term 0 after the first is a hit (4h/5m);
-    // FIFO: insertion order evicts term 0 while it is still the hottest
-    // (2h/7m). Exact traces — the budget admits exactly two terms.
-    assert(run(lru = true) == ((4L, 5L)), "LRU should keep the head term")
-    assert(run(lru = false) == ((2L, 7L)), "FIFO should cycle the head term")
+    val r = IndexReader.open(spark, indexDir, IndexReader.ReaderConfig(0, 0, budget))
+    accesses.foreach(q => r.searchHits(r.resolve(q), 10))
+    // every re-access of term 0 after the first is a hit (4h/5m), where
+    // insertion order would evict term 0 while it is still the hottest
+    // (2h/7m). Exact trace — the budget admits exactly two terms.
+    assert(r.shardCacheStats == ((4L, 5L)), "LRU should keep the head term")
   }
 
   test("shard cache is safe under concurrent queries (LRU bump + evict race)") {
@@ -345,8 +340,7 @@ class EngineSpec extends SparkTestBase {
     val cached = IndexReader.open(spark, indexDir)
     val expected = querySet.map(q =>
       q -> cached.searchHits(cached.resolve(q), 20).toSeq).toMap
-    val r = IndexReader.open(spark, indexDir,
-      IndexReader.ReaderConfig(0, 0, 64L << 10, shardCacheLru = true))
+    val r = IndexReader.open(spark, indexDir, IndexReader.ReaderConfig(0, 0, 64L << 10))
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
@@ -363,6 +357,32 @@ class EngineSpec extends SparkTestBase {
     } finally pool.shutdown()
     val (h, m) = r.shardCacheStats
     assert(h + m > 0, "the coordinator path was actually exercised")
+  }
+
+  test("reader cache lets a superseded snapshot go") {
+    import graft.query.IndexReader
+    // scatter-gather tier: each searched reader persists its segments, so
+    // a cache that keeps superseded readers grows one persisted RDD per
+    // commit
+    val dir = tmpDir("graft-reader-cache")
+    val cfg = IndexConfig(numBuckets = 2)
+    val sg = IndexReader.ReaderConfig(0, 0, 0)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val readers = (1 to 4).map { v =>
+      val corpus = CodeCorpus.generate(spark, 100L * v, seed = 3L)
+      if (v == 1) IndexBuilder.build(corpus, dir, cfg)
+      else IndexBuilder.buildDelta(corpus, dir, cfg)
+      val r = IndexReader.open(spark, dir, sg)
+      assert(r.meta.version == v)
+      val hits = r.searchHits(r.resolve("import"), 1000).toSeq
+      assert(hits.nonEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.size - before == 1,
+        s"persisted RDDs after version $v")
+      (r, hits)
+    }
+    // a superseded reader still answers from its own generation's files
+    val (first, firstHits) = readers.head
+    assert(first.searchHits(first.resolve("import"), 1000).toSeq == firstHits)
   }
 
   test("fuzzy search matches oracle and finds misspellings") {

@@ -1435,6 +1435,48 @@ class OpsSpec extends SparkTestBase {
     assert(capped.getMessage.contains("maxIter = 1"))
   }
 
+  test("connected components ≡ an in-JVM union-find over random graphs") {
+    // seeded graphs on shuffled, non-contiguous ids: a path of 40–59 nodes
+    // (the propagation worst case, laid out in random id order), small
+    // random trees, isolated pairs, and duplicate and reversed edges.
+    // maxIter is above the path length, which bounds the round count: on
+    // random-id paths this long min-label propagation with one pointer
+    // jump can need more than the default 25 rounds, and this property
+    // pins the labels, not the round count
+    val maxIter = 64
+    def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.toSeq.map(x => x -> find(x)).toMap
+    }
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((0 until 1000).map(i => i * 7L + 3)).iterator
+      val path = Seq.fill(40 + rnd.nextInt(20))(ids.next())
+      val trees = Seq.fill(4) {
+        val nodes = Seq.fill(2 + rnd.nextInt(7))(ids.next())
+        nodes.indices.tail.map(i => (nodes(rnd.nextInt(i)), nodes(i)))
+      }.flatten
+      val isolated = Seq.fill(3)((ids.next(), ids.next()))
+      val edges = path.zip(path.tail) ++ trees ++ isolated
+      val noisy = rnd.shuffle(edges ++ edges.take(10) ++
+        edges.filter(_ => rnd.nextBoolean()).map(_.swap))
+      val got = Dedup.connectedComponents(noisy.toDF("idA", "idB"), "idA", "idB",
+        maxIter).as[(Long, Long)].collect().toMap
+      assert(got == unionFindLabels(noisy), s"seed $seed")
+      assert(got.groupBy(_._2).forall { case (label, members) =>
+        members.keys.min == label }, s"seed $seed: labels are component minima")
+      assert(got(path.head) == path.min, s"seed $seed: the path is one component")
+    }
+  }
+
   test("brute knn cosine: self is top hit with score 1") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),

@@ -1,0 +1,54 @@
+package graft.tools
+
+import graft.SparkTestBase
+
+/** Smoke coverage for the measurement probe. Every mode runs through
+  * `Probe.run` on the shared test session; `main` is only called with
+  * arguments it must reject, because once past its checks it stops the
+  * session it gets.
+  */
+class ProbeSpec extends SparkTestBase {
+
+  private val sfDir = "/root/testdata/sf0.001"
+
+  private def output(args: String*): Seq[String] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(Probe.run(spark, args))
+    buf.toString("UTF-8").linesIterator.toSeq
+  }
+
+  test("time: pass 1 is a warm-up, then median and minimum") {
+    val out = output("time", sfDir, "2", "q_window_rank")
+    assert(out.exists(l => l.contains("pass 1 (warm-up)") && l.contains("q_window_rank")), out)
+    assert(out.exists(l => l.contains("pass 2 ") && l.endsWith("ok")), out)
+    assert(out.exists(l => l.contains("q_window_rank median") && l.contains(" min ")), out)
+  }
+
+  test("plan: writes the formatted physical plan per query") {
+    val dir = tmpDir("graft-probe-plan")
+    val out = output("plan", sfDir, dir, "smoke", "q_window_rank")
+    assert(out.exists(_.contains("wrote plan q_window_rank")), out)
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "q_window_rank_smoke.txt")), "UTF-8")
+    assert(text.contains("Physical Plan"))
+  }
+
+  test("jobs: every job line prints before the total") {
+    val out = output("jobs", sfDir, "q_window_rank")
+    val total = out.indexWhere(_.contains("q_window_rank total"))
+    val built = out.indexWhere(_.contains("plan built"))
+    assert(built >= 0 && total > built, out)
+    // the final collect runs at least one job, listed between the two
+    assert(out.slice(built, total).exists(_.startsWith("[job]")), out)
+    assert(out.drop(total + 1).forall(!_.startsWith("[job]")), out)
+    // each job names its call site ("collect at Probe.scala:…")
+    assert(out.filter(_.startsWith("[job]")).forall(_.contains(" at ")), out)
+  }
+
+  test("main rejects bad arguments before a session starts") {
+    for (args <- Seq(Seq("time", sfDir, "1"), Seq("time", sfDir, "x"),
+        Seq("jobs", sfDir, "no_such_query"), Seq("plan", sfDir), Seq("explain")))
+      intercept[IllegalArgumentException](Probe.main(args.toArray))
+    assert(!spark.sparkContext.isStopped)
+  }
+}
