@@ -305,8 +305,11 @@ object IndexBuilder {
 
   /** Incremental (delta) build — the streaming-scale path: index ONLY
     * `newCorpus` as generation N+1 LAYERED on the current snapshot instead
-    * of rebuilding everything (per-batch full rebuild is O(corpus); a delta
-    * is O(batch)). With no snapshot yet this is a full build.
+    * of rebuilding everything. Only the postings are O(batch): stage 1's
+    * offsets job groups every base generation's docs, stage 2 rewrites the
+    * whole dictionary and stage 5 re-reads every generation's docs for the
+    * stats, so a delta still scans the base's docs and dictionary. With no
+    * snapshot yet this is a full build.
     *
     * Contract (same on-disk format, manifest-union semantics):
     *  - new docs continue each docShard's dense rank (per-shard base offsets

@@ -839,34 +839,42 @@ object Dedup {
     corpus.join(bad, Seq(idCol), "left_anti")
   }
 
+  /** Distinct (doc_id, p): every token position covered by a cross-document
+    * duplicated L-token window — the shared plan of [[duplicateSpanCoverage]]
+    * and [[trimDuplicateSpans]]. The hash-surviving candidate windows
+    * materialize ONCE and feed BOTH the exact gram aggregation and the
+    * covered-position join (the corpus-wide window stream itself is never
+    * persisted — only windows whose 8-byte hash already occurs in >= minDocs
+    * documents, the duplication-bounded set; round 5 recomputed the full
+    * window UDF scan for the join, a third pass over the corpus). A window
+    * joins the duplicated-gram set by exact gram text; covered positions
+    * explode per surviving window only.
+    */
+  private def dupCoveredPositions(df: DataFrame, textCol: String, idCol: String,
+      windowTokens: Int, minDocs: Int): DataFrame = {
+    require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
+    val cand = dupCandidateWindows(df, textCol, idCol, windowTokens, minDocs)
+      .localCheckpoint(true)
+    val dupGrams = dupGramAgg(cand, minDocs).select("gram")
+    cand.join(dupGrams, "gram")
+      .select(col("doc_id"),
+        explode(sequence(col("pos"),
+          col("pos") + lit(windowTokens - 1))).as("p"))
+      .distinct()
+  }
+
   /** Per-document duplicate-substring coverage: how many of a document's
     * token positions fall inside at least one cross-document duplicated
     * L-token window ([[duplicateSubstrings]]) — the contamination score
     * substring-level dedup acts on (drop or trim documents whose
     * duplicated fraction is high). Output `(doc_id, n_tokens,
     * n_dup_tokens)`; the fraction is left to the caller so every column
-    * stays integral (cross-engine-exact).
-    *
-    * Shape: the hash-surviving candidate windows materialize ONCE and feed
-    * BOTH the exact gram aggregation and the covered-position join (the
-    * corpus-wide window stream itself is never persisted — only windows
-    * whose 8-byte hash already occurs in >= minDocs documents, the
-    * duplication-bounded set; round 5 recomputed the full window UDF scan
-    * for the join, a third pass over the corpus). A window joins the
-    * duplicated-gram set by exact gram text; covered positions explode per
-    * surviving window only, then one distinct + count per document.
+    * stays integral (cross-engine-exact). Shape: [[dupCoveredPositions]],
+    * then one count per document.
     */
   def duplicateSpanCoverage(df: DataFrame, textCol: String, idCol: String,
       windowTokens: Int = 8, minDocs: Int = 2): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
-    val cand = dupCandidateWindows(df, textCol, idCol, windowTokens, minDocs)
-      .localCheckpoint(true)
-    val dupGrams = dupGramAgg(cand, minDocs).select("gram")
-    val covered = cand.join(dupGrams, "gram")
-      .select(col("doc_id"),
-        explode(sequence(col("pos"),
-          col("pos") + lit(windowTokens - 1))).as("p"))
-      .distinct()
+    val covered = dupCoveredPositions(df, textCol, idCol, windowTokens, minDocs)
       .groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_dup_tokens"))
     val toks = filter(split(col(textCol), "\\s+"), x => x =!= "")
     val nt = df.select(col(idCol).as("doc_id"),
@@ -888,26 +896,17 @@ object Dedup {
     * matches [[duplicateSpanCoverage]] exactly, so trim-vs-score stays
     * consistent.
     *
-    * Shape: covered positions aggregate to one per-doc int array
-    * (bounded by doc length), which joins back by id — only CONTAMINATED
-    * documents appear on that side, so at web scale (duplication is the
-    * exception) AQE broadcasts it and the corpus text never shuffles.
+    * Shape: the covered positions of [[dupCoveredPositions]] aggregate to
+    * one per-doc int array (bounded by doc length), which joins back by id
+    * — only CONTAMINATED documents appear on that side, so at web scale
+    * (duplication is the exception) AQE broadcasts it and the corpus text
+    * never shuffles.
     * The positional filter is an array_contains per token; fine while
     * covered arrays are doc-bounded (they are, by construction).
     */
   def trimDuplicateSpans(df: DataFrame, textCol: String, idCol: String,
       windowTokens: Int = 8, minDocs: Int = 2): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
-    // shared candidate phase materialized once for the gram aggregation
-    // and the covered-position join — see duplicateSpanCoverage
-    val cand = dupCandidateWindows(df, textCol, idCol, windowTokens, minDocs)
-      .localCheckpoint(true)
-    val dupGrams = dupGramAgg(cand, minDocs).select("gram")
-    val covered = cand.join(dupGrams, "gram")
-      .select(col("doc_id"),
-        explode(sequence(col("pos"),
-          col("pos") + lit(windowTokens - 1))).as("p"))
-      .distinct()
+    val covered = dupCoveredPositions(df, textCol, idCol, windowTokens, minDocs)
       .groupBy("doc_id").agg(collect_set(col("p")).as("covered"))
     val toks = filter(split(col(textCol), "\\s+"), x => x =!= "")
     df.select(col(idCol).as("doc_id"), toks.as("toks"))

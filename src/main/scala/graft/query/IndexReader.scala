@@ -12,27 +12,33 @@ import scala.collection.concurrent.TrieMap
 
 /** An opened snapshot, ready to serve queries.
   *
-  * Two-tier serving (the ES analogy: a coordinating node with hot shards):
-  *  - indexes whose dictionary and postings fit a configurable driver budget
-  *    are cached in driver memory at open() → queries are pure in-process
-  *    WAND, no Spark job, millisecond latency;
-  *  - larger indexes keep the dictionary as a parquet-pushdown lookup and
-  *    run scatter-gather WAND over a PERSISTED segments Dataset (cached in
-  *    executor memory after first touch) — one narrow job + one small
+  * Three serving tiers (the ES analogy: a coordinating node with hot
+  * shards):
+  *  - driver-cached: an index whose dictionary and postings fit the driver
+  *    budgets (sized from the manifest at open()) is held in driver memory
+  *    → queries are pure in-process WAND, no Spark job, millisecond latency;
+  *  - coordinator: a larger index resolves terms from the in-memory
+  *    dictionary when its vocabulary fits (parquet pushdown otherwise), and
+  *    the first query touching a term fetches its shards into a
+  *    byte-budgeted LRU cache; repeats serve driver-locally;
+  *  - scatter-gather: terms past that budget (or a disabled cache) run WAND
+  *    over a PERSISTED segments Dataset — one narrow job + one small
   *    shuffle per query, no file IO after warm-up.
   *
-  * Both tiers run the identical Wand.topK kernel, so results are
-  * bit-identical regardless of tier (tested in EngineSpec).
+  * All tiers run the identical Wand.topK kernel, so results are
+  * bit-identical regardless of tier (tested in EngineSpec). The driver
+  * tier also serves in-memory entity detection (surface.LocalDetector),
+  * which adds the lazily read `forwardIndex`.
   */
 final class IndexReader private (
     spark: SparkSession,
     val indexDir: String,
     val meta: SnapshotMeta,
     cfg: IndexReader.ReaderConfig,
-    dictMap: Option[Map[String, Searcher.TermStats]],
-    segMap: Option[Map[(String, Int), Seq[IndexReader.SegShard]]]) {
+    private[graft] val dictMap: Option[Map[String, Searcher.TermStats]],
+    private[graft] val segMap: Option[Map[(String, Int), Seq[IndexReader.SegShard]]]) {
 
-  import IndexReader.SegShard
+  import IndexReader.{DocEntry, SegShard}
 
   val bm25: BM25 = BM25(meta.k1, meta.b)
 
@@ -55,6 +61,21 @@ final class IndexReader private (
     ds
   }
   @volatile private var persisted: Option[Dataset[_]] = None
+
+  /** docId → (repo, path, commit, lang, indexed terms): read on first use,
+    * once per snapshot, and dropped with this reader when a commit
+    * supersedes it. Only in-memory detection reads it, so a reader that
+    * never serves one never pays for it.
+    */
+  private[graft] lazy val forwardIndex: Map[Long, DocEntry] = {
+    import spark.implicits._
+    spark.read.schema(graft.index.IndexSchemas.docs)
+      .parquet(meta.docsDirs(indexDir): _*)
+      .select("docId", "repo", "path", "commit", "lang", "tfs")
+      .as[(Long, String, String, String, String, Map[String, Int])].collect()
+      .map(r => r._1 -> DocEntry(r._2, r._3, r._4, r._5, r._6.keys.toArray))
+      .toMap
+  }
 
   /** Unpersist the segments once a newer snapshot supersedes this one. A
     * caller still holding the reader keeps working: it re-reads its
@@ -172,28 +193,9 @@ final class IndexReader private (
   /** Bytes currently resident in the term-shard cache. */
   def shardCacheBytesUsed: Long = shardCacheBytes.get()
 
-  /** All shard rows (term, salt, numSalts, maxTf, postings) for `terms`,
-    * driver-local, if this reader can serve them without a per-query job:
-    * from the in-memory segment map on the cached tier, else through the
-    * shard cache within its byte budget — the union term set of a bulk
-    * call is fetched in ONE pushdown job (J1), where per-query calls would
-    * pay one narrow job per query that brings a novel term. None → caller
-    * should use the distributed path.
+  /** All shard rows (term, salt, numSalts, maxTf, postings) for `termNames`
+    * through the shard cache; None when a term is past its byte budget.
     */
-  private[graft] def bulkShards(terms: Seq[String]):
-      Option[Seq[(String, Int, Int, Int, Array[Byte])]] = {
-    val distinct = terms.distinct
-    segMap match {
-      case Some(m) =>
-        val tset = distinct.toSet
-        Some(m.toSeq.collect { case ((t, salt), shards) if tset(t) =>
-          shards.map(s => (t, salt, s.numSalts, s.maxTf, s.postings))
-        }.flatten)
-      case None if cfg.maxQueryShardCacheBytes > 0 => fetchShardsByName(distinct)
-      case None => None
-    }
-  }
-
   private def fetchShardsByName(termNames: Seq[String]):
       Option[Seq[(String, Int, Int, Int, Array[Byte])]] = {
     import spark.implicits._
@@ -309,6 +311,10 @@ final class IndexReader private (
 object IndexReader {
 
   final case class SegShard(numSalts: Int, maxTf: Int, postings: Array[Byte])
+
+  /** One forward-index row: a document's stored fields and indexed terms. */
+  final case class DocEntry(repo: String, path: String, commit: String,
+      lang: String, terms: Array[String])
 
   /** Driver-cache budgets: vocabulary entries and posting bytes. Above
     * either limit the reader serves from the distributed tier.

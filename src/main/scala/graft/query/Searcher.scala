@@ -205,7 +205,8 @@ object Searcher {
     */
   def resolveHits(spark: SparkSession, indexDir: String, hits: DataFrame): DataFrame = {
     import spark.implicits._
-    val meta = Snapshot.load(indexDir).get
+    val meta = Snapshot.load(indexDir)
+      .getOrElse(throw new IllegalStateException(s"no snapshot at $indexDir"))
     val hitRows = hits.select("rank", "doc_id", "score").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     val fetched: Map[Long, (String, String, String, String, String)] =

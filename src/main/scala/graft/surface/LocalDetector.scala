@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.analyzer.{Analyzer, Analyzers}
-import graft.index.{IndexSchemas, Posting, PostingCodec, Snapshot, SnapshotMeta}
-import graft.query.{BM25, FuzzyExpand, Searcher}
+import graft.index.{Posting, PostingCodec, SnapshotMeta}
+import graft.query.{BM25, FuzzyExpand, IndexReader, Searcher}
 
 import scala.collection.mutable
 
@@ -14,12 +14,16 @@ import scala.collection.mutable
   *
   *   - the request path: TextSurface.searchVariantsBulk scores a `/v2/text`
   *     request's messages on the driver through `scoreMessage` over the
-  *     store's `cached` index — no Spark job per request;
+  *     store's `cached` view — no Spark job per request;
   *   - the corpus path: `detect` broadcasts the (tiny, by construction)
-  *     index ONCE and each partition runs the full chatbot_ner detection
+  *     view ONCE and each partition runs the full chatbot_ner detection
   *     lifecycle — analyze → fuzzy resolve → BM25 variant scoring → R1
   *     coverage → R2/R3 greedy spans — locally, in one Spark job with zero
   *     driver-side collection.
+  *
+  * The view is the store's opened IndexReader: its driver-tier dictionary
+  * and segment maps, plus its forward index. The reader cache is the only
+  * per-store cache, so a commit supersedes both at once.
   *
   * The corpus path is the 100-TB shape of the reference's detect_bulk
   * (ner_v2/detectors/textual/text_detection.py:562-775): the reference caps
@@ -35,70 +39,53 @@ import scala.collection.mutable
   */
 object LocalDetector {
 
+  /** Posting-byte budget of a store scored in memory. Tighter than the
+    * reader's driver-tier budget because it also bounds the forward index,
+    * which the reader's budget does not count.
+    */
   private val MaxPostingBytes = 256L << 20
 
-  final case class DocEntry(entity: String, value: String, variant: String,
-      variantTerms: Array[String], lang: String)
-
-  /** A broadcastable snapshot of a dictionary index. */
+  /** A broadcastable view of one opened reader's driver tier. In a
+    * dictionary index a doc's (repo, path, commit) hold its (entity, value,
+    * variant) — see EntityStore.
+    */
   final case class LocalIndex(
       meta: SnapshotMeta,
       dict: Map[String, Searcher.TermStats],
-      segs: Map[(String, Int), Seq[Array[Byte]]],
-      docs: Map[Long, DocEntry]) extends Serializable
+      segs: Map[(String, Int), Seq[IndexReader.SegShard]],
+      docs: Map[Long, IndexReader.DocEntry]) extends Serializable
 
-  /** Load a committed snapshot wholly into driver memory. Guarded: refuses
-    * an index above `maxPostingBytes` (use the distributed Searcher tier
-    * for corpus-scale indexes; entity dictionaries are small).
+  /** The view of `reader`, when it holds its snapshot on the driver tier
+    * and the manifest records at most `maxPostingBytes` of postings.
+    */
+  private def view(reader: IndexReader, maxPostingBytes: Long): Option[LocalIndex] = {
+    val pBytes = reader.meta.sizedPostingBytes
+    for {
+      dict <- reader.dictMap
+      segs <- reader.segMap if pBytes >= 0 && pBytes <= maxPostingBytes
+    } yield LocalIndex(reader.meta, dict, segs, reader.forwardIndex)
+  }
+
+  /** The in-memory view of the current snapshot of `storeDir`. Guarded:
+    * refuses an index above `maxPostingBytes` or off the reader's driver
+    * tier (use the distributed Searcher tier for corpus-scale indexes;
+    * entity dictionaries are small).
     */
   def load(spark: SparkSession, storeDir: String,
       maxPostingBytes: Long = MaxPostingBytes): LocalIndex = {
-    import spark.implicits._
-    val meta = Snapshot.load(storeDir)
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $storeDir"))
-    val pBytes =
-      if (meta.sizedPostingBytes >= 0) meta.sizedPostingBytes
-      else {
-        val sizing = spark.read.schema(IndexSchemas.lineage)
-          .parquet(meta.lineageDirs(storeDir): _*)
-          .agg(org.apache.spark.sql.functions.sum("postingBytes")).collect()(0)
-        if (sizing.isNullAt(0)) 0L else sizing.getLong(0)
-      }
-    require(pBytes <= maxPostingBytes,
-      s"dictionary index at $storeDir has $pBytes posting bytes > " +
-        s"$maxPostingBytes broadcast budget — use the distributed tier")
-    val dict = spark.read.schema(IndexSchemas.dict).parquet(meta.dictDir(storeDir))
-      .select("term", "df", "maxTf", "numSalts")
-      .as[(String, Long, Int, Int)].collect()
-      .map(r => r._1 -> Searcher.TermStats(r._1, r._2, r._3, r._4)).toMap
-    val segs = IndexSchemas
-      .readSegments(spark, meta.segmentsDirs(storeDir))
-      .select("term", "salt", "postings")
-      .as[(String, Int, Array[Byte])].collect()
-      .groupBy(r => (r._1, r._2))
-      .view.mapValues(_.map(_._3).toSeq).toMap
-    val docs = spark.read.schema(IndexSchemas.docs)
-      .parquet(meta.docsDirs(storeDir): _*)
-      .select("docId", "repo", "path", "commit", "lang", "tfs")
-      .as[(Long, String, String, String, String, Map[String, Int])].collect()
-      .map(r => r._1 -> DocEntry(r._2, r._3, r._4, r._6.keys.toArray, r._5))
-      .toMap
-    LocalIndex(meta, dict, segs, docs)
+    val reader = IndexReader.open(spark, storeDir)
+    view(reader, maxPostingBytes).getOrElse(throw new IllegalArgumentException(
+      s"dictionary index at $storeDir has ${reader.meta.sizedPostingBytes} " +
+        s"posting bytes (budget $maxPostingBytes) or is past the reader's " +
+        "driver tier — use the distributed tier"))
   }
 
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, LocalIndex]()
-
-  /** The current snapshot of `storeDir` in driver memory: loaded on the
-    * first call after each commit, one entry per store, replaced when the
-    * snapshot pointer moves. None when the store has no snapshot, or its
-    * manifest records no posting size or one above `load`'s default budget —
-    * such stores are served by the distributed plan.
+  /** The current snapshot of `storeDir` in driver memory, or None when it
+    * is past `load`'s default budget — such stores are served by the
+    * relational plan. Throws when the store has no snapshot.
     */
   def cached(spark: SparkSession, storeDir: String): Option[LocalIndex] =
-    Snapshot.load(storeDir)
-      .filter(m => m.sizedPostingBytes >= 0 && m.sizedPostingBytes <= MaxPostingBytes)
-      .map(meta => loaded.compute(storeDir, (_, old) =>
-        if (old != null && old.meta == meta) old else load(spark, storeDir)))
+    view(IndexReader.open(spark, storeDir), MaxPostingBytes)
 
   /** Scored variant hits for one message, in memory: the in-memory twin of
     * TextSurface.searchVariantsDistributed — same resolution (the index's
@@ -126,7 +113,7 @@ object LocalDetector {
       val postings = termCache.getOrElseUpdate(t.term, {
         (0 until t.numSalts).iterator
           .flatMap(s => idx.segs.getOrElse((t.term, s), Nil).iterator)
-          .flatMap(PostingCodec.decode(_).iterator)
+          .flatMap(shard => PostingCodec.decode(shard.postings).iterator)
           .toArray
       })
       var i = 0
@@ -142,10 +129,10 @@ object LocalDetector {
 
     scores.iterator.flatMap { case (docId, score) =>
       idx.docs.get(docId).iterator
-        .filter(de => entities.contains(de.entity) &&
+        .filter(de => entities.contains(de.repo) &&
           (languages.isEmpty || languages.contains(de.lang)))
-        .filter(de => de.variantTerms.forall(matched(docId).contains))
-        .map(de => (TextSurface.VariantHit(de.entity, de.value, de.variant, score), docId))
+        .filter(de => de.terms.forall(matched(docId).contains))
+        .map(de => (TextSurface.VariantHit(de.repo, de.path, de.commit, score), docId))
     }.toArray
       .sortBy { case (h, docId) => (-h.score, docId) }
       .take(size)

@@ -23,9 +23,11 @@ import graft.query.{BM25, IndexReader, Searcher}
   * highlights. Filter clauses do not contribute to the BM25 score (filter
   * context); idf is index-global — both reproduced here.
   *
-  * Scoring runs on the driver, from LocalDetector's cached in-memory index,
-  * when the store's postings fit its budget (entity dictionaries do), and
-  * as one relational Spark plan otherwise; both give bit-identical hits.
+  * Scoring runs on the driver, from the store's IndexReader through
+  * LocalDetector's in-memory view, when the reader holds the store on its
+  * driver tier and its postings fit LocalDetector's budget (entity
+  * dictionaries do), and as one relational Spark plan otherwise; both give
+  * bit-identical hits.
   */
 object TextSurface {
 
@@ -133,9 +135,9 @@ object TextSurface {
 
   /** Scored variant hits per message: the engine half (steps 4-8 of the
     * reference lifecycle), the msearch batch fusion (reference
-    * elastic_search.py:153-163, rewrite noted at SURVEY §4.1). A store whose
-    * postings fit LocalDetector's budget is scored on the driver from its
-    * cached in-memory index, with no Spark job; a larger one runs the
+    * elastic_search.py:153-163, rewrite noted at SURVEY §4.1). A store that
+    * LocalDetector can view in memory is scored on the driver, with no
+    * Spark job once its forward index is read; any other store runs the
     * relational plan of `searchVariantsDistributed`.
     */
   def searchVariantsBulk(spark: SparkSession, storeDir: String,
@@ -158,12 +160,12 @@ object TextSurface {
   }
 
   /** The relational plan of searchVariantsBulk: ALL messages' terms resolve
-    * once, the postings of the union term set decode in ONE pass, and
-    * scoring fans back out per message via a broadcast (message, term)
-    * join → per-doc score + matched-term set → join the (filtered) forward
-    * index with parquet pushdown on entity/language → R1 full-coverage →
-    * top `size` per message by score. One job for N messages instead of N
-    * jobs.
+    * once, the postings of the union term set decode in ONE pass over the
+    * segments parquet with the terms pushed down, and scoring fans back out
+    * per message via a broadcast (message, term) join → per-doc score +
+    * matched-term set → join the (filtered) forward index with parquet
+    * pushdown on entity/language → R1 full-coverage → top `size` per
+    * message by score. One job for N messages instead of N jobs.
     */
   private[surface] def searchVariantsDistributed(spark: SparkSession,
       storeDir: String, messages: Seq[String], entities: Seq[String],
@@ -188,31 +190,16 @@ object TextSurface {
       .flatMap { case (rq, i) => rq.terms.map(t => (i, t.term)) }
       .toDF("msgId", "term")
 
-    // J1 prewarm: ONE pushdown job fetches the union term set's shards into
-    // the reader's byte-budgeted cache; contributions then decode
-    // driver-side with zero further segment jobs (repeat bulk calls over
-    // warm terms run the whole candidate stage locally). Terms past the
-    // budget — or a disabled cache — fall back to the distributed decode,
-    // which is also the 100 TB path. Both branches produce the identical
-    // (docId, term, contrib) rows: same shards, same kernel.
-    val contributions = reader.bulkShards(termNames) match {
-      case Some(shards) =>
-        shards.flatMap { case (term, _, _, _, postings) =>
-          PostingCodec.decode(postings).iterator
-            .map(p => (p.docId, term,
-              idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-        }.toDF("docId", "term", "contrib")
-      case None => graft.index.IndexSchemas
-        .readSegments(spark, meta.segmentsDirs(storeDir))
-        .filter(col("term").isin(termNames: _*))
-        .select("term", "postings").as[(String, Array[Byte])]
-        .flatMap { case (term, postings) =>
-          PostingCodec.decode(postings).iterator
-            .map(p => (p.docId, term,
-              idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-        }
-        .toDF("docId", "term", "contrib")
-    }
+    val contributions = graft.index.IndexSchemas
+      .readSegments(spark, meta.segmentsDirs(storeDir))
+      .filter(col("term").isin(termNames: _*))
+      .select("term", "postings").as[(String, Array[Byte])]
+      .flatMap { case (term, postings) =>
+        PostingCodec.decode(postings).iterator
+          .map(p => (p.docId, term,
+            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
+      }
+      .toDF("docId", "term", "contrib")
 
     val scored = contributions
       .join(broadcast(msgTerms), "term")

@@ -513,4 +513,12 @@ class EngineSpec extends SparkTestBase {
     assert(rq.terms.isEmpty)
     assert(Searcher.searchHits(spark, indexDir, rq, 10).isEmpty)
   }
+
+  test("resolveHits on a directory with no snapshot fails loudly") {
+    import spark.implicits._
+    val dir = tmpDir("graft-no-snapshot")
+    val hits = Seq.empty[(Int, Long, Double)].toDF("rank", "doc_id", "score")
+    val e = intercept[IllegalStateException](Searcher.resolveHits(spark, dir, hits))
+    assert(e.getMessage == s"no snapshot at $dir")
+  }
 }

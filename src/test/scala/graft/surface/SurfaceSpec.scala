@@ -26,6 +26,33 @@ class SurfaceSpec extends SparkTestBase {
     dir
   }
 
+  // the first request against storeDir in this suite: it counts the jobs
+  // of the first request after the store's reader opened
+  test("a request reads only the forward index after open, then runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    graft.query.IndexReader.open(spark, storeDir)
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      Bridge.drainListeners(sc)
+      started.set(0)
+      val out = body
+      Bridge.drainListeners(sc)
+      (out, started.get())
+    }
+    def request() = TextSurface.detect(spark, storeDir, "book a flight to Chennai",
+      Seq("city"))("city").map(x => (x.value, x.original_text))
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(request()) == ((Seq(("Chennai", "chennai")), 1)))
+      assert(jobsOf(request()) == ((Seq(("Chennai", "chennai")), 0)))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("exact single-token detection") {
     val d = TextSurface.detect(spark, storeDir, "book a flight to Chennai",
       Seq("city"))

@@ -45,6 +45,16 @@ class ProbeSpec extends SparkTestBase {
     assert(out.filter(_.startsWith("[job]")).forall(_.contains(" at ")), out)
   }
 
+  test("tiers: one p50/p95/qps line per serving tier") {
+    val dir = tmpDir("graft-probe-tiers")
+    graft.index.IndexBuilder.build(graft.corpus.CodeCorpus.generate(spark, 40L, seed = 7L),
+      dir, graft.index.IndexConfig(numBuckets = 4))
+    val out = output("tiers", dir)
+    for (tier <- Seq("scatter-gather", "coordinator", "driver-cached"))
+      assert(out.count(l => l.contains(s"tier $tier ") && l.contains(" p50=") &&
+        l.contains(" p95=") && l.contains(" qps=")) == 1, out)
+  }
+
   test("main rejects bad arguments before a session starts") {
     for (args <- Seq(Seq("time", sfDir, "1"), Seq("time", sfDir, "x"),
         Seq("jobs", sfDir, "no_such_query"), Seq("plan", sfDir), Seq("explain")))
