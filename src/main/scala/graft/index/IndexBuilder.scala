@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -10,10 +10,12 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Build-time configuration.
   *
-  * @param numBuckets    physical (term,salt) hash buckets = directory
-  *                      partitions of the segment store. Sized so one bucket's
-  *                      postings fit executor memory at target scale; at
-  *                      100 TB this is thousands, locally 32.
+  * @param numBuckets    logical layout: (term,salt) hash buckets, one
+  *                      `segments/bucket=` directory (one file) each. Sized so
+  *                      one bucket's postings fit executor memory at target
+  *                      scale; at 100 TB this is thousands, locally 32. Stage 3
+  *                      writes them with min(numBuckets, defaultParallelism)
+  *                      tasks, each a contiguous bucket range.
   * @param saltThreshold df above which a term's posting list is split across
   *                      power-of-two salt shards (explicit skew handling for
   *                      hot terms like `import` / `def` — north_rule).
@@ -25,8 +27,11 @@ final case class IndexConfig(
     maxSalts: Int = 32,
     k1: Double = 1.2,
     b: Double = 0.0,
-    /** doc shards for dense docId assignment (docId = shard << 40 | rank);
-      * fixed per index — determinism depends on config, not parallelism */
+    /** logical layout: doc shards for dense docId assignment
+      * (docId = shard << 40 | rank, shard = pmod(hash(repo, path, commit),
+      * docShards)); fixed per index, so docIds depend on this count, never
+      * on the task count. Stage 1 writes with min(docShards,
+      * defaultParallelism) tasks, each a contiguous shard range. */
     docShards: Int = 64,
     /** named analyzer (graft.analyzer.Analyzers) applied at index AND query
       * time — recorded in the manifest so readers stay symmetric */
@@ -55,12 +60,14 @@ private[index] final case class DocRow(docId: Long, repo: String,
   *
   * Dataflow:
   * {{{
-  *   corpus ─ repartition(key → docShard) ─ per-shard key sort ─
+  *   corpus ─ docShard = pmod(hash(key), docShards) ─ exchange of shard
+  *            ranges onto ≤ defaultParallelism tasks ─ (shard, key) sort ─
   *            one pass: dense docId + sha256 + analyze/tf ─► docs/
   *   docs ─ per-partition dict partials (term, df, cf, maxTf) ─
   *          groupBy(term) of |vocab|-sized partials ─► dict/ (+ hot-term map)
   *   docs ─ per-partition COMPLETE compressed partial posting lists per
-  *          (term, salt) ─ shuffle one byte-array per (partition,term,salt) ─
+  *          (term, salt) ─ shuffle one byte-array per (partition,term,salt)
+  *          onto ≤ defaultParallelism tasks of bucket ranges ─
   *          ordered concat-merge per (term, salt) ─► segments/ (bucket dirs)
   *   segments ─ per-bucket metrics ─► lineage/
   *   manifest vN + atomic pointer swap ─► meta/
@@ -97,6 +104,16 @@ object IndexBuilder {
 
   private def toHex(bytes: Array[Byte]): String =
     java.util.HexFormat.of().formatHex(bytes)
+
+  /** Places rows by `key`, a logical partition number in [0, logical), on
+    * min(logical, defaultParallelism) write tasks: task t takes the
+    * contiguous key range [t * logical / tasks, (t + 1) * logical / tasks),
+    * so no task holds more than ceil(logical / tasks) keys.
+    */
+  private def byRange(df: DataFrame, key: String, logical: Int): DataFrame = {
+    val tasks = math.min(logical, df.sparkSession.sparkContext.defaultParallelism)
+    df.repartitionById(tasks, (col(key) * tasks / logical).cast(IntegerType))
+  }
 
   /** Per-partition (term, df, cf, maxTf) dictionary partials — map-side
     * pre-aggregation by hand: each partition folds its tf maps into one
@@ -236,10 +253,9 @@ object IndexBuilder {
 
     // Phase B: co-locate by bucket, order runs by (term, salt, firstDocId),
     // concatenate each run's disjoint ranges into the final shard
-    val segs: Dataset[SegmentRow] = partials
-      .toDF("term", "salt", "numSalts", "firstDocId", "shardDf", "maxTf",
-        "bytes", "bucket")
-      .repartition(numBuckets, col("bucket"))
+    val segs: Dataset[SegmentRow] = byRange(partials.toDF("term", "salt",
+        "numSalts", "firstDocId", "shardDf", "maxTf", "bytes", "bucket"),
+        "bucket", numBuckets)
       .sortWithinPartitions("term", "salt", "firstDocId")
       .as[(String, Int, Int, Long, Long, Int, Array[Byte], Int)]
       .mapPartitions { it =>
@@ -414,15 +430,17 @@ object IndexBuilder {
 
     // ---- stage 1: forward index (docId, metadata, sha256, tfs, doclen) ----
     // Bucket-dense docIds: docId = docShard << 40 | rankWithinShard, where
-    // docShard = hash(repo,path,commit) % docShards and the rank follows the
-    // per-shard lexicographic key order. Properties:
+    // docShard = pmod(hash(repo,path,commit), docShards) and the rank follows
+    // the per-shard lexicographic key order. Properties:
     //  - deterministic at ANY parallelism (shard and rank are pure functions
-    //    of row values + the fixed docShards config — north_rule N vs 4N)
+    //    of row values + the fixed docShards config — north_rule N vs 4N);
+    //    the write runs min(docShards, defaultParallelism) tasks
     //  - dense within shard runs → delta gaps stay 1-2 bytes (uniform hash
     //    ids would leave ~45-bit gaps: incompressible); one large jump per
     //    shard boundary per posting list is amortized away by varlong
-    //  - ONE hash exchange of the corpus + per-shard sort; no global sort,
-    //    no range-sampling job, no zipWithIndex passes
+    //  - ONE exchange of the corpus, a contiguous shard range per task, so
+    //    each docs file is an ascending docId range; no global sort, no
+    //    range-sampling job, no zipWithIndex passes
     // The analyze pass (sha256 + tf map) rides the same pass that assigns
     // ids, so corpus content is read and materialized exactly once.
     stage(1, "docs", docsDir) {
@@ -443,18 +461,21 @@ object IndexBuilder {
         .join(prev.select("repo", "path", "commit"),
           Seq("repo", "path", "commit"), "left_anti")
         .select("repo", "path", "commit", "lang", "content"))
-      val docShards = cfg.docShards
       val analyzerName = cfg.analyzer
-      fresh
-        .repartition(docShards, col("repo"), col("path"), col("commit"))
-        .sortWithinPartitions("repo", "path", "commit")
-        .as[(String, String, String, String, String)]
+      // the shard is the row's own, never the task's: a task holds a run of
+      // shards, and the rank restarts at each shard boundary
+      byRange(fresh.withColumn("shard",
+          pmod(hash(col("repo"), col("path"), col("commit")), lit(cfg.docShards))),
+        "shard", cfg.docShards)
+        .sortWithinPartitions("shard", "repo", "path", "commit")
+        .as[(String, String, String, String, String, Int)]
         .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.get().partitionId().toLong
           val md = java.security.MessageDigest.getInstance("SHA-256")
-          var i = offsets.getOrElse(pid, 0L)
-          it.map { case (repo, path, commit, lang, content) =>
-            val docId = (pid << 40) | i
+          var shard = -1L
+          var i = 0L
+          it.map { case (repo, path, commit, lang, content, s) =>
+            if (s != shard) { shard = s; i = offsets.getOrElse(shard, 0L) }
+            val docId = (shard << 40) | i
             i += 1
             md.reset()
             val sha = toHex(md.digest(content.getBytes(UTF_8)))

@@ -195,6 +195,40 @@ class EngineSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  test("property: docId = shard << 40 | (base docs in shard + rank among new keys), any task count") {
+    import spark.implicits._
+    type Key = (String, String, String)
+    // docShards 3, 16 and 64 on the suite's session: one, two and eight
+    // shards per write task
+    for ((docShards, seed) <- Seq(3 -> 31L, 16 -> 32L, 64 -> 33L)) {
+      val cfg = IndexConfig(numBuckets = 4, saltThreshold = 1000L, maxSalts = 4,
+        docShards = docShards)
+      val dir = tmpDir("graft-docid")
+      val base = CodeCorpus.generate(spark, 50L, seed)
+      val batch = CodeCorpus.generate(spark, 80L, seed) // repeats the base keys
+      IndexBuilder.build(base, dir, cfg)
+      IndexBuilder.buildDelta(batch.unionByName(batch), dir, cfg)
+      def shardOf(df: org.apache.spark.sql.DataFrame): Map[Key, Int] =
+        df.select($"repo", $"path", $"commit",
+          pmod(hash($"repo", $"path", $"commit"), lit(docShards)))
+          .as[(String, String, String, Int)].collect()
+          .map(r => (r._1, r._2, r._3) -> r._4).toMap
+      def ranked(keys: Map[Key, Int], offsets: Map[Int, Int]): Map[Key, Long] =
+        keys.groupBy(_._2).flatMap { case (shard, ks) =>
+          ks.keys.toSeq.sorted.zipWithIndex.map { case (k, r) =>
+            k -> ((shard.toLong << 40) | (offsets.getOrElse(shard, 0) + r)) }
+        }
+      val baseKeys = shardOf(base)
+      val expected = ranked(baseKeys, Map.empty) ++ ranked(
+        shardOf(batch) -- baseKeys.keys, baseKeys.groupBy(_._2).map(s => s._1 -> s._2.size))
+      val got = spark.read.schema(IndexSchemas.docs)
+        .parquet(Snapshot.load(dir).get.docsDirs(dir): _*)
+        .select("repo", "path", "commit", "docId").as[(String, String, String, Long)]
+        .collect().map(r => (r._1, r._2, r._3) -> r._4)
+      assert(got.length == expected.size && got.toMap == expected, s"docShards=$docShards")
+    }
+  }
+
   test("compaction re-salts terms that became hot mid-delta-chain") {
     import spark.implicits._
     val cfg = IndexConfig(numBuckets = 8, saltThreshold = 600L, maxSalts = 8)

@@ -53,6 +53,38 @@ class SurfaceSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a dictionary commit runs at most defaultParallelism tasks a stage, one file per bucket") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.graftbridge.Bridge
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.add((s.stageInfo.name, s.stageInfo.numTasks))
+    }
+    val dir = tmpDir("graft-store-tasks")
+    val dict = (0 until 60).map(i =>
+      ("city", s"Town $i", Seq(s"town $i", s"burg$i", s"ville $i"), "en"))
+      .toDF("entity_data", "value", "variants", "language_script")
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    val meta = try {
+      val m = EntityStore.commitDictionary(spark, dir, dict)
+      Bridge.drainListeners(sc)
+      m
+    } finally sc.removeSparkListener(listener)
+    val p = sc.defaultParallelism
+    val seen = stages.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_._2 <= p), s"p=$p stages=$seen")
+    def parts(d: java.io.File): Int = d.listFiles().count(_.getName.startsWith("part-"))
+    val v = s"$dir/v${meta.version}"
+    assert(parts(new java.io.File(s"$v/docs")) <= p)
+    val buckets = new java.io.File(s"$v/segments").listFiles()
+      .filter(_.getName.startsWith("bucket="))
+    assert(buckets.nonEmpty && buckets.forall(parts(_) == 1))
+  }
+
   test("exact single-token detection") {
     val d = TextSurface.detect(spark, storeDir, "book a flight to Chennai",
       Seq("city"))
