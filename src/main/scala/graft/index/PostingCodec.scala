@@ -1,8 +1,5 @@
 package graft.index
 
-import java.io.ByteArrayOutputStream
-import scala.collection.mutable.ArrayBuffer
-
 /** One decoded posting: document id + term frequency + document length in
   * tokens (doclen = 0 on norms-off indexes — the b = 0 reference mode).
   */
@@ -43,13 +40,27 @@ object PostingCodec {
 
   // --- varint primitives ---
 
-  private def writeVarLong(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
+  /** Growable byte array: the encoder's one output buffer. */
+  private final class ByteSink(capacity: Int) {
+    var buf = new Array[Byte](math.max(capacity, 16))
+    var pos = 0
+    def varLong(v0: Long): Unit = {
+      if (pos + 10 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2 + 10)
+      var v = v0
+      while ((v & ~0x7fL) != 0L) {
+        buf(pos) = ((v & 0x7f) | 0x80).toByte
+        pos += 1
+        v >>>= 7
+      }
+      buf(pos) = v.toByte
+      pos += 1
     }
-    out.write(v.toInt)
+    def append(o: ByteSink): Unit = {
+      if (pos + o.pos > buf.length) buf = java.util.Arrays.copyOf(buf, (pos + o.pos) * 2)
+      System.arraycopy(o.buf, 0, buf, pos, o.pos)
+      pos += o.pos
+    }
+    def result(): Array[Byte] = if (pos == buf.length) buf else java.util.Arrays.copyOf(buf, pos)
   }
 
   @inline private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
@@ -74,58 +85,108 @@ object PostingCodec {
 
   // --- encode ---
 
+  /** Writes `n` postings, added in strictly increasing docId order, as one
+    * list: the encoder behind both `encode` and `merge`, so the two are
+    * byte-identical by construction.
+    */
+  private final class ListWriter(n: Int, hasNorms: Boolean, sizeHint: Int) {
+    private val out = new ByteSink(sizeHint)
+    private val body = new ByteSink(BlockSize * 4)
+    private val ids = new Array[Long](BlockSize)
+    private val tfs = new Array[Int](BlockSize)
+    private val dls = new Array[Int](BlockSize)
+    private var count = 0
+    private var prevLast = 0L
+    private var firstBlock = true
+    out.varLong(n.toLong)
+    out.varLong(if (hasNorms) 1L else 0L)
+
+    def add(docId: Long, tf: Int, doclen: Int): Unit = {
+      ids(count) = docId; tfs(count) = tf; dls(count) = doclen
+      count += 1
+      if (count == BlockSize) flush()
+    }
+
+    private def flush(): Unit = {
+      body.pos = 0
+      var maxTf = 0
+      var minDoclen = Int.MaxValue
+      var i = 0
+      while (i < count) {
+        if (i > 0) body.varLong(ids(i) - ids(i - 1))
+        if (tfs(i) > maxTf) maxTf = tfs(i)
+        if (dls(i) < minDoclen) minDoclen = dls(i)
+        i += 1
+      }
+      i = 0
+      while (i < count) { body.varLong((tfs(i) - 1).toLong); i += 1 }
+      if (hasNorms) {
+        i = 0
+        while (i < count) { body.varLong(math.max(dls(i) - 1, 0).toLong); i += 1 }
+      }
+      val first = ids(0)
+      val last = ids(count - 1)
+      out.varLong(count.toLong)
+      out.varLong(if (firstBlock) zigzag(first) else first - prevLast)
+      out.varLong(last - first)
+      out.varLong(maxTf.toLong)
+      if (hasNorms) out.varLong(minDoclen.toLong)
+      out.varLong(body.pos.toLong)
+      out.append(body)
+      prevLast = last
+      firstBlock = false
+      count = 0
+    }
+
+    def result(): Array[Byte] = {
+      if (count > 0) flush()
+      out.result()
+    }
+  }
+
   /** Encode a strictly-increasing (by docId) posting list. Doclens are
     * stored iff any posting carries one (norms-on index).
     */
   def encode(postings: Array[Posting]): Array[Byte] = {
-    val hasNorms = postings.exists(_.doclen > 0)
-    val out = new ByteArrayOutputStream(postings.length * 2 + 16)
-    writeVarLong(out, postings.length)
-    writeVarLong(out, if (hasNorms) 1L else 0L)
-    var blockStart = 0
-    var prevLast = 0L
-    var firstBlock = true
-    while (blockStart < postings.length) {
-      val count = math.min(BlockSize, postings.length - blockStart)
-      val first = postings(blockStart).docId
-      val last = postings(blockStart + count - 1).docId
-      var maxTf = 0
-      var minDoclen = Int.MaxValue
-      val body = new ByteArrayOutputStream(count * 2)
-      var i = 0
-      while (i < count) {
-        val p = postings(blockStart + i)
-        if (i > 0) writeVarLong(body, p.docId - postings(blockStart + i - 1).docId)
-        if (p.tf > maxTf) maxTf = p.tf
-        if (p.doclen < minDoclen) minDoclen = p.doclen
-        i += 1
-      }
-      i = 0
-      while (i < count) {
-        writeVarLong(body, (postings(blockStart + i).tf - 1).toLong)
-        i += 1
-      }
-      if (hasNorms) {
-        i = 0
-        while (i < count) {
-          writeVarLong(body, math.max(postings(blockStart + i).doclen - 1, 0).toLong)
-          i += 1
-        }
-      }
-      writeVarLong(out, count.toLong)
-      if (firstBlock) writeVarLong(out, zigzag(first))
-      else writeVarLong(out, first - prevLast)
-      writeVarLong(out, last - first)
-      writeVarLong(out, maxTf.toLong)
-      if (hasNorms) writeVarLong(out, minDoclen.toLong)
-      val bodyBytes = body.toByteArray
-      writeVarLong(out, bodyBytes.length.toLong)
-      out.write(bodyBytes, 0, bodyBytes.length)
-      prevLast = last
-      firstBlock = false
-      blockStart += count
+    val w = new ListWriter(postings.length, postings.exists(_.doclen > 0),
+      postings.length * 3 + 16)
+    var i = 0
+    while (i < postings.length) {
+      val p = postings(i)
+      w.add(p.docId, p.tf, p.doclen)
+      i += 1
     }
-    out.toByteArray
+    w.result()
+  }
+
+  /** One list holding the postings of `lists`, whose docIds are disjoint:
+    * byte-identical to `encode` of their sorted union. A k-way merge over
+    * BlockCursors, written block by block with no Posting per entry; a
+    * single non-empty list is returned as is.
+    */
+  def merge(lists: Seq[Array[Byte]]): Array[Byte] = {
+    val nonEmpty = lists.filter(new BlockCursor(_).totalDocs > 0)
+    if (nonEmpty.length == 1) return nonEmpty.head
+    val cursors = nonEmpty.map(new BlockCursor(_)).toArray
+    val w = new ListWriter(cursors.map(_.totalDocs).sum, cursors.exists(_.hasNorms),
+      nonEmpty.map(_.length).sum + 16)
+    cursors.foreach(_.next())
+    var live = cursors.length
+    while (live > 0) {
+      var m = 0
+      var i = 1
+      while (i < live) {
+        if (cursors(i).docId < cursors(m).docId) m = i
+        i += 1
+      }
+      val c = cursors(m)
+      w.add(c.docId, c.tf, c.doclen)
+      if (!c.next()) {
+        live -= 1
+        cursors(m) = cursors(live)
+      }
+    }
+    w.result()
   }
 
   /** Full decode (test/oracle path; query path uses BlockCursor). */

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.functions.CrossHash
 
@@ -42,7 +43,7 @@ object Sampling {
     val seedL = seed
     val u = udf((k: String) =>
       CrossHash.md5Lower64(seedL + "|" + (if (k == null) "" else k)))
-    u(keyCol.cast("string"))
+    u(keyCol.cast(StringType))
   }
 
   /** Keep ~`fraction` of rows, deterministically by key. */
@@ -111,8 +112,8 @@ object Sampling {
       "weights must be non-negative with at least one positive entry")
     val wsum = weights.values.sum
     val norm = weights.map { case (d, w) => d -> w / wsum }
-    val counts = df.groupBy(domainCol.cast("string").as("_dom"))
-      .agg(sizeAgg.cast("double").as("n")).collect()
+    val counts = df.groupBy(domainCol.cast(StringType).as("_dom"))
+      .agg(sizeAgg.cast(DoubleType).as("n")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val present = norm.filter { case (d, w) =>
       w > 0.0 && counts.getOrElse(d, 0.0) > 0.0 }
@@ -189,7 +190,7 @@ object Sampling {
     bucketed
       .withColumn("shuffle_pos",
         element_at(typedLit(offsets), col("_bkt"))
-          + row_number().over(w).cast("long") - 1L)
+          + row_number().over(w).cast(LongType) - 1L)
       .drop("_hs", "_bkt")
   }
 
@@ -218,7 +219,7 @@ object Sampling {
     val bits = 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1L, numRanges.toLong - 1L))
     val base = df
-      .withColumn("_dom", domainCol.cast("string"))
+      .withColumn("_dom", domainCol.cast(StringType))
       .filter(col("_dom").isin(quotas.keys.toSeq: _*))
       .withColumn("_hs", rowHash(keyCol, seed).bitwiseXOR(lit(Long.MinValue)))
       .withColumn("_bkt",
@@ -238,7 +239,7 @@ object Sampling {
       concat_ws("|", col("_dom"), col("_bkt")))
     val w = Window.partitionBy("_dom", "_bkt").orderBy(col("_hs"), keyCol)
     base
-      .withColumn("_pos", offCol + row_number().over(w).cast("long") - 1L)
+      .withColumn("_pos", offCol + row_number().over(w).cast(LongType) - 1L)
       .filter(col("_pos") < element_at(typedLit(quotas), col("_dom")))
       .drop("_dom", "_hs", "_bkt", "_pos")
   }
@@ -260,6 +261,6 @@ object Sampling {
       else java.lang.Long.compareUnsigned(h,
         cuts.getOrElse(stratum, defCut)) < 0
     }
-    df.filter(keepU(rowHash(keyCol, seed), stratumCol.cast("string")))
+    df.filter(keepU(rowHash(keyCol, seed), stratumCol.cast(StringType)))
   }
 }

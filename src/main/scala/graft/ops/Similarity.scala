@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -30,7 +31,7 @@ object Similarity {
     * in array order (deterministic summation).
     */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
       lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -148,11 +149,11 @@ object Similarity {
   def quantizedCosKnn(df: DataFrame, vecCol: String, idCol: String,
       query: Array[Float], k: Int): DataFrame = {
     val qInt = typedLit(query.map(q1000).toSeq)
-    val vInt = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
+    val vInt = transform(col(vecCol), x => round(x.cast(DoubleType) * 1000).cast(LongType))
     val sign = when(col("dot") < 0, lit(-1.0)).otherwise(lit(1.0))
     val key = when(col("na2") > 0,
-      sign * ((col("dot").cast("double") * col("dot").cast("double")) /
-        col("na2").cast("double"))).otherwise(lit(0.0))
+      sign * ((col("dot").cast(DoubleType) * col("dot").cast(DoubleType)) /
+        col("na2").cast(DoubleType))).otherwise(lit(0.0))
     df.select(col(idCol), vInt.as("v"))
       .select(col(idCol),
         aggregate(zip_with(col("v"), qInt, (x, y) => x * y), lit(0L),
@@ -215,7 +216,7 @@ object Similarity {
     val spark = df.sparkSession
     import spark.implicits._
     val keyed = df
-      .select(col(idCol).cast("long").as("_id"), col(vecCol).as("v"))
+      .select(col(idCol).cast(LongType).as("_id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
       .withColumn("h", xxhash64(col("_id"), lit(seed)))
     // Sample = the trainSample rows with the smallest (h, _id). A bare
@@ -264,7 +265,7 @@ object Similarity {
       val bc = spark.sparkContext.broadcast(model)
       val assignU = udf((v: Seq[Float]) =>
         if (v == null) -1 else bc.value.assign(v.toArray))
-      val qv = transform(col("v"), x => round(x.cast("double") * Scale).cast("long"))
+      val qv = transform(col("v"), x => round(x.cast(DoubleType) * Scale).cast(LongType))
       val sums = train
         .select(assignU(col("v")).as("c"), qv.as("q"))
         .select(col("c"), posexplode(col("q")).as(Seq("pos", "x")))
@@ -342,7 +343,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("_qid").as(qidCol), col(idCol), col("score"),
-        col("rank").cast("int").as("rank"))
+        col("rank").cast(IntegerType).as("rank"))
   }
 
   /** Quantized dot-product top-k: vectors quantized to round(x*1000) —
@@ -352,7 +353,7 @@ object Similarity {
   def quantizedDotKnn(df: DataFrame, vecCol: String, idCol: String,
       query: Array[Float], k: Int): DataFrame = {
     val qInt = typedLit(query.map(q1000).toSeq)
-    val vInt = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
+    val vInt = transform(col(vecCol), x => round(x.cast(DoubleType) * 1000).cast(LongType))
     df.select(col(idCol),
         aggregate(zip_with(vInt, qInt, (x, y) => x * y), lit(0L), (a, v) => a + v)
           .as("dot"))

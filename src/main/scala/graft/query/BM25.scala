@@ -28,17 +28,4 @@ final case class BM25(k1: Double = 1.2, b: Double = 0.0) {
     */
   def normOf(doclen: Int, avgdl: Double): Double =
     if (b == 0.0 || doclen <= 0 || avgdl <= 0.0) 0.0 else doclen / avgdl
-
-  /** Upper bound of a term's contribution given its max tf — monotone in tf
-    * for b = 0 (and for fixed norm lower bound in the general case), which
-    * is what makes per-block max-tf a sound block-max WAND bound.
-    */
-  def maxScore(maxTf: Int, df: Long, n: Long): Double =
-    idf(df, n) * tfWeight(maxTf, normLowerBound)
-
-  /** With b>0, tfWeight is maximized by the smallest norm; doc lengths are
-    * >= 1 token so norm >= 1/avgdl. We keep a conservative 0 (norm term
-    * contributes k1*(1-b) at minimum) — still a sound upper bound.
-    */
-  private def normLowerBound: Double = 0.0
 }

@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.analyzer.Analyzer
-import graft.functions.EditDistance
-import graft.index.{Hashing, Snapshot, SnapshotMeta}
+import graft.index.{PostingCodec, Snapshot, SnapshotMeta}
 
 import scala.collection.concurrent.TrieMap
 
@@ -15,18 +13,22 @@ import scala.collection.concurrent.TrieMap
   * Three serving tiers (the ES analogy: a coordinating node with hot
   * shards):
   *  - driver-cached: an index whose dictionary and postings fit the driver
-  *    budgets (sized from the manifest at open()) is held in driver memory
-  *    → queries are pure in-process WAND, no Spark job, millisecond latency;
+  *    budgets (sized from the manifest at open()) is held in driver memory,
+  *    one posting list per term: open() merges a term's salt shards and
+  *    generation shards into one list (PostingCodec.merge). A query is one
+  *    in-process block-max WAND pass over its terms' lists on the calling
+  *    thread — no Spark job, no fan-out, one global top-k threshold;
   *  - coordinator: a larger index resolves terms from the in-memory
   *    dictionary when its vocabulary fits (parquet pushdown otherwise), and
-  *    the first query touching a term fetches its shards into a
-  *    byte-budgeted LRU cache; repeats serve driver-locally;
+  *    the first query touching a term fetches its shards, merged the same
+  *    way, into a byte-budgeted LRU cache; repeats serve driver-locally;
   *  - scatter-gather: terms past that budget (or a disabled cache) run WAND
   *    over a PERSISTED segments Dataset — one narrow job + one small
   *    shuffle per query, no file IO after warm-up.
   *
-  * All tiers run the identical Wand.topK kernel, so results are
-  * bit-identical regardless of tier (tested in EngineSpec). The driver
+  * All tiers run the identical Wand.topK kernel, and each term contributes
+  * to a doc from exactly one list on every tier, so results are
+  * bit-identical regardless of tier (EngineSpec, TierPropSpec). The driver
   * tier also serves in-memory entity detection (surface.LocalDetector),
   * which adds the lazily read `forwardIndex`.
   */
@@ -36,7 +38,7 @@ final class IndexReader private (
     val meta: SnapshotMeta,
     cfg: IndexReader.ReaderConfig,
     private[graft] val dictMap: Option[Map[String, Searcher.TermStats]],
-    private[graft] val segMap: Option[Map[(String, Int), Seq[IndexReader.SegShard]]]) {
+    private[graft] val segMap: Option[Map[String, IndexReader.SegShard]]) {
 
   import IndexReader.{DocEntry, SegShard}
 
@@ -175,8 +177,7 @@ final class IndexReader private (
     * latency); the hit-path cost is one synchronized remove/add,
     * negligible next to the pushdown job each miss pays.
     */
-  private val shardCache =
-    TrieMap.empty[String, Seq[(String, Int, Int, Int, Array[Byte])]]
+  private val shardCache = TrieMap.empty[String, SegShard]
   private val shardCacheBytes = new java.util.concurrent.atomic.AtomicLong(0L)
   // recency-ordered victim list (head = next victim), guarded by its own
   // monitor; hits move their term to the tail under the same lock
@@ -193,27 +194,20 @@ final class IndexReader private (
   /** Bytes currently resident in the term-shard cache. */
   def shardCacheBytesUsed: Long = shardCacheBytes.get()
 
-  /** All shard rows (term, salt, numSalts, maxTf, postings) for `termNames`
-    * through the shard cache; None when a term is past its byte budget.
+  /** The merged list of each of `termNames` through the shard cache; None
+    * when a term is past its byte budget.
     */
-  private def fetchShardsByName(termNames: Seq[String]):
-      Option[Seq[(String, Int, Int, Int, Array[Byte])]] = {
-    import spark.implicits._
+  private def fetchShardsByName(termNames: Seq[String]): Option[Map[String, SegShard]] = {
     val missing = termNames.filterNot(shardCache.contains)
     shardCacheHits.addAndGet((termNames.length - missing.length).toLong)
     shardCacheMisses.addAndGet(missing.length.toLong)
     if (missing.nonEmpty) {
-      val fetched = segsDs
-        .filter(col("term").isin(missing: _*))
-        .as[(String, Int, Int, Int, Array[Byte])]
-        .collect()
-        .groupBy(_._1)
+      val fetched = IndexReader.merged(segsDs.filter(col("term").isin(missing: _*)).collect())
       // single lock around accounting: two threads fetching the same term
       // must not double-insert into the victim list or double-count the bytes
       shardCacheOrder.synchronized {
-        for (t <- missing if !shardCache.contains(t)) {
-          val shards = fetched.getOrElse(t, Array.empty).toSeq
-          val bytes = shards.map(_._5.length.toLong).sum
+        for (t <- missing if !shardCache.contains(t); shard <- fetched.get(t)) {
+          val bytes = shard.postings.length.toLong
           if (bytes <= cfg.maxQueryShardCacheBytes) {
             // evict from the head (least recently used) until the new term fits
             while (shardCacheBytes.get() + bytes > cfg.maxQueryShardCacheBytes &&
@@ -221,11 +215,11 @@ final class IndexReader private (
               val it = shardCacheOrder.iterator()
               val victim = it.next()
               it.remove()
-              shardCache.remove(victim).foreach(vs =>
-                shardCacheBytes.addAndGet(-vs.map(_._5.length.toLong).sum))
+              shardCache.remove(victim).foreach(v =>
+                shardCacheBytes.addAndGet(-v.postings.length.toLong))
             }
             if (shardCacheBytes.get() + bytes <= cfg.maxQueryShardCacheBytes) {
-              shardCache.put(t, shards)
+              shardCache.put(t, shard)
               shardCacheOrder.add(t)
               shardCacheBytes.addAndGet(bytes)
             }
@@ -240,9 +234,9 @@ final class IndexReader private (
         // budget) or already evicted between the lookup and this bump
         if (shardCacheOrder.remove(t)) shardCacheOrder.add(t)
       }
-      hit
+      hit.map(t -> _)
     }
-    if (all.length == termNames.length) Some(all.flatten) else None
+    if (all.length == termNames.length) Some(all.toMap) else None
   }
 
   def searchHits(rq: Searcher.ResolvedQuery, k: Int): Array[Hit] = {
@@ -251,54 +245,22 @@ final class IndexReader private (
       case Some(m) => searchLocal(m, rq, k)
       case None if cfg.maxQueryShardCacheBytes > 0 =>
         fetchShardsByName(rq.terms.map(_.term)) match {
-          case Some(shards) =>
-            val m = shards.groupBy(s => (s._1, s._2))
-              .view.mapValues(_.map(s => SegShard(s._3, s._4, s._5)).toSeq)
-              .toMap
-            searchLocal(m, rq, k)
+          case Some(m) => searchLocal(m, rq, k)
           case None => Searcher.searchDistributed(spark, segsDs, rq, k)
         }
       case None => Searcher.searchDistributed(spark, segsDs, rq, k)
     }
   }
 
-  /** In-process scatter-gather: one WAND pass per salt task. Tasks own
-    * DISJOINT docId sets (`mix64(docId) & (sQ-1)`) and are pure CPU, so a
-    * hot-term query (numSalts up to 16) fans out across the JVM common
-    * pool instead of running its passes sequentially — this was the
-    * latency long-pole: every query touching a salted term paid saltFanout
-    * serial WAND passes while the other driver cores idled. The canonical
-    * (-score, docId) merge makes the result independent of execution
-    * order, so parallelism cannot change the answer (EngineSpec pins
-    * cross-tier bit-equality).
+  /** One block-max WAND pass over one merged list per query term, on the
+    * calling thread: a single heap, so WAND prunes against the global k-th
+    * score.
     */
-  private def searchLocal(m: Map[(String, Int), Seq[SegShard]],
-      rq: Searcher.ResolvedQuery, k: Int): Array[Hit] = {
-    val sQ = rq.saltFanout
-    val n = meta.numDocs
-    val idf = rq.terms.map(t => t.term -> bm25.idf(t.df, n)).toMap
-    def runTask(task: Int): Seq[Hit] = {
-      // one shard per generation per (term, salt): generations hold
-      // disjoint docId ranges, so WAND treats them as extra lists safely
-      val shards = rq.terms.flatMap { t =>
-        m.getOrElse((t.term, task & (t.numSalts - 1)), Nil)
-          .map(s => TermShard(t.term, idf(t.term), s.maxTf, s.postings))
-      }
-      val owns: Long => Boolean =
-        if (sQ == 1) _ => true else d => Hashing.saltOf(d, sQ) == task
-      Wand.topK(shards, k, bm25, owns, meta.avgDocLen)
-    }
-    val all: Seq[Hit] =
-      if (sQ == 1) runTask(0)
-      else {
-        import scala.jdk.CollectionConverters._
-        java.util.stream.IntStream.range(0, sQ).parallel()
-          .mapToObj(task => runTask(task))
-          .collect(java.util.stream.Collectors.toList[Seq[Hit]])
-          .asScala.toSeq.flatten
-      }
-    all.sortBy(h => (-h.score, h.docId)).take(k).toArray
-  }
+  private def searchLocal(m: Map[String, SegShard],
+      rq: Searcher.ResolvedQuery, k: Int): Array[Hit] =
+    Wand.topK(rq.terms.flatMap(t => m.get(t.term).map(s =>
+      TermShard(t.term, bm25.idf(t.df, meta.numDocs), s.maxTf, s.postings))),
+      k, bm25, avgdl = meta.avgDocLen)
 
   def search(queryText: String, k: Int, fuzzy: Boolean = false): DataFrame = {
     import spark.implicits._
@@ -310,7 +272,15 @@ final class IndexReader private (
 
 object IndexReader {
 
-  final case class SegShard(numSalts: Int, maxTf: Int, postings: Array[Byte])
+  /** One term's posting list: its salt and generation shards merged. */
+  final case class SegShard(maxTf: Int, postings: Array[Byte])
+
+  /** Segment rows (term, salt, numSalts, maxTf, postings) as one merged
+    * list per term.
+    */
+  private def merged(rows: Array[(String, Int, Int, Int, Array[Byte])]): Map[String, SegShard] =
+    rows.groupBy(_._1).view.mapValues(rs =>
+      SegShard(rs.map(_._4).max, PostingCodec.merge(rs.toSeq.map(_._5)))).toMap
 
   /** One forward-index row: a document's stored fields and indexed terms. */
   final case class DocEntry(repo: String, path: String, commit: String,
@@ -379,14 +349,11 @@ object IndexReader {
       }
       val segF = Future {
         if (!segSmall) None
-        else Some(
+        else Some(merged(
           graft.index.IndexSchemas
             .readSegments(spark, meta.segmentsDirs(indexDir))
             .select("term", "salt", "numSalts", "maxTf", "postings")
-            .as[(String, Int, Int, Int, Array[Byte])].collect()
-            .groupBy(r => (r._1, r._2))
-            .view.mapValues(_.map(r => SegShard(r._3, r._4, r._5)).toSeq)
-            .toMap)
+            .as[(String, Int, Int, Int, Array[Byte])].collect()))
       }
       val dictMap = Await.result(dictF, Duration.Inf)
       val segMap = Await.result(segF, Duration.Inf)

@@ -147,15 +147,6 @@ object Searcher {
     * reference's mocked-ES harness, SURVEY.md §5). Independent path: reads
     * parquet directly with bucket partition-pruning + term pushdown.
     */
-  def searchExact(spark: SparkSession, indexDir: String, queryText: String,
-      k: Int, fuzzy: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val rq = resolve(spark, indexDir, queryText, fuzzy)
-    searchExactHits(spark, indexDir, rq, k).zipWithIndex
-      .map { case (h, i) => (i + 1, h.docId, h.score) }.toSeq
-      .toDF("rank", "doc_id", "score")
-  }
-
   def searchExactHits(spark: SparkSession, indexDir: String,
       rq: ResolvedQuery, k: Int): Array[Hit] = {
     import spark.implicits._

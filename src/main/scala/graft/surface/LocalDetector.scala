@@ -45,14 +45,15 @@ object LocalDetector {
     */
   private val MaxPostingBytes = 256L << 20
 
-  /** A broadcastable view of one opened reader's driver tier. In a
-    * dictionary index a doc's (repo, path, commit) hold its (entity, value,
-    * variant) — see EntityStore.
+  /** A broadcastable view of one opened reader's driver tier: its
+    * dictionary, its one merged posting list per term and its forward
+    * index. In a dictionary index a doc's (repo, path, commit) hold its
+    * (entity, value, variant) — see EntityStore.
     */
   final case class LocalIndex(
       meta: SnapshotMeta,
       dict: Map[String, Searcher.TermStats],
-      segs: Map[(String, Int), Seq[IndexReader.SegShard]],
+      segs: Map[String, IndexReader.SegShard],
       docs: Map[Long, IndexReader.DocEntry]) extends Serializable
 
   /** The view of `reader`, when it holds its snapshot on the driver tier
@@ -110,12 +111,8 @@ object LocalDetector {
     val matched = mutable.HashMap.empty[Long, mutable.ArrayBuffer[String]]
     for (t <- resolved) { // lexicographic term order = the summation contract
       val idf = bm25.idf(t.df, meta.numDocs)
-      val postings = termCache.getOrElseUpdate(t.term, {
-        (0 until t.numSalts).iterator
-          .flatMap(s => idx.segs.getOrElse((t.term, s), Nil).iterator)
-          .flatMap(shard => PostingCodec.decode(shard.postings).iterator)
-          .toArray
-      })
+      val postings = termCache.getOrElseUpdate(t.term,
+        idx.segs.get(t.term).fold(Array.empty[Posting])(s => PostingCodec.decode(s.postings)))
       var i = 0
       while (i < postings.length) {
         val p = postings(i)

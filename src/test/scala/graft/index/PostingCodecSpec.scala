@@ -148,6 +148,35 @@ class PostingCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("property: merge of disjoint lists == encode of their sorted union, byte for byte") {
+    // 0-16 lists (empty ones included) splitting one docId set, lists long
+    // enough to cross block boundaries, norms on and off
+    val mergeCase = for {
+      nLists <- Gen.chooseNum(0, 16)
+      n <- Gen.chooseNum(0, 1500)
+      withNorms <- Gen.oneOf(true, false)
+      ids <- Gen.listOfN(n, Gen.chooseNum(-1000L, 1L << 45))
+      owners <- Gen.listOfN(n, Gen.chooseNum(0, math.max(nLists - 1, 0)))
+      tfs <- Gen.listOfN(n, Gen.chooseNum(1, 3000))
+      dls <- Gen.listOfN(n, Gen.chooseNum(1, 100000))
+    } yield {
+      val ps = ids.distinct.sorted.zip(tfs.zip(dls)).map { case (d, (tf, dl)) =>
+        Posting(d, tf, if (withNorms) dl else 0)
+      }.zip(owners)
+      (0 until nLists).map(l => ps.collect { case (p, o) if o == l => p }.toArray)
+    }
+    for (i <- 1 to 200) {
+      val lists = mergeCase(Gen.Parameters.default, Seed(i.toLong)).get
+      val union = lists.flatten.sortBy(_.docId).toArray
+      val merged = PostingCodec.merge(lists.map(PostingCodec.encode))
+      assert(merged.sameElements(PostingCodec.encode(union)), s"seed $i")
+      val cur = new PostingCodec.BlockCursor(merged)
+      val seen = Iterator.continually(cur.next()).takeWhile(identity)
+        .map(_ => Posting(cur.docId, cur.tf, cur.doclen)).toSeq
+      assert(seen == union.toSeq, s"seed $i")
+    }
+  }
+
   test("compression: dense ids + small tfs stay near 2 bytes/posting") {
     val ps = (0 until 100000).map(i => Posting(i.toLong, 1)).toArray
     val bytes = PostingCodec.encode(ps)
