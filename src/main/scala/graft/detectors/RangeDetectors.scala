@@ -186,10 +186,7 @@ final class NumberRangeDetector(entityName: String = "number_range",
 final case class DetectedBudget(minBudget: Long, maxBudget: Long,
     btype: String, original: String)
 
-final class BudgetDetector(var minDigits: Int = 2, var maxDigits: Int = 5) {
-
-  /** test-surface twin of the reference's set_min_max_digits */
-  def setMinMaxDigits(min: Int, max: Int): Unit = { minDigits = min; maxDigits = max }
+final class BudgetDetector(val minDigits: Int = 2, val maxDigits: Int = 5) {
 
   // _scale_patterns (:83-99) sorted by pattern length desc, Python-stable
   private val scalePatterns: Seq[(Long, Pattern)] = Seq(

@@ -7,8 +7,8 @@ import scala.collection.mutable.LinkedHashMap
   * engines — the reference's headline v2 architecture
   * (ner_v2/detectors/temporal/utils.py:get_tuple_dict feeding
   * standard_date_regex.py / standard_time_regex.py): one engine, per-language
-  * vocabulary tables. A language is three CSVs; drop a new directory to add
-  * one.
+  * vocabulary tables. A language is three CSVs, shipped as classpath
+  * resources under /graft/lang.
   *
   * Row format: `key,<col1>,<col2>,...` where key is a '|'-separated variant
   * list; every variant maps (lowercased) to the remaining columns. Insertion
@@ -50,16 +50,9 @@ object TupleDict {
     finally in.close()
   }
 
-  private def readFile(path: java.nio.file.Path): String =
-    new String(java.nio.file.Files.readAllBytes(path), StandardCharsets.UTF_8)
-
   /** Built-in language table (classpath resource under /graft/lang). */
   def resource(kind: String, lang: String, file: String): TupleDict =
     parse(readResource(s"/graft/lang/$kind/$lang/$file"))
-
-  /** User-provided language directory with the same three-file layout. */
-  def fromFile(dir: String, file: String): TupleDict =
-    parse(readFile(java.nio.file.Paths.get(dir, file)))
 }
 
 /** The three tables a date language needs. Columns mirror the reference CSVs:
@@ -92,14 +85,4 @@ object LangData {
     TupleDict.resource("time", lang, "time_constant.csv"),
     TupleDict.resource("time", lang, "datetime_diff_constant.csv"),
     TupleDict.resource("time", lang, "numbers_constant.csv"))
-
-  def dateFromDir(dir: String): DateLangData = DateLangData(
-    TupleDict.fromFile(dir, "date_constant.csv"),
-    TupleDict.fromFile(dir, "datetime_diff_constant.csv"),
-    TupleDict.fromFile(dir, "numbers_constant.csv"))
-
-  def timeFromDir(dir: String): TimeLangData = TimeLangData(
-    TupleDict.fromFile(dir, "time_constant.csv"),
-    TupleDict.fromFile(dir, "datetime_diff_constant.csv"),
-    TupleDict.fromFile(dir, "numbers_constant.csv"))
 }

@@ -11,8 +11,8 @@ import scala.collection.mutable.ListBuffer
   * reference's standard regex engine
   * (ner_v2/detectors/temporal/date/standard_date_regex.py:92-169 builds the
   * twelve regexes from per-language vocabulary; :185-600 are the parsers).
-  * One engine serves every language whose tables exist (built-in: hi, bn;
-  * user languages via LangData.dateFromDir).
+  * One engine serves every language whose tables exist (built-in: hi, bn,
+  * ta, te, gu, mr).
   *
   * Determinism: the reference uses wall-clock `now`; here the reference date
   * is an explicit constructor argument (never the wall clock — same value at

@@ -94,7 +94,12 @@ case class AnalyzeWithOffsets(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_analyze_offsets"
 }
 
-/** Column-level entry points (the library's public function surface). */
+/** Column-level entry points (the library's public function surface).
+  * `analyze`, `term_frequencies` and `analyze_offsets` run the standard
+  * analyzer only ([[graft.analyzer.Analyzer]], `Analyzers.Standard`): they
+  * match an index built with it, not one built with another analyzer.
+  * A null input gives null.
+  */
 object functions {
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
   def analyze(c: Column): Column = column(AnalyzeText(expression(c)))

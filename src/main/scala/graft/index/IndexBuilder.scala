@@ -159,11 +159,10 @@ object IndexBuilder {
     * (term, salt) for its doc range; the exchange carries one byte-array
     * per (partition, term, salt) — posting-count-independent row count,
     * ~160x fewer rows and a fraction of the bytes of a per-posting shuffle.
-    * Dense docIds over the sorted corpus make each partition a contiguous
-    * docId range, so phase B (reduce side) merges partials by ordered
-    * concatenation. Hot terms split across salts BEFORE the shuffle, so no
-    * reducer receives a whole skewed posting list (north_rule skew
-    * handling).
+    * Phase B (reduce side) k-way merges a shard's partials with
+    * `PostingCodec.merge`. Hot terms split across salts BEFORE the
+    * shuffle, so no reducer receives a whole skewed posting list
+    * (north_rule skew handling).
     */
   private def writeSegments(spark: SparkSession, docs: DataFrame,
       hotTerms: Map[String, Int], segmentsDir: String, numBuckets: Int,
@@ -252,7 +251,7 @@ object IndexBuilder {
       Encoders.product[(String, Int, Int, Long, Long, Int, Array[Byte], Int)])
 
     // Phase B: co-locate by bucket, order runs by (term, salt, firstDocId),
-    // concatenate each run's disjoint ranges into the final shard
+    // merge each run's partials into the final shard
     val segs: Dataset[SegmentRow] = byRange(partials.toDF("term", "salt",
         "numSalts", "firstDocId", "shardDf", "maxTf", "bytes", "bucket"),
         "bucket", numBuckets)
@@ -278,31 +277,11 @@ object IndexBuilder {
             require(df <= Int.MaxValue,
               s"(term=$term, salt=$salt) shard has $df postings > Int.MaxValue" +
                 " — raise maxSalts/saltThreshold so shards stay addressable")
-            val merged =
-              if (parts.length == 1) parts(0)
-              else {
-                // partials normally cover disjoint docId ranges (contiguous
-                // file splits of the docId-sorted docs table); a scan that
-                // packed non-adjacent files into one partition can overlap
-                // ranges — detect and sort before re-encoding
-                val all = new Array[Posting](df.toInt)
-                var off = 0
-                for (bytes <- parts) {
-                  val ps = PostingCodec.decode(bytes)
-                  System.arraycopy(ps, 0, all, off, ps.length)
-                  off += ps.length
-                }
-                var monotonic = true
-                var i = 1
-                while (monotonic && i < all.length) {
-                  if (all(i).docId <= all(i - 1).docId) monotonic = false
-                  i += 1
-                }
-                if (!monotonic)
-                  java.util.Arrays.sort(all, Ordering.by((p: Posting) => p.docId))
-                PostingCodec.encode(all)
-              }
-            SegmentRow(term, salt, numSalts, df, maxTf, merged, bucket)
+            // each doc lives in exactly one docs partition, so the partials
+            // are disjoint even where a scan that packed non-adjacent files
+            // into one partition makes their docId ranges overlap
+            SegmentRow(term, salt, numSalts, df, maxTf,
+              PostingCodec.merge(parts.toSeq), bucket)
           }
         }
       }
@@ -508,7 +487,7 @@ object IndexBuilder {
         spark.read.schema(IndexSchemas.dict).parquet(prev.dictDir(indexDir))
           .select(col("term"), col("df"), col("cf"), col("maxTf"),
             col("numSalts").as("oldSalts"))
-          .unionByName(partials.withColumn("oldSalts", lit(null).cast("int")))
+          .unionByName(partials.withColumn("oldSalts", lit(null).cast(IntegerType)))
           .groupBy("term")
           .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"),
             max("oldSalts").as("oldSalts"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** One-call corpus curation: the standard LLM training-data preparation
   * pipeline the individual ops implement, composed in the canonical order
@@ -154,13 +155,13 @@ object Curation {
       else {
         val (tN, dN) = (cfg.repTopN, cfg.repDupN)
         val u = udf((text: String) => TextAnalysis.repetitionOf(text, tN, dN))
-        val nt = col("_rep._1").cast("long")
+        val nt = col("_rep._1").cast(LongType)
         val topOk = cfg.maxTopGramPct.map(p =>
-          col("_rep._2").cast("long") * 100 <=
+          col("_rep._2").cast(LongType) * 100 <=
             lit(p.toLong) * greatest(lit(1L), nt - (cfg.repTopN - 1)))
           .getOrElse(lit(true))
         val repOk = cfg.maxRepSpanPct.map(p =>
-          col("_rep._3").cast("long") * 100 <= lit(p.toLong) * nt)
+          col("_rep._3").cast(LongType) * 100 <= lit(p.toLong) * nt)
           .getOrElse(lit(true))
         gated.withColumn("_rep", u(col(textCol)))
           .filter(topOk && repOk).drop("_rep")

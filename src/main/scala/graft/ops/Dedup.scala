@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.CrossHash
@@ -370,8 +371,8 @@ object Dedup {
     jaccardVerify(cand, text, textCol, idCol, shingleSize)
       .filter(col("exact_jaccard") >= minJaccard)
       .select(col("idA"), col("idB"),
-        col("inter").cast("long").as("inter"),
-        col("uni").cast("long").as("uni"),
+        col("inter").cast(LongType).as("inter"),
+        col("uni").cast(LongType).as("uni"),
         col("exact_jaccard").as("jaccard"))
   }
 
@@ -401,7 +402,7 @@ object Dedup {
       .withColumn("inter", size(array_intersect(col("shA"), col("shB"))))
       .withColumn("uni", size(array_union(col("shA"), col("shB"))))
       .withColumn("exact_jaccard",
-        when(col("uni") > 0, col("inter").cast("double") / col("uni")).otherwise(0.0))
+        when(col("uni") > 0, col("inter").cast(DoubleType) / col("uni")).otherwise(0.0))
       .drop("shA", "shB")
   }
 
@@ -624,7 +625,7 @@ object Dedup {
     val shU = udf((s: String) => shinglesOf(s, n).distinct)
     // materialized once: exploded postings, prefix ranking, and both
     // verify joins all reuse the shingle sets
-    val sets = df.select(col(idCol).cast("long").as("_id"),
+    val sets = df.select(col(idCol).cast(LongType).as("_id"),
         shU(col(textCol)).as("sh"))
       .filter(size(col("sh")) > 0)
       .localCheckpoint(true)
@@ -649,7 +650,7 @@ object Dedup {
       col("sz").as("szB"), col("rn").as("rnB"))
     val cand = a.join(b, Seq("shingle"))
       .filter(col("idA") < col("idB") &&
-        least(col("szA"), col("szB")).cast("double") >=
+        least(col("szA"), col("szB")).cast(DoubleType) >=
           lit(minJaccard) * greatest(col("szA"), col("szB")))
       // the dedup shuffle doubles as the positional filter's min-position
       // aggregation — same exchange a plain distinct() would pay
@@ -675,10 +676,10 @@ object Dedup {
     val sb = pruned.select(col("_id").as("idB"), col("sh").as("sb"))
     candM.join(sa, "idA").join(sb, "idB")
       .withColumn("inter",
-        size(array_intersect(col("sa"), col("sb"))).cast("long"))
+        size(array_intersect(col("sa"), col("sb"))).cast(LongType))
       .withColumn("uni",
-        (size(col("sa")) + size(col("sb"))).cast("long") - col("inter"))
-      .filter(col("inter").cast("double") / col("uni") >= minJaccard)
+        (size(col("sa")) + size(col("sb"))).cast(LongType) - col("inter"))
+      .filter(col("inter").cast(DoubleType) / col("uni") >= minJaccard)
       .select("idA", "idB", "inter", "uni")
   }
 
@@ -875,7 +876,7 @@ object Dedup {
   def duplicateSpanCoverage(df: DataFrame, textCol: String, idCol: String,
       windowTokens: Int = 8, minDocs: Int = 2): DataFrame = {
     val covered = dupCoveredPositions(df, textCol, idCol, windowTokens, minDocs)
-      .groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_dup_tokens"))
+      .groupBy("doc_id").agg(count(lit(1)).cast(IntegerType).as("n_dup_tokens"))
     val toks = filter(split(col(textCol), "\\s+"), x => x =!= "")
     val nt = df.select(col(idCol).as("doc_id"),
       size(toks).as("n_tokens"))
@@ -1001,8 +1002,8 @@ object Dedup {
     // this loop used to pay is replaced by one shuffle at build time
     // (guide §2.4, keyed operations share one exchange).
     val edges = pairs
-      .select(col(idACol).cast("long").as("src"),
-        col(idBCol).cast("long").as("dst"))
+      .select(col(idACol).cast(LongType).as("src"),
+        col(idBCol).cast(LongType).as("dst"))
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Sequence packing and token chunking — the two layout operators an LLM
   * training-data pipeline runs after curation: pack documents into
@@ -100,8 +101,8 @@ object Packing {
       numRanges: Int, op: String): DataFrame = {
     require(numRanges > 0, "numRanges must be positive")
     Dedup.requireIntegralId(df, idCol, op)
-    val counted = df.select(col(idCol).cast("long").as("_id"),
-      size(wsTokens(col(textCol))).cast("long").as("n_tokens"))
+    val counted = df.select(col(idCol).cast(LongType).as("_id"),
+      size(wsTokens(col(textCol))).cast(LongType).as("n_tokens"))
     val Array(minId, maxId, nRows, nIds) = counted.agg(
         min("_id"), max("_id"), count(lit(1)), count(col("_id")))
       .collect()(0) match {
@@ -155,13 +156,13 @@ object Packing {
     val docs = df.select(col(idCol), wsTokens(col(textCol)).as("_toks"))
     manifest.join(docs, Seq(idCol))
       .select(col("seq_id"), struct(col("seq_off"),
-        slice(col("_toks"), (col("doc_off") + 1).cast("int"),
-          col("take_len").cast("int")).as("part")).as("_seg"))
+        slice(col("_toks"), (col("doc_off") + 1).cast(IntegerType),
+          col("take_len").cast(IntegerType)).as("part")).as("_seg"))
       .groupBy("seq_id")
       .agg(sort_array(collect_list(col("_seg"))).as("_segs"))
       .select(col("seq_id"),
         flatten(transform(col("_segs"), s => s.getField("part"))).as("_st"))
-      .select(col("seq_id"), size(col("_st")).cast("int").as("n_seq_tokens"),
+      .select(col("seq_id"), size(col("_st")).cast(IntegerType).as("n_seq_tokens"),
         array_join(col("_st"), " ").as("seq_text"))
   }
 
@@ -183,18 +184,18 @@ object Packing {
       "stride must be in [1, chunkSize]")
     val withT = df
       .select(col(idCol), wsTokens(col(textCol)).as("_toks"))
-      .withColumn("_n", size(col("_toks")).cast("long"))
+      .withColumn("_n", size(col("_toks")).cast(LongType))
       .filter(col("_n") > 0)
     val lastStart = when(col("_n") <= chunkSize, lit(0L)).otherwise(
       expr(s"((_n - $chunkSize + $stride - 1) div $stride) * ${stride}L"))
-    val chunk = slice(col("_toks"), (col("_start") + 1).cast("int"),
+    val chunk = slice(col("_toks"), (col("_start") + 1).cast(IntegerType),
       lit(chunkSize))
     withT
       .withColumn("_start",
         explode(sequence(lit(0L), lastStart, lit(stride.toLong))))
       .select(col(idCol),
         expr(s"_start div ${stride}L").as("chunk_id"),
-        size(chunk).cast("int").as("n_chunk_tokens"),
+        size(chunk).cast(IntegerType).as("n_chunk_tokens"),
         array_join(chunk, " ").as("chunk_text"))
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Text-analysis operators for training-data pipelines: token statistics,
   * quality scoring, n-gram language id, and rolling-hash fingerprints.
@@ -32,11 +33,11 @@ object TextAnalysis {
     */
   def qualityScore(df: DataFrame, textCol: String): DataFrame = {
     val t = tokens(col(textCol))
-    val nTok = size(t).cast("double")
+    val nTok = size(t).cast(DoubleType)
     val diversity = when(nTok > 0, size(array_distinct(t)) / nTok).otherwise(0.0)
     val stopRatio = when(nTok > 0,
       size(filter(t, x => x.isin(stopwords: _*))) / nTok).otherwise(0.0)
-    val punct = length(regexp_replace(col(textCol), "[^\\p{Punct}]", "")).cast("double")
+    val punct = length(regexp_replace(col(textCol), "[^\\p{Punct}]", "")).cast(DoubleType)
     val punctRatio = when(length(col(textCol)) > 0,
       punct / length(col(textCol))).otherwise(0.0)
     val lengthOk = when(nTok.between(10, 100000), 1.0).otherwise(0.3)
@@ -198,8 +199,8 @@ object TextAnalysis {
     val total = counts.agg(sum("n_occ").as("total"))
     counts.crossJoin(broadcast(total))
       .select(col("token"), col("n_occ"),
-        round(log(col("n_occ").cast("double") / col("total"))
-          * lit(-1e6), 0).cast("long").as("nll_micro"))
+        round(log(col("n_occ").cast(DoubleType) / col("total"))
+          * lit(-1e6), 0).cast(LongType).as("nll_micro"))
   }
 
   /** Per-document unigram negative log-likelihood against a [[unigramLm]]

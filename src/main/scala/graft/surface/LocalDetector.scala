@@ -2,6 +2,7 @@ package graft.surface
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.analyzer.{Analyzer, Analyzers}
 import graft.index.{Posting, PostingCodec, SnapshotMeta}
@@ -159,7 +160,7 @@ object LocalDetector {
     val languagesList = languages.toList
     val language = languages.headOption.getOrElse("en")
     messages
-      .select(col(cols(0)).cast("long"), col(cols(1)).cast("string"))
+      .select(col(cols(0)).cast(LongType), col(cols(1)).cast(StringType))
       .as[(Long, String)]
       .mapPartitions { it =>
         val localIdx = bc.value

@@ -226,6 +226,27 @@ class SurfaceSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$dir/v${m1.version}/dictionary")
       .filter(col("value") === "Goa").count() == 1)
     assert(m3.version == m2.version + 1)
+
+    // delete-by-query (reference S7) drops one entity's rows in the given
+    // languages only; the data-quality probe (reference P6) lists exactly
+    // the records whose variants are null or empty
+    EntityStore.upsert(spark, dir, Seq[(String, String, Option[Seq[String]], String)](
+      ("city", "Pune", Some(Seq("pune")), "en"),
+      ("city", "Pune", Some(Seq("पुणे")), "hi"),
+      ("city", "Goa", Some(Seq.empty), "mr"),
+      ("cuisine", "Goan", Some(Seq("goan")), "en"),
+      ("cuisine", "Sabudana", None, "mr")
+    ).toDF("entity_data", "value", "variants", "language_script"))
+    def records(d: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
+      d.select("entity_data", "value", "language_script")
+        .as[(String, String, String)].collect().toSet
+    assert(records(EntityStore.missingVariants(spark, dir)) ==
+      Set(("city", "Goa", "mr"), ("cuisine", "Sabudana", "mr")))
+    EntityStore.deleteWhere(spark, dir, "city", Seq("en", "mr"))
+    assert(records(EntityStore.dictionary(spark, dir)) == Set(
+      ("city", "Pune", "hi"), ("cuisine", "Goan", "en"), ("cuisine", "Sabudana", "mr")))
+    assert(records(EntityStore.missingVariants(spark, dir)) ==
+      Set(("cuisine", "Sabudana", "mr")))
   }
 
   test("bulk detection equals per-message detection (msearch fusion)") {
