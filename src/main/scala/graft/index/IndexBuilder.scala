@@ -325,17 +325,12 @@ object IndexBuilder {
   def buildDelta(newCorpus: DataFrame, indexDir: String,
       cfg: IndexConfig = IndexConfig(),
       onStageTime: (String, Double) => Unit = (_, _) => ()): SnapshotMeta = {
-    val anySnapshot = Snapshot.load(indexDir)
-    val prevOpt = anySnapshot
-      .filter(_.formatVersion == Snapshot.CurrentFormatVersion)
+    val prevOpt = Snapshot.load(indexDir)
     // a stale-format snapshot must NOT silently become a full build of just
     // this batch — that would swap the pointer to an index missing every
     // previously indexed doc; the caller owns the full corpus and must
     // rebuild from it (StreamingIngest does exactly that)
-    require(anySnapshot.isEmpty || prevOpt.nonEmpty,
-      s"snapshot at $indexDir has a stale on-disk format " +
-        s"(${anySnapshot.get.formatVersion} != ${Snapshot.CurrentFormatVersion})" +
-        " — rebuild with a full build over the complete corpus")
+    prevOpt.foreach(Snapshot.requireCurrentFormat(indexDir, _))
     prevOpt.foreach(prev => require(prev.numBuckets == cfg.numBuckets &&
       prev.maxSalts == cfg.maxSalts && prev.k1 == cfg.k1 && prev.b == cfg.b &&
       prev.analyzer == cfg.analyzer,

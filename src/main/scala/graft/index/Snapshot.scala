@@ -88,6 +88,15 @@ object Snapshot {
   val CurrentFormatVersion = 3 // v3: posting codec gained the norms slot
                                // (flags + per-posting doclen + block minDoclen)
 
+  /** Refuse a snapshot written in an older on-disk format: decoding it
+    * with this code's codec would misread its postings.
+    */
+  private[graft] def requireCurrentFormat(indexDir: String, meta: SnapshotMeta): Unit =
+    require(meta.formatVersion == CurrentFormatVersion,
+      s"snapshot at $indexDir has a stale on-disk format " +
+        s"(${meta.formatVersion} != $CurrentFormatVersion)" +
+        " — rebuild with a full build over the complete corpus")
+
   private def metaDir(indexDir: String): Path = Paths.get(indexDir, "meta")
 
   /** The one atomic `current`-pointer swap kernel — shared by the index

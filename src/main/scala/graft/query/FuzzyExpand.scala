@@ -5,7 +5,7 @@ import graft.functions.EditDistance
 /** ES-style fuzzy term expansion over an in-memory dictionary: auto:4,7
   * edit budget, first char fixed, <= 50 expansions per token preferring
   * smaller edit distance then higher df (reference fuzziness semantics,
-  * see Searcher.expandFuzzySpark for the large-vocabulary Spark twin).
+  * see Searcher.fuzzyExpandByToken for the large-vocabulary Spark twin).
   * Shared by the driver-cached reader tier (IndexReader) and the broadcast
   * dictionary detector (surface.LocalDetector) so both resolve queries
   * byte-identically.

@@ -21,7 +21,8 @@ import scala.collection.concurrent.TrieMap
   *  - coordinator: a larger index resolves terms from the in-memory
   *    dictionary when its vocabulary fits (parquet pushdown otherwise), and
   *    the first query touching a term fetches its shards, merged the same
-  *    way, into a byte-budgeted LRU cache; repeats serve driver-locally;
+  *    way, into one byte-budgeted, access-ordered (LRU) map; repeats serve
+  *    driver-locally;
   *  - scatter-gather: terms past that budget (or a disabled cache) run WAND
   *    over a PERSISTED segments Dataset — one narrow job + one small
   *    shuffle per query, no file IO after warm-up.
@@ -87,46 +88,36 @@ final class IndexReader private (
 
   // ---- term resolution ----
 
-  def resolve(queryText: String, fuzzy: Boolean = false): Searcher.ResolvedQuery = {
-    // analyze with the INDEX's analyzer (manifest-recorded) — the
-    // index/query symmetry invariant, now per-snapshot
-    val tokens = graft.analyzer.Analyzers.analyze(meta.analyzer, queryText)
-      .distinct.sorted.toSeq
-    val terms: Seq[Searcher.TermStats] =
-      if (tokens.isEmpty) Seq.empty
-      else if (!fuzzy) lookup(tokens)
-      else expandFuzzy(tokens)
-    Searcher.ResolvedQuery(terms.sortBy(_.term), meta)
-  }
+  /** One message's resolution: exactly `resolveBulk` of that message. */
+  def resolve(queryText: String, fuzzy: Boolean = false): Searcher.ResolvedQuery =
+    resolveBulk(Seq(queryText), fuzzy).head
 
-  /** Bulk resolution (J1): on the distributed tier a cold `resolve` pays
-    * one dictionary-pushdown job per query with novel tokens; resolving a
-    * batch together runs ONE dictionary job over the union token set —
-    * exact lookups warm the dict cache, fuzzy expansion runs once per
-    * union token (expansion is a pure function of the token, so each
-    * message's term set assembles from the shared per-token map exactly
-    * as its own resolve() would have computed it).
+  /** Batch resolution, the msearch shape: the messages' union token set
+    * resolves in one pass — on the distributed tier ONE dictionary job,
+    * not one per message — and each message's term set assembles from the
+    * shared per-token map. Expansion is a pure function of the token, so a
+    * message resolves the same alone or in any batch. Queries analyze with
+    * the INDEX's analyzer (manifest-recorded), the index/query symmetry
+    * invariant. Fuzzy expansion is ES-style (auto:4,7, prefix_length 1,
+    * max 50/token — see FuzzyExpand): an in-memory scan when the
+    * dictionary is driver-resident, a Spark filter over its parquet
+    * otherwise.
     */
   def resolveBulk(texts: Seq[String],
       fuzzy: Boolean = false): Seq[Searcher.ResolvedQuery] = {
     val analyzed = texts.map(t =>
-      graft.analyzer.Analyzers.analyze(meta.analyzer, t).distinct.sorted.toSeq)
+      graft.analyzer.Analyzers.analyze(meta.analyzer, t).distinct.toSeq)
     val union = analyzed.flatten.distinct.sorted
-    if (union.isEmpty)
-      return analyzed.map(_ => Searcher.ResolvedQuery(Seq.empty, meta))
-    if (!fuzzy) {
-      lookup(union) // one job; per-message assembly below is cache-only
-      analyzed.map(toks =>
-        Searcher.ResolvedQuery(lookup(toks).sortBy(_.term), meta))
-    } else {
-      val byToken: Map[String, Seq[Searcher.TermStats]] = dictMap match {
+    val byToken: Map[String, Seq[Searcher.TermStats]] =
+      if (union.isEmpty) Map.empty
+      else if (!fuzzy) lookup(union).map(ts => ts.term -> Seq(ts)).toMap
+      else dictMap match {
         case Some(m) => union.map(t => t -> FuzzyExpand.expand(m, Seq(t))).toMap
-        case None => Searcher.expandFuzzySparkByToken(spark, dictDf, union)
+        case None => Searcher.fuzzyExpandByToken(spark, dictDf, union)
       }
-      analyzed.map { toks =>
-        val terms = toks.flatMap(t => byToken.getOrElse(t, Nil)).distinct
-        Searcher.ResolvedQuery(terms.sortBy(_.term), meta)
-      }
+    analyzed.map { toks =>
+      val terms = toks.flatMap(t => byToken.getOrElse(t, Nil)).distinct
+      Searcher.ResolvedQuery(terms.sortBy(_.term), meta)
     }
   }
 
@@ -152,91 +143,67 @@ final class IndexReader private (
         tokens.flatMap(t => dictCache.getOrElse(t, None))
     }
 
-  /** ES-style fuzzy expansion (auto:4,7, prefix_length 1, max 50/token —
-    * see Searcher scaladoc). In-memory scan on the cached tier; Spark
-    * filter over the dictionary otherwise.
-    */
-  private def expandFuzzy(tokens: Seq[String]): Seq[Searcher.TermStats] = {
-    dictMap match {
-      case Some(m) => FuzzyExpand.expand(m, tokens)
-      case None => Searcher.expandFuzzySpark(spark, dictDf, tokens)
-    }
-  }
-
   // ---- search ----
 
   /** Per-term shard cache for the distributed tier — the ES coordinator
     * model: the FIRST query touching a term fetches that term's (salt)
     * shards with one narrow pushdown job; repeats serve driver-locally at
     * cached-tier latency. Byte-budgeted; a query whose terms exceed the
-    * budget falls back to scatter-gather. Eviction is LRU: a hit re-ranks
-    * the term to the tail. Measured head-to-head against FIFO on a
-    * Zipf(1.1) single-term workload at 40% budget: on skewed workloads
-    * whose head set fits the budget, LRU keeps the head resident where
-    * FIFO cycles it out (0.680 vs 0.626 hit-rate, 1.4x lower total
-    * latency); the hit-path cost is one synchronized remove/add,
-    * negligible next to the pushdown job each miss pays.
+    * budget falls back to scatter-gather.
+    *
+    * One access-ordered map (head = least recently used) holds it, and
+    * everything else — lookup (which bumps the entry to the tail),
+    * admission, head-first eviction to the byte budget, the resident
+    * bytes and the hit/miss counters — changes under that map's one
+    * monitor. The Spark fetch of missing terms runs outside the lock, so
+    * concurrent queries never wait on each other's jobs. LRU measured
+    * head-to-head against FIFO on a Zipf(1.1) single-term workload at 40%
+    * budget keeps the head set resident where FIFO cycles it out (0.680
+    * vs 0.626 hit-rate, 1.4x lower total latency).
     */
-  private val shardCache = TrieMap.empty[String, SegShard]
-  private val shardCacheBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  // recency-ordered victim list (head = next victim), guarded by its own
-  // monitor; hits move their term to the tail under the same lock
-  private val shardCacheOrder = new java.util.LinkedHashSet[String]()
-  private val shardCacheHits = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val shardCacheMisses = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val shardCache = new java.util.LinkedHashMap[String, SegShard](16, 0.75f, true)
+  private var shardCacheBytes = 0L
+  private var shardCacheHits = 0L
+  private var shardCacheMisses = 0L
 
   /** (hits, misses) of the term-shard cache since this reader opened —
     * a term counted once per query that references it.
     */
   def shardCacheStats: (Long, Long) =
-    (shardCacheHits.get(), shardCacheMisses.get())
+    shardCache.synchronized((shardCacheHits, shardCacheMisses))
 
   /** Bytes currently resident in the term-shard cache. */
-  def shardCacheBytesUsed: Long = shardCacheBytes.get()
+  def shardCacheBytesUsed: Long = shardCache.synchronized(shardCacheBytes)
 
   /** The merged list of each of `termNames` through the shard cache; None
     * when a term is past its byte budget.
     */
   private def fetchShardsByName(termNames: Seq[String]): Option[Map[String, SegShard]] = {
-    val missing = termNames.filterNot(shardCache.contains)
-    shardCacheHits.addAndGet((termNames.length - missing.length).toLong)
-    shardCacheMisses.addAndGet(missing.length.toLong)
-    if (missing.nonEmpty) {
-      val fetched = IndexReader.merged(segsDs.filter(col("term").isin(missing: _*)).collect())
-      // single lock around accounting: two threads fetching the same term
-      // must not double-insert into the victim list or double-count the bytes
-      shardCacheOrder.synchronized {
-        for (t <- missing if !shardCache.contains(t); shard <- fetched.get(t)) {
-          val bytes = shard.postings.length.toLong
-          if (bytes <= cfg.maxQueryShardCacheBytes) {
-            // evict from the head (least recently used) until the new term fits
-            while (shardCacheBytes.get() + bytes > cfg.maxQueryShardCacheBytes &&
-              !shardCacheOrder.isEmpty) {
-              val it = shardCacheOrder.iterator()
-              val victim = it.next()
-              it.remove()
-              shardCache.remove(victim).foreach(v =>
-                shardCacheBytes.addAndGet(-v.postings.length.toLong))
-            }
-            if (shardCacheBytes.get() + bytes <= cfg.maxQueryShardCacheBytes) {
-              shardCache.put(t, shard)
-              shardCacheOrder.add(t)
-              shardCacheBytes.addAndGet(bytes)
-            }
-          }
+    val missing = shardCache.synchronized {
+      val m = termNames.filterNot(shardCache.containsKey)
+      shardCacheHits += termNames.length - m.length
+      shardCacheMisses += m.length
+      m
+    }
+    val fetched =
+      if (missing.isEmpty) Map.empty[String, SegShard]
+      else IndexReader.merged(segsDs.filter(col("term").isin(missing: _*)).collect())
+    val budget = cfg.maxQueryShardCacheBytes
+    shardCache.synchronized {
+      // a term another query admitted meanwhile is not admitted twice
+      for (t <- missing; shard <- fetched.get(t)
+           if !shardCache.containsKey(t) && shard.postings.length <= budget) {
+        val victims = shardCache.values.iterator
+        while (shardCacheBytes + shard.postings.length > budget) {
+          shardCacheBytes -= victims.next().postings.length
+          victims.remove()
         }
+        shardCache.put(t, shard)
+        shardCacheBytes += shard.postings.length
       }
+      val all = termNames.flatMap(t => Option(shardCache.get(t)).map(t -> _))
+      if (all.length == termNames.length) Some(all.toMap) else None
     }
-    val all = termNames.flatMap { t =>
-      val hit = shardCache.get(t)
-      if (hit.isDefined) shardCacheOrder.synchronized {
-        // re-rank to the tail; skip terms that were never admitted (over
-        // budget) or already evicted between the lookup and this bump
-        if (shardCacheOrder.remove(t)) shardCacheOrder.add(t)
-      }
-      hit.map(t -> _)
-    }
-    if (all.length == termNames.length) Some(all.toMap) else None
   }
 
   def searchHits(rq: Searcher.ResolvedQuery, k: Int): Array[Hit] = {
@@ -305,12 +272,14 @@ object IndexReader {
     * and opening it drops the older versions' readers for the same (dir,
     * config) from the cache and unpersists their segments — otherwise
     * every commit would keep the superseded reader's driver maps or
-    * persisted segments alive for the life of the session.
+    * persisted segments alive for the life of the session. A snapshot in
+    * an older on-disk format is refused, as buildDelta refuses it.
     */
   def open(spark: SparkSession, indexDir: String,
       cfg: ReaderConfig = ReaderConfig()): IndexReader = {
     val meta = Snapshot.load(indexDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot at $indexDir"))
+    Snapshot.requireCurrentFormat(indexDir, meta)
     openReaders.getOrElseUpdate((indexDir, meta.version, cfg), {
       import spark.implicits._
       // serving-tier sizing: recorded in the manifest at build time (zero

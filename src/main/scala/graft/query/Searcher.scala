@@ -3,18 +3,19 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analyzer.Analyzer
 import graft.functions.EditDistance
-import graft.index.{Hashing, Snapshot, SnapshotMeta}
+import graft.index.{Hashing, IndexSchemas, PostingCodec, Snapshot, SnapshotMeta}
 
 /** Top-k BM25 search over a committed index snapshot.
   *
-  * Public entry points open a cached IndexReader (driver-resident serving
-  * for small indexes, persisted-Dataset scatter-gather for large ones — see
-  * IndexReader). The exact scorer below is the independent rank-parity
-  * oracle: it reads segment parquet directly (partition-pruned by bucket,
-  * term-pushdown), decodes every posting, and aggregates with the identical
-  * BM25 kernel + term-ordered summation.
+  * Public entry points open a cached IndexReader, which serves from one of
+  * three tiers (see IndexReader): driver-cached posting lists for small
+  * indexes, a coordinator's byte-budgeted cache of fetched term shards for
+  * larger ones, and persisted-Dataset scatter-gather past that budget. The
+  * exact scorer below is the independent rank-parity oracle: it reads
+  * segment parquet directly (partition-pruned by bucket, term-pushdown),
+  * decodes every posting, and aggregates with the identical BM25 kernel +
+  * term-ordered summation.
   */
 object Searcher {
 
@@ -75,23 +76,12 @@ object Searcher {
     perTask.sortBy(h => (-h.score, h.docId)).take(k)
   }
 
-  /** ES-style fuzzy expansion as a Spark job over the dictionary parquet —
-    * the large-vocabulary path (see IndexReader.expandFuzzy for semantics:
-    * auto:4,7 edit budget, first char fixed, <=50 expansions per token
-    * preferring smaller edit distance then higher df).
+  /** ES-style fuzzy expansion as ONE Spark job over the dictionary parquet
+    * for any number of tokens — the large-vocabulary twin of FuzzyExpand
+    * (auto:4,7 edit budget, first char fixed, <=50 expansions per token
+    * preferring smaller edit distance then higher df), keyed by token.
     */
-  private[query] def expandFuzzySpark(spark: SparkSession,
-      dict: DataFrame, tokens: Seq[String]): Seq[TermStats] =
-    expandFuzzySparkByToken(spark, dict, tokens)
-      .values.flatten.toSeq.distinct
-
-  /** Per-token view of the same expansion — ONE dictionary job for any
-    * number of tokens; bulk callers resolve a whole batch's union token
-    * set and assemble per-message term sets from this map (expansion is a
-    * pure function of the token, so per-message assembly is exactly what
-    * per-message resolve() would have computed).
-    */
-  private[query] def expandFuzzySparkByToken(spark: SparkSession,
+  private[query] def fuzzyExpandByToken(spark: SparkSession,
       dict: DataFrame, tokens: Seq[String]): Map[String, Seq[TermStats]] = {
     if (tokens.isEmpty) return Map.empty
     val exact = tokens.filter(t => EditDistance.autoFuzzyEdits(t.length) == 0)
@@ -143,33 +133,41 @@ object Searcher {
       }
   }
 
+  /** The exact BM25 scan both Spark-side scorers share: every
+    * generation's segment rows for `terms` (bucket partitions pruned, term
+    * pushed down), decoded, one (docId, term, idf * tf-weight) row per
+    * posting. Callers sum a doc's rows in lexicographic term order.
+    */
+  private[graft] def contributions(spark: SparkSession, indexDir: String,
+      meta: SnapshotMeta, terms: Seq[TermStats]): Dataset[(Long, String, Double)] = {
+    import spark.implicits._
+    val bm25 = BM25(meta.k1, meta.b)
+    val avgdl = meta.avgDocLen
+    val idfB = spark.sparkContext.broadcast(
+      terms.map(t => t.term -> bm25.idf(t.df, meta.numDocs)).toMap)
+    val buckets = terms.flatMap(t =>
+      (0 until t.numSalts).map(s => Hashing.bucketOf(t.term, s, meta.numBuckets)))
+      .distinct
+    IndexSchemas.readSegments(spark, meta.segmentsDirs(indexDir))
+      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms.map(_.term): _*))
+      .select("term", "postings")
+      .as[(String, Array[Byte])]
+      .flatMap { case (term, postings) =>
+        PostingCodec.decode(postings).iterator
+          .map(p => (p.docId, term,
+            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, avgdl))))
+      }
+  }
+
   /** Exact distributed scorer — the rank-parity oracle (replaces the
-    * reference's mocked-ES harness, SURVEY.md §5). Independent path: reads
-    * parquet directly with bucket partition-pruning + term pushdown.
+    * reference's mocked-ES harness, SURVEY.md §5). Independent of every
+    * serving tier: the `contributions` scan, summed per doc.
     */
   def searchExactHits(spark: SparkSession, indexDir: String,
       rq: ResolvedQuery, k: Int): Array[Hit] = {
     import spark.implicits._
     if (rq.terms.isEmpty) return Array.empty
-    val meta = rq.meta
-    val indexDirLocal = indexDir
-    val bm25 = rq.bm25
-    val idf = rq.terms.map(t => t.term -> bm25.idf(t.df, meta.numDocs)).toMap
-    val termNames = rq.terms.map(_.term)
-    val buckets = rq.terms.flatMap(t =>
-      (0 until t.numSalts).map(s => Hashing.bucketOf(t.term, s, meta.numBuckets)))
-      .distinct
-    val idfB = spark.sparkContext.broadcast(idf)
-    graft.index.IndexSchemas
-      .readSegments(spark, meta.segmentsDirs(indexDirLocal))
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(termNames: _*))
-      .select("term", "postings")
-      .as[(String, Array[Byte])]
-      .flatMap { case (term, postings) =>
-        graft.index.PostingCodec.decode(postings).iterator
-          .map(p => (p.docId, term,
-            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-      }
+    contributions(spark, indexDir, rq.meta, rq.terms)
       .groupByKey(_._1)
       .mapGroups { (docId, it) =>
         // sum in lexicographic term order — the shared determinism contract
@@ -202,7 +200,7 @@ object Searcher {
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     val fetched: Map[Long, (String, String, String, String, String)] =
       if (hitRows.isEmpty) Map.empty
-      else spark.read.schema(graft.index.IndexSchemas.docs)
+      else spark.read.schema(IndexSchemas.docs)
         .parquet(meta.docsDirs(indexDir): _*)
         .select("docId", "repo", "path", "commit", "lang", "sha256")
         .filter(col("docId").isin(hitRows.map(_._2).toSeq: _*))

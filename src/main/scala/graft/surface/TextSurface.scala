@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 import graft.analyzer.Analyzer
-import graft.index.{Posting, PostingCodec}
-import graft.query.{BM25, IndexReader, Searcher}
+import graft.index.Posting
+import graft.query.{IndexReader, Searcher}
 
 /** The `/v2/text` detection path (SURVEY.md §3.1) on the engine:
   *
@@ -161,7 +161,8 @@ object TextSurface {
 
   /** The relational plan of searchVariantsBulk: ALL messages' terms resolve
     * once, the postings of the union term set decode in ONE pass over the
-    * segments parquet with the terms pushed down, and scoring fans back out
+    * segments parquet (Searcher.contributions, the exact oracle's scan:
+    * bucket partitions pruned, terms pushed down), and scoring fans back out
     * per message via a broadcast (message, term) join → per-doc score +
     * matched-term set → join the (filtered) forward index with parquet
     * pushdown on entity/language → R1 full-coverage → top `size` per
@@ -174,31 +175,19 @@ object TextSurface {
     import spark.implicits._
     val reader = IndexReader.open(spark, storeDir)
     val meta = reader.meta
-    // one dictionary job for the whole batch (resolveBulk warms the dict
-    // cache with the union token set), not one per message
+    // one dictionary job for the whole batch (resolveBulk resolves the
+    // union token set once), not one per message
     val resolved: Seq[Searcher.ResolvedQuery] =
       reader.resolveBulk(messages, fuzzy)
     val allTerms = resolved.flatMap(_.terms).distinctBy(_.term)
     if (allTerms.isEmpty) return messages.map(_ => Seq.empty)
-    val bm25 = BM25(meta.k1, meta.b)
-    val idf = allTerms.map(t => t.term -> bm25.idf(t.df, meta.numDocs)).toMap
-    val idfB = spark.sparkContext.broadcast(idf)
-    val termNames = allTerms.map(_.term)
 
     // (msgId, term) fan-out table — tiny, broadcast side of the join
     val msgTerms = resolved.zipWithIndex
       .flatMap { case (rq, i) => rq.terms.map(t => (i, t.term)) }
       .toDF("msgId", "term")
 
-    val contributions = graft.index.IndexSchemas
-      .readSegments(spark, meta.segmentsDirs(storeDir))
-      .filter(col("term").isin(termNames: _*))
-      .select("term", "postings").as[(String, Array[Byte])]
-      .flatMap { case (term, postings) =>
-        PostingCodec.decode(postings).iterator
-          .map(p => (p.docId, term,
-            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-      }
+    val contributions = Searcher.contributions(spark, storeDir, meta, allTerms)
       .toDF("docId", "term", "contrib")
 
     val scored = contributions

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.index.Snapshot
 import graft.surface.{EntityStore, TextSurface}
 import graft.surface.TextSurface.{EntitySpec, VerifiedDetection}
 
@@ -45,16 +46,20 @@ object DetectCli {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    args.lift(2).foreach { csvDir =>
-      if (!Files.exists(Paths.get(storeDir, "manifest"))) {
-        val dict = EntityStore.readCsvDir(spark, csvDir)
-        EntityStore.commitDictionary(spark, storeDir, dict)
-      }
-    }
+    args.lift(2).foreach(bootstrap(spark, storeDir, _))
 
     println(run(spark, storeDir, body))
     spark.stop()
   }
+
+  /** Commit the `<entity>.csv` dictionaries under csvDir as the store's
+    * first snapshot; a store that already has one is left as it is.
+    */
+  private[graft] def bootstrap(spark: SparkSession, storeDir: String,
+      csvDir: String): Unit =
+    if (Snapshot.currentVersion(storeDir).isEmpty)
+      EntityStore.commitDictionary(spark, storeDir,
+        EntityStore.readCsvDir(spark, csvDir))
 
   /** Request body → response body, both in the reference's JSON shapes. */
   def run(spark: SparkSession, storeDir: String, body: String): String = {

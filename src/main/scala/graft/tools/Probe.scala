@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkEntry
-import graft.query.IndexReader
+import graft.query.{IndexReader, Searcher}
 
 /** Measurement probe over the contract queries and the serving tiers, in
   * one session with [[graft.Bench]]'s settings (AQE on, 4 MiB max partition
@@ -33,6 +33,12 @@ import graft.query.IndexReader
   *  - `tiers <indexDir>`: warm p50/p95/qps of Bench's reference queries
   *    (top-100) on each serving tier: scatter-gather, coordinator (term
   *    shard cache) and driver-cached.
+  *  - `parity <indexDir> [k] [otherIndexDir]`: rank-parity audit of an
+  *    existing index — block-max WAND vs the exact scorer, exact float and
+  *    tie equality at top-k (default 100), over the reference queries plus
+  *    one fuzzy query. With a second index (same corpus, built at another
+  *    core count), also checks that both carry the same corpus stats and
+  *    answer every query identically.
   */
 object Probe {
 
@@ -63,9 +69,15 @@ object Probe {
         val qs = known(names)
         plan(_, sfDir, outDir, suffix, qs)
       case Seq("tiers", indexDir) => tiers(_, indexDir)
+      case Seq("parity", indexDir, rest @ _*) if rest.length <= 2 =>
+        val k = rest.headOption.getOrElse("100")
+        require(k.nonEmpty && k.forall(_.isDigit) && k.toInt >= 1,
+          s"k must be a positive integer: $k")
+        parity(_, indexDir, k.toInt, rest.lift(1))
       case _ => throw new IllegalArgumentException("usage: Probe " +
         "time <sfDir> <trials> [query ...] | jobs <sfDir> <query> | " +
-        "plan <sfDir> <outDir> <suffix> [query ...] | tiers <indexDir>")
+        "plan <sfDir> <outDir> <suffix> [query ...] | tiers <indexDir> | " +
+        "parity <indexDir> [k] [otherIndexDir]")
     }
   }
 
@@ -189,5 +201,35 @@ object Probe {
     bench("scatter-gather", IndexReader.ReaderConfig(0, 0, 0))
     bench("coordinator", IndexReader.ReaderConfig(0, 0, 256L << 20))
     bench("driver-cached", IndexReader.ReaderConfig())
+  }
+
+  private def parity(spark: SparkSession, indexDir: String, k: Int,
+      otherDir: Option[String]): Unit = {
+    val queries = ReferenceQueries.map(_ -> false) :+ ("improt mrege" -> true)
+    val r = IndexReader.open(spark, indexDir)
+    var ok = 0
+    for ((q, fuzzy) <- queries) {
+      val rq = r.resolve(q, fuzzy)
+      val wand = r.searchHits(rq, k).toSeq
+      val exact = Searcher.searchExactHits(spark, indexDir, rq, k).toSeq
+      if (wand == exact) { ok += 1; println(s"[parity] OK   '$q' (${wand.length} hits)") }
+      else println(s"[parity] DIFF '$q' (${wand.length} hits)\n" +
+        s"  wand : ${wand.take(3)}\n  exact: ${exact.take(3)}")
+    }
+    println(s"[parity] $ok/${queries.length} rank-identical at k=$k over ${r.meta.numDocs} docs")
+    otherDir.foreach { dir2 =>
+      val r2 = IndexReader.open(spark, dir2)
+      val (m1, m2) = (r.meta, r2.meta)
+      println("[parity] cross-index stats identical: " + (m1.numDocs == m2.numDocs &&
+        m1.avgDocLen == m2.avgDocLen && m1.corpusFingerprint == m2.corpusFingerprint))
+      var same = 0
+      for ((q, fuzzy) <- queries) {
+        val h1 = r.searchHits(r.resolve(q, fuzzy), k).toSeq
+        val h2 = r2.searchHits(r2.resolve(q, fuzzy), k).toSeq
+        if (h1 == h2) same += 1
+        else println(s"[parity] XDIFF '$q': ${h1.take(2)} vs ${h2.take(2)}")
+      }
+      println(s"[parity] $same/${queries.length} identical across build parallelisms")
+    }
   }
 }

@@ -106,4 +106,34 @@ class AnalyzerSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Analyzers.analyze("nope", "x"))
   }
 
+  /** Seeded scalacheck Gens (as in PostingCodecSpec): text mixing ASCII,
+    * punctuation, digits and non-ASCII letters and marks.
+    */
+  test("property: index-time and query-time analyzers emit the same terms (seeded)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val nonAscii = Seq("é", "ß", "İ", "ı", "ǅ", "ﬁ", "北京", "привет", "हिंदी",
+      "e\u0301", "\ud83d\ude00", "\u00a0", "ŉ", "Σς")
+    val piece = Gen.oneOf(
+      Gen.asciiPrintableStr,
+      Gen.listOf(Gen.oneOf(" .,;:!?-_'\"()[]{}<>/\\|@#$%^&*+=~`\t\n\r")).map(_.mkString),
+      Gen.numStr,
+      Gen.alphaStr,
+      Gen.listOf(Gen.oneOf(nonAscii)).map(_.mkString))
+    val genText = for {
+      pieces <- Gen.listOf(piece)
+      seps <- Gen.listOfN(pieces.length, Gen.oneOf("", " ", "_", ".", "\t"))
+    } yield pieces.zip(seps).map { case (p, s) => p + s }.mkString
+    for (i <- 1 to 500) {
+      val text = genText(Gen.Parameters.default, Seed(i.toLong)).get
+      for (name <- Seq(Analyzers.Standard, Analyzers.Whitespace)) {
+        val counts = Analyzers.analyze(name, text).groupBy(identity)
+          .map { case (t, ts) => (t, ts.length) }.toSeq.sortBy(_._1)
+        assert(Analyzers.termFrequencies(name, text).toSeq == counts,
+          s"$name seed $i: '$text'")
+      }
+      assert(Analyzer.analyzeWithOffsets(text).map(_.term).toSeq ==
+        Analyzer.analyze(text).toSeq, s"standard offsets seed $i: '$text'")
+    }
+  }
 }

@@ -369,7 +369,7 @@ class EngineSpec extends SparkTestBase {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     // tight budget forces continuous eviction while hits re-rank — the
-    // exact interleaving the shardCacheOrder lock must survive; results
+    // exact interleaving the shard cache's one lock must survive; results
     // must stay bit-identical to the driver-cached tier throughout
     val cached = IndexReader.open(spark, indexDir)
     val expected = querySet.map(q =>
@@ -546,6 +546,17 @@ class EngineSpec extends SparkTestBase {
     val rq = Searcher.resolve(spark, indexDir, "zzz_does_not_exist qqqq")
     assert(rq.terms.isEmpty)
     assert(Searcher.searchHits(spark, indexDir, rq, 10).isEmpty)
+  }
+
+  test("open refuses a snapshot in an older on-disk format, naming both formats") {
+    import graft.query.IndexReader
+    val dir = tmpDir("graft-stale-format")
+    val meta = IndexBuilder.build(CodeCorpus.generate(spark, 40L, seed = 5L), dir,
+      IndexConfig(numBuckets = 2))
+    Snapshot.commit(dir, meta.copy(formatVersion = 2))
+    val e = intercept[IllegalArgumentException](IndexReader.open(spark, dir))
+    assert(e.getMessage.contains("stale on-disk format") &&
+      e.getMessage.contains(s"(2 != ${Snapshot.CurrentFormatVersion})"), e.getMessage)
   }
 
   test("resolveHits on a directory with no snapshot fails loudly") {

@@ -102,6 +102,27 @@ class DetectCliSpec extends SparkTestBase {
     assert((out \ "error").isInstanceOf[JString])
   }
 
+  test("bootstrap commits a CSV directory once; a second run reuses the store") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    val csvDir = tmpDir("graft-cli-csv")
+    Files.write(Paths.get(csvDir, "city.csv"),
+      "value,variants\nMumbai,\"mumbai|bombay\"\n".getBytes(UTF_8))
+    Files.write(Paths.get(csvDir, "restaurant.csv"),
+      "value,variants\nDomino's Pizza,\"dominos|domino\"\n".getBytes(UTF_8))
+    val store = tmpDir("graft-cli-bootstrap")
+    DetectCli.bootstrap(spark, store, csvDir)
+    DetectCli.bootstrap(spark, store, csvDir)
+    assert(graft.index.Snapshot.listVersions(store) == Seq(1))
+    val out = parse(DetectCli.run(spark, store,
+      """{"messages": ["off to bombay for dominos"],
+        |  "entities": {"city": {}, "restaurant": {}}}""".stripMargin))
+    val ent = (out \ "data")(0) \ "entities"
+    assert((ent \ "city")(0) \ "entity_value" \ "value" == JString("Mumbai"), out)
+    assert((ent \ "restaurant")(0) \ "entity_value" \ "value" ==
+      JString("Domino's Pizza"), out)
+  }
+
   test("internal errors surface as errors, not a 400 envelope") {
     // a VALID request against a broken store must throw, not masquerade
     // as a client request-validation failure

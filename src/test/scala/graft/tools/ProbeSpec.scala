@@ -55,9 +55,24 @@ class ProbeSpec extends SparkTestBase {
         l.contains(" p95=") && l.contains(" qps=")) == 1, out)
   }
 
+  test("parity: one OK line per query, an N/N total, and the cross-index check") {
+    val dir = tmpDir("graft-probe-parity")
+    graft.index.IndexBuilder.build(graft.corpus.CodeCorpus.generate(spark, 40L, seed = 7L),
+      dir, graft.index.IndexConfig(numBuckets = 4))
+    val out = output("parity", dir, "10", dir)
+    // the 12 reference queries plus one fuzzy query
+    assert(out.count(_.startsWith("[parity] OK ")) == 13, out)
+    assert(!out.exists(_.contains("DIFF")), out)
+    assert(out.contains("[parity] 13/13 rank-identical at k=10 over 40 docs"), out)
+    assert(out.contains("[parity] cross-index stats identical: true"), out)
+    assert(out.contains("[parity] 13/13 identical across build parallelisms"), out)
+  }
+
   test("main rejects bad arguments before a session starts") {
     for (args <- Seq(Seq("time", sfDir, "1"), Seq("time", sfDir, "x"),
-        Seq("jobs", sfDir, "no_such_query"), Seq("plan", sfDir), Seq("explain")))
+        Seq("jobs", sfDir, "no_such_query"), Seq("plan", sfDir), Seq("explain"),
+        Seq("parity", sfDir, "0"), Seq("parity", sfDir, "x"),
+        Seq("parity", sfDir, "10", sfDir, "extra")))
       intercept[IllegalArgumentException](Probe.main(args.toArray))
     assert(!spark.sparkContext.isStopped)
   }
