@@ -37,8 +37,10 @@ object Analyzer {
     * 100 TB that removes the single largest intermediate exchange.
     * Returns terms in sorted order for deterministic downstream layout.
     */
-  def termFrequencies(text: String): Array[(String, Int)] = {
-    val toks = analyze(text)
+  def termFrequencies(text: String): Array[(String, Int)] = termCounts(analyze(text))
+
+  /** Sorted (term, tf) pairs of a token stream. */
+  private[analyzer] def termCounts(toks: Array[String]): Array[(String, Int)] = {
     if (toks.isEmpty) return Array.empty
     val m = new mutable.HashMap[String, Int]()
     var i = 0

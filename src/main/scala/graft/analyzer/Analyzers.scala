@@ -1,7 +1,5 @@
 package graft.analyzer
 
-import scala.collection.mutable
-
 /** Named analyzer registry — the index stores which analyzer built it
   * (SnapshotMeta.analyzer) and the query side resolves through the same
   * name, preserving the index/query symmetry invariant across analyzers.
@@ -25,31 +23,11 @@ object Analyzers {
     case other => throw new IllegalArgumentException(s"unknown analyzer: $other")
   }
 
+  /** Sorted (term, tf) pairs — the map-side combine inside the row. */
   def termFrequencies(name: String, text: String): Array[(String, Int)] =
-    name match {
-      case Standard => Analyzer.termFrequencies(text)
-      case Whitespace => termFrequenciesOf(whitespaceTokens(text))
-      case other => throw new IllegalArgumentException(s"unknown analyzer: $other")
-    }
+    Analyzer.termCounts(analyze(name, text))
 
   private def whitespaceTokens(text: String): Array[String] =
     if (text == null) Array.empty
     else text.split("\\s+").filter(_.nonEmpty)
-
-  /** Sorted (term, tf) pairs of a token stream — same contract as
-    * Analyzer.termFrequencies (map-side combine inside the row).
-    */
-  private def termFrequenciesOf(toks: Array[String]): Array[(String, Int)] = {
-    if (toks.isEmpty) return Array.empty
-    val m = new mutable.HashMap[String, Int]()
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      m.update(t, m.getOrElse(t, 0) + 1)
-      i += 1
-    }
-    val arr = m.toArray
-    java.util.Arrays.sort(arr, Ordering.by((p: (String, Int)) => p._1))
-    arr
-  }
 }

@@ -43,19 +43,14 @@ object Lemmatizer {
     * (functions.lemmatize_with) — caller tables take precedence over
     * this one.
     */
-  lazy val bundled: Map[String, String] = {
-    val in = getClass.getResourceAsStream("/graft/lang/lemma/en.csv")
-    if (in == null) Map.empty
-    else try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .drop(1) // header
-        .filterNot(l => l.isEmpty || l.startsWith("#"))
-        .flatMap { l =>
-          val c = l.indexOf(',')
-          if (c <= 0) None else Some(l.substring(0, c) -> l.substring(c + 1))
-        }.toMap
-    } finally in.close()
-  }
+  lazy val bundled: Map[String, String] =
+    graft.BundledResource.lines("/graft/lang/lemma/en.csv")
+      .drop(1) // header
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .flatMap { l =>
+        val c = l.indexOf(',')
+        if (c <= 0) None else Some(l.substring(0, c) -> l.substring(c + 1))
+      }.toMap
 
   /** Lemmatize a lowercase word (bundled table + irregulars + rules). */
   def lemma(w: String): String = lemma(w, bundled)

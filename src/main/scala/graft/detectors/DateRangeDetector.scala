@@ -33,8 +33,8 @@ final class DateRangeDetector(referenceDate: LocalDate) {
     val lowered = text0.toLowerCase(java.util.Locale.ROOT)
     val dates = dd.detect(lowered)
 
-    val results = ListBuffer.empty[(Int, DetectedDateRange)]
-    var tagged = lowered
+    val c = new Cascade[DetectedDateRange](lowered, "__date_range__",
+      Cascade.literal, _.original)
 
     // peel off shared-original runs first: a pair is an in-detector range,
     // a longer fan (week-of-month) is a set of normal dates
@@ -45,28 +45,21 @@ final class DateRangeDetector(referenceDate: LocalDate) {
       while (j < dates.length && dates(j).original == dates(i).original) j += 1
       val run = dates.slice(i, j)
       if (run.length >= 2) {
-        val m = Pattern.compile(Pattern.quote(run.head.original)).matcher(tagged)
-        if (m.find()) {
-          val at = m.start()
-          tagged = tagged.substring(0, at) + "__date_range__" +
-            tagged.substring(m.end())
+        val at = c.claim(run.head.original)
+        if (at >= 0) {
           if (run.length == 2)
-            results += ((at, DetectedDateRange(Some(run(0)), Some(run(1)),
-              "range", run.head.original)))
+            c.keep(at, DetectedDateRange(Some(run(0)), Some(run(1)), "range",
+              run.head.original))
           else run.foreach(d =>
-            results += ((at, DetectedDateRange(Some(d), Some(d), "normal",
-              d.original))))
+            c.keep(at, DetectedDateRange(Some(d), Some(d), "normal", d.original)))
         }
       } else singles += run.head
       i = j
     }
 
+    // the remaining dates become indexed placeholders for the span patterns
     val byIdx = singles.zipWithIndex.map { case (d, k) =>
-      val m = Pattern.compile(Pattern.quote(d.original)).matcher(tagged)
-      if (m.find()) {
-        tagged = tagged.substring(0, m.start()) + s"__ddate_${k}__" +
-          tagged.substring(m.end())
-      }
+      c.claim(d.original, as = s"__ddate_${k}__")
       k -> d
     }.toMap
 
@@ -74,19 +67,8 @@ final class DateRangeDetector(referenceDate: LocalDate) {
       raw"__ddate_(\d+)__".r.replaceAllIn(span,
         m => java.util.regex.Matcher.quoteReplacement(byIdx(m.group(1).toInt).original))
 
-    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedDateRange): Unit = {
-      val m = p.matcher(tagged)
-      val found = ListBuffer.empty[(String, DetectedDateRange)]
-      while (m.find()) found += ((m.group(), mk(m)))
-      for ((span, r) <- found) {
-        val mm = Pattern.compile(Pattern.quote(span)).matcher(tagged)
-        if (mm.find()) {
-          results += ((mm.start(), r))
-          tagged = tagged.substring(0, mm.start()) + "__date_range__" +
-            tagged.substring(mm.end())
-        }
-      }
-    }
+    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedDateRange): Unit =
+      c.runMatch(p)(m => Some(mk(m)))
 
     run(pPair) { m =>
       DetectedDateRange(Some(byIdx(m.group(1).toInt)), Some(byIdx(m.group(2).toInt)),
@@ -105,7 +87,7 @@ final class DateRangeDetector(referenceDate: LocalDate) {
       DetectedDateRange(Some(d), Some(d), "normal", original(m.group()))
     }
 
-    results.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }
 

@@ -1,8 +1,7 @@
 package graft.detectors
 
 import java.time.{DayOfWeek, LocalDate}
-import java.util.regex.Pattern
-import scala.collection.mutable.ListBuffer
+import java.util.regex.{Matcher, Pattern}
 
 /** Date detection (English subset of the reference's ordered format family —
   * ner_v2/detectors/temporal/date: pipeline order at
@@ -12,9 +11,7 @@ import scala.collection.mutable.ListBuffer
   * relative dates resolve against an injected `referenceDate` instead of
   * datetime.now() — deterministic by construction (the reference reads the
   * clock at standard_date_regex.py:33-38; tests there freeze it).
-  *
-  * Each sub-detector consumes its span with a tag before the next runs
-  * (ordered alternation with consumption), and results are span-sorted.
+  * The sub-detectors run as one [[Cascade]].
   */
 final case class DetectedDate(dd: Int, mm: Int, yy: Int, dtype: String,
     original: String)
@@ -220,316 +217,174 @@ final class DateDetector(referenceDate: LocalDate,
     else century * 100 + y2
   }
 
+  /** A dated result inside the years the numeric and year-first forms
+    * accept (reference formats 3, 6 and 7).
+    */
+  private def yearBounded(dd: Int, mm: Int, yy: Int, original: String) =
+    if (yy >= 1900 && yy <= 2099 && isValidDate(dd, mm, yy))
+      Some(DetectedDate(dd, mm, yy, "date", original))
+    else None
+
+  /** Day and month with a possibly yearless or two-digit year. */
+  private def dayMonthYear(dd: Int, mm: Int, yRaw: String, original: String) = {
+    val yy = resolveYear(yRaw, mm, dd)
+    if (isValidDate(dd, mm, yy)) Some(DetectedDate(dd, mm, yy, "date", original))
+    else None
+  }
+
   def detect(text0: String): Seq[DetectedDate] = {
-    var processed = text0.toLowerCase(java.util.Locale.ROOT)
-    val results = ListBuffer.empty[(Int, DetectedDate)]
-
-    def consume(original: String): Int = {
-      val p = Pattern.compile(raw"\b" + Pattern.quote(original) + raw"\b")
-      val m = p.matcher(processed)
-      if (!m.find()) -1
-      else {
-        val at = m.start()
-        processed = processed.substring(0, at) + tag + processed.substring(m.end())
-        at
-      }
-    }
-
-    def add(d: DetectedDate): Unit = {
-      val at = consume(d.original)
-      if (at >= 0) results += ((at, d))
-    }
-
-    // range sub-detectors emit TWO dates sharing one original span
-    // (reference appends `original` twice, en/date_detection.py:1755-1757):
-    // consume the span once, anchor both results at its position
-    def addShared(ds: Seq[DetectedDate]): Unit = ds.headOption.foreach { h =>
-      val at = consume(h.original)
-      if (at >= 0) ds.foreach(d => results += ((at, d)))
-    }
-
-    def valid(dd: Int, mm: Int, yy: Int): Boolean =
-      mm >= 1 && mm <= 12 && dd >= 1 &&
-        dd <= LocalDate.of(yy, mm, 1).lengthOfMonth()
+    val c = new Cascade[DetectedDate](text0.toLowerCase(java.util.Locale.ROOT),
+      tag, Cascade.wordBounded, _.original)
 
     // 0. yyyy/mm/dd (reference format 3 — unambiguous, runs first)
-    locally {
-      val m = yyyymmdd.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val yy = m.group(1).toInt
-        val mm = m.group(2).toInt
-        val dd = m.group(3).toInt
-        if (yy >= 1900 && yy <= 2099 && valid(dd, mm, yy))
-          found += DetectedDate(dd, mm, yy, "date", m.group())
-      }
-      found.foreach(add)
-    }
+    c.run(yyyymmdd)(m => yearBounded(m.group(3).toInt, m.group(2).toInt,
+      m.group(1).toInt, m.group()))
     // 1 / 1b. numeric d-m-y vs m-d-y: ordered alternation, the SECOND
     // reading only claims spans the first could not. The default (and 'IN')
     // order is day-first; a 'US' locale country code flips the preference
     // (reference country_date_detector_preferences,
     // en/date_detection.py:137-140 + get_exact_date:207-215).
-    def numericDayFirst(): Unit = {
-      val m = ddmmyyyy.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val dd = m.group(1).toInt
-        val mm = m.group(2).toInt
-        val yy = resolveYear(m.group(3), if (mm >= 1 && mm <= 12) mm else 1, 1)
-        if (valid(dd, mm, yy)) found += DetectedDate(dd, mm, yy, "date", m.group())
-      }
-      found.foreach(add)
+    def numeric(dayFirst: Boolean): Unit = c.run(ddmmyyyy) { m =>
+      val (a, b) = (m.group(1).toInt, m.group(2).toInt)
+      val (dd, mm) = if (dayFirst) (a, b) else (b, a)
+      val yy = resolveYear(m.group(3), if (mm >= 1 && mm <= 12) mm else 1, 1)
+      if (isValidDate(dd, mm, yy)) Some(DetectedDate(dd, mm, yy, "date", m.group()))
+      else None
     }
-    def numericMonthFirst(): Unit = {
-      val m = ddmmyyyy.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val mm = m.group(1).toInt
-        val dd = m.group(2).toInt
-        val yy = resolveYear(m.group(3), if (mm >= 1 && mm <= 12) mm else 1, 1)
-        if (valid(dd, mm, yy)) found += DetectedDate(dd, mm, yy, "date", m.group())
-      }
-      found.foreach(add)
-    }
-    if (countryCode.contains("US")) { numericMonthFirst(); numericDayFirst() }
-    else { numericDayFirst(); numericMonthFirst() }
+    val us = countryCode.contains("US")
+    numeric(dayFirst = !us)
+    numeric(dayFirst = us)
     // 2. relative words
-    locally {
-      val m = relative.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val d = m.group(1) match {
-          case "today" | "tonight" => referenceDate
-          case "tomorrow" => referenceDate.plusDays(1)
-          case "yesterday" => referenceDate.minusDays(1)
-          case "day after tomorrow" => referenceDate.plusDays(2)
-          case "day before yesterday" => referenceDate.minusDays(2)
-        }
-        found += out(d, "date", m.group())
+    c.run(relative) { m =>
+      val d = m.group(1) match {
+        case "today" | "tonight" => referenceDate
+        case "tomorrow" => referenceDate.plusDays(1)
+        case "yesterday" => referenceDate.minusDays(1)
+        case "day after tomorrow" => referenceDate.plusDays(2)
+        case "day before yesterday" => referenceDate.minusDays(2)
       }
-      found.foreach(add)
+      Some(out(d, "date", m.group()))
     }
     // 2b. year-first textual forms (reference formats 6-7):
     // "2027 june 5" / "2027 5th june"
-    locally {
-      val m = yearMonthDay.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val yy = m.group(1).toInt
-        val mm = monthNames(m.group(2))
-        val dd = m.group(3).toInt
-        if (yy >= 1900 && yy <= 2099 && valid(dd, mm, yy))
-          found += DetectedDate(dd, mm, yy, "date", m.group().strip())
-      }
-      found.foreach(add)
-      val m2 = yearDayMonth.matcher(processed)
-      val found2 = ListBuffer.empty[DetectedDate]
-      while (m2.find()) {
-        val yy = m2.group(1).toInt
-        val dd = m2.group(2).toInt
-        val mm = monthNames(m2.group(3))
-        if (yy >= 1900 && yy <= 2099 && valid(dd, mm, yy))
-          found2 += DetectedDate(dd, mm, yy, "date", m2.group().strip())
-      }
-      found2.foreach(add)
-    }
+    c.run(yearMonthDay)(m => yearBounded(m.group(3).toInt,
+      monthNames(m.group(2)), m.group(1).toInt, m.group().strip()))
+    c.run(yearDayMonth)(m => yearBounded(m.group(2).toInt,
+      monthNames(m.group(3)), m.group(1).toInt, m.group().strip()))
     // 2c. range family — runs BEFORE the day-month ordinal family so
     // "2nd jan to 5th" is claimed whole (reference preference order,
     // en/date_detection.py:105-127: arrival/departure, then
-    // ddth-of-mmm-to-ddth, then ddth-to-ddth-of-next-month)
+    // ddth-of-mmm-to-ddth, then ddth-to-ddth-of-next-month). Each range
+    // emits TWO dates sharing one original span (reference appends
+    // `original` twice, en/date_detection.py:1755-1757).
     // "21st to 30th of Jan": end date anchors the month, start day walks
     // back to the closest earlier date with that day; both bumped a year
     // if the start landed in the past (en/date_detection.py:1595-1608)
-    locally {
-      val m = rangeDdToDdOfMmm.matcher(processed)
-      val found = ListBuffer.empty[Seq[DetectedDate]]
-      while (m.find()) {
-        val original = m.group(1)
-        val dd1 = m.group(2).toInt
-        val dd2 = m.group(3).toInt
-        monthNames.get(m.group(4)).foreach { mm2 =>
-          var yy2 = referenceDate.getYear
-          if (isValidDate(dd2, mm2, yy2)) {
-            val dt2 = LocalDate.of(yy2, mm2, dd2)
-            previousDateWithDd(dd1, dt2).foreach { case (d1, m1, y1raw) =>
-              var yy1 = y1raw
-              val dt1 = LocalDate.of(yy1, m1, d1)
-              if (dt1.isBefore(referenceDate)) { yy2 += 1; yy1 = yy2 }
-              found += Seq(DetectedDate(d1, m1, yy1, "date", original),
-                DetectedDate(dd2, mm2, yy2, "date", original))
-            }
-          }
+    c.runShared(rangeDdToDdOfMmm) { m =>
+      val original = m.group(1)
+      val dd1 = m.group(2).toInt
+      val dd2 = m.group(3).toInt
+      val yy = referenceDate.getYear
+      monthNames.get(m.group(4)).filter(isValidDate(dd2, _, yy)).flatMap { mm2 =>
+        previousDateWithDd(dd1, LocalDate.of(yy, mm2, dd2)).map { case (d1, m1, y1) =>
+          val past = LocalDate.of(y1, m1, d1).isBefore(referenceDate)
+          val yy2 = if (past) yy + 1 else yy
+          val yy1 = if (past) yy2 else y1
+          Seq(DetectedDate(d1, m1, yy1, "date", original),
+            DetectedDate(dd2, mm2, yy2, "date", original))
         }
       }
-      found.foreach(addShared)
     }
     // "21st jan to 30th [feb]": start date anchors; a month-less end day
     // resolves to the closest date with that day after the start
     // (en/date_detection.py:1722-1742)
-    locally {
-      val m = rangeDdMmmToDd.matcher(processed)
-      val found = ListBuffer.empty[Seq[DetectedDate]]
-      while (m.find()) {
-        val original = m.group(1)
-        val dd1 = m.group(2).toInt
-        val dd2 = m.group(4).toInt
-        monthNames.get(m.group(3)).foreach { mm1 =>
-          var yy1 = referenceDate.getYear
-          if (isValidDate(dd1, mm1, yy1)) {
-            var dt1 = LocalDate.of(yy1, mm1, dd1)
-            var yy2 = yy1
-            if (dt1.isBefore(referenceDate)) {
-              yy1 += 1; yy2 = yy1; dt1 = LocalDate.of(yy1, mm1, dd1)
-            }
-            val endOpt = Option(m.group(5)).flatMap(monthNames.get) match {
-              case Some(mm2) if isValidDate(dd2, mm2, yy2) =>
-                val dt2 = LocalDate.of(yy2, mm2, dd2)
-                Some((dd2, mm2, if (dt2.isBefore(dt1)) yy2 + 1 else yy2))
-              case Some(_) => None
-              case None => nextDateWithDd(dd2, dt1)
-            }
-            endOpt.foreach { case (d2, m2, y2) =>
-              found += Seq(DetectedDate(dd1, mm1, yy1, "date", original),
-                DetectedDate(d2, m2, y2, "date", original))
-            }
-          }
+    c.runShared(rangeDdMmmToDd) { m =>
+      val original = m.group(1)
+      val dd1 = m.group(2).toInt
+      val dd2 = m.group(4).toInt
+      val yy0 = referenceDate.getYear
+      monthNames.get(m.group(3)).filter(isValidDate(dd1, _, yy0)).flatMap { mm1 =>
+        val yy1 = if (LocalDate.of(yy0, mm1, dd1).isBefore(referenceDate)) yy0 + 1 else yy0
+        val dt1 = LocalDate.of(yy1, mm1, dd1)
+        val end = Option(m.group(5)).flatMap(monthNames.get) match {
+          case Some(mm2) if isValidDate(dd2, mm2, yy1) =>
+            val dt2 = LocalDate.of(yy1, mm2, dd2)
+            Some((dd2, mm2, if (dt2.isBefore(dt1)) yy1 + 1 else yy1))
+          case Some(_) => None
+          case None => nextDateWithDd(dd2, dt1)
+        }
+        end.map { case (d2, m2, y2) =>
+          Seq(DetectedDate(dd1, mm1, yy1, "date", original),
+            DetectedDate(d2, m2, y2, "date", original))
         }
       }
-      found.foreach(addShared)
     }
     // "21st to 30th of coming month" (en/date_detection.py:1760-1824)
-    locally {
-      val m = rangeDdToDdNextMonth.matcher(processed)
-      val found = ListBuffer.empty[Seq[DetectedDate]]
-      while (m.find()) {
-        val original = m.group(1)
-        val dd1 = m.group(2).toInt
-        val dd2 = m.group(3).toInt
-        val n = referenceDate.plusMonths(1)
-        val (mm, yy) = (n.getMonthValue, n.getYear)
-        found += Seq(DetectedDate(dd1, mm, yy, "date", original),
-          DetectedDate(dd2, mm, yy, "date", original))
-      }
-      found.foreach(addShared)
+    c.runShared(rangeDdToDdNextMonth) { m =>
+      val n = referenceDate.plusMonths(1)
+      Some(Seq(m.group(2), m.group(3)).map(d =>
+        DetectedDate(d.toInt, n.getMonthValue, n.getYear, "date", m.group(1))))
     }
     // 3. "16th aug [2024]" / "16 of august"
-    locally {
-      val m = dayMonth.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val dd = m.group(1).toInt
-        val mm = monthNames(m.group(2))
-        val yy = resolveYear(m.group(3), mm, dd)
-        if (valid(dd, mm, yy)) found += DetectedDate(dd, mm, yy, "date", m.group().strip())
-      }
-      found.foreach(add)
-    }
+    c.run(dayMonth)(m => dayMonthYear(m.group(1).toInt, monthNames(m.group(2)),
+      m.group(3), m.group().strip()))
     // 4. "aug 16[, 2024]"
-    locally {
-      val m = monthDay.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val mm = monthNames(m.group(1))
-        val dd = m.group(2).toInt
-        val yy = resolveYear(m.group(3), mm, dd)
-        if (valid(dd, mm, yy)) found += DetectedDate(dd, mm, yy, "date", m.group().strip())
-      }
-      found.foreach(add)
-    }
+    c.run(monthDay)(m => dayMonthYear(m.group(2).toInt, monthNames(m.group(1)),
+      m.group(3), m.group().strip()))
     // 5. "in/after N days", "N days later"
-    locally {
-      val m = afterDays.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val n = (if (m.group(1) != null) m.group(1) else m.group(2)).toInt
-        found += out(referenceDate.plusDays(n.toLong), "date", m.group().strip())
-      }
-      found.foreach(add)
+    c.run(afterDays) { m =>
+      val n = (if (m.group(1) != null) m.group(1) else m.group(2)).toInt
+      Some(out(referenceDate.plusDays(n.toLong), "date", m.group().strip()))
     }
-    // 5a. weekday/weekend repeat families (reference 22-24): emit every
-    // matching date in the next 30 days; repeat_* when an everyday word
-    // anchors the phrase (date_detection.py:1865-1935)
-    locally {
-      val m = repeatDays.matcher(processed)
-      val found = ListBuffer.empty[(String, Seq[DetectedDate])]
-      while (m.find()) {
-        val original = m.group(1).strip()
-        val (wantWeekend, repeat) =
-          if (m.group(2) != null) (false, true) // everyday except weekends
-          else if (m.group(3) != null) (true, true) // everyday except weekdays
-          else if (m.group(4) != null) (false, false) // bare weekdays
-          else (true, false) // bare weekends
-        val dtype = (wantWeekend, repeat) match {
-          case (false, true) => "repeat_weekdays"
-          case (false, false) => "weekdays"
-          case (true, true) => "repeat_weekends"
-          case (true, false) => "weekends"
-        }
-        val dates = (0 until 30).map(referenceDate.plusDays(_)).filter { d =>
-          val dow = d.getDayOfWeek
-          val isWeekend = dow == DayOfWeek.SATURDAY || dow == DayOfWeek.SUNDAY
-          isWeekend == wantWeekend
-        }.map(d => out(d, dtype, original))
-        found += ((original, dates.toSeq))
-      }
-      for ((original, dates) <- found) {
-        val at = consume(original)
-        if (at >= 0) dates.foreach(d => results += ((at, d)))
-      }
+    // 5a. weekday/weekend repeat families (reference 22-24): every matching
+    // date in the next 30 days, all sharing the span; repeat_* when an
+    // everyday word anchors the phrase (date_detection.py:1865-1935)
+    c.runShared(repeatDays) { m =>
+      val original = m.group(1).strip()
+      val (wantWeekend, dtype) =
+        if (m.group(2) != null) (false, "repeat_weekdays") // everyday except weekends
+        else if (m.group(3) != null) (true, "repeat_weekends") // everyday except weekdays
+        else if (m.group(4) != null) (false, "weekdays")
+        else (true, "weekends")
+      Some((0 until 30).map(referenceDate.plusDays(_)).filter { d =>
+        val dow = d.getDayOfWeek
+        (dow == DayOfWeek.SATURDAY || dow == DayOfWeek.SUNDAY) == wantWeekend
+      }.map(out(_, dtype, original)))
     }
     // 5b. recurrent forms: "everyday"/"daily" (type everyday), "every
     // monday" (type repeat_day resolved to the next occurrence) — reference
     // TYPE_EVERYDAY / repeat-day semantics
-    locally {
-      val m = recurrent.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        if (m.group(2) != null) {
-          val d = nextWeekday(referenceDate, weekdays(m.group(2)), strictNext = false)
-          found += out(d, "repeat_day", m.group().strip())
-        } else {
-          found += out(referenceDate, "everyday", m.group().strip())
-        }
-      }
-      found.foreach(add)
+    c.run(recurrent) { m =>
+      Some(
+        if (m.group(2) != null) out(nextWeekday(referenceDate,
+          weekdays(m.group(2)), strictNext = false), "repeat_day", m.group().strip())
+        else out(referenceDate, "everyday", m.group().strip()))
     }
     // 6. weekday references ("next monday", "this fri", bare "monday")
-    locally {
-      val m = weekdayRef.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val qualifier = Option(m.group(1)).getOrElse("")
-        val day = weekdays(m.group(2))
-        val d = qualifier match {
-          case "last" => lastWeekday(referenceDate, day)
-          case "next" => nextWeekday(referenceDate, day, strictNext = true)
-          case _ => nextWeekday(referenceDate, day, strictNext = false)
-        }
-        found += out(d, "day_within_one_week", m.group().strip())
+    c.run(weekdayRef) { m =>
+      val day = weekdays(m.group(2))
+      val d = Option(m.group(1)).getOrElse("") match {
+        case "last" => lastWeekday(referenceDate, day)
+        case "next" => nextWeekday(referenceDate, day, strictNext = true)
+        case _ => nextWeekday(referenceDate, day, strictNext = false)
       }
-      found.foreach(add)
+      Some(out(d, "day_within_one_week", m.group().strip()))
     }
     // 7. possible-day ordinals (reference 18-20): bare "23rd" → nearest
     // month holding that day forward; "5th of this/next month" explicit
-    locally {
-      val m = ordinalOnly.matcher(processed)
-      val found = ListBuffer.empty[DetectedDate]
-      while (m.find()) {
-        val dd = m.group(1).toInt
-        val anchor = Option(m.group(2)).getOrElse("")
-        val base = anchor match {
-          case "next" => referenceDate.plusMonths(1)
-          case "this" => referenceDate
-          case _ =>
-            if (dd >= referenceDate.getDayOfMonth) referenceDate
-            else referenceDate.plusMonths(1)
-        }
-        if (valid(dd, base.getMonthValue, base.getYear))
-          found += DetectedDate(dd, base.getMonthValue, base.getYear,
-            "possible_day", m.group().strip())
+    c.run(ordinalOnly) { m =>
+      val dd = m.group(1).toInt
+      val base = Option(m.group(2)).getOrElse("") match {
+        case "next" => referenceDate.plusMonths(1)
+        case "this" => referenceDate
+        case _ =>
+          if (dd >= referenceDate.getDayOfMonth) referenceDate
+          else referenceDate.plusMonths(1)
       }
-      found.foreach(add)
+      if (isValidDate(dd, base.getMonthValue, base.getYear))
+        Some(DetectedDate(dd, base.getMonthValue, base.getYear,
+          "possible_day", m.group().strip()))
+      else None
     }
     // 8. "first week of jan" — LAST in the reference preference order
     // (en/date_detection.py:105-127, detector :1627-1685): one date per day
@@ -537,34 +392,24 @@ final class DateDetector(referenceDate: LocalDate,
     // matched span; named months bump a year when already past, and
     // coming/next resolve to the following month. The reference regex
     // requires trailing whitespace and pads the text — match padded.
-    locally {
-      val m = nthWeekMonth.matcher(processed + " ")
-      val found = ListBuffer.empty[Seq[DetectedDate]]
-      while (m.find()) {
-        val original = m.group(1)
-        val probableMm = m.group(3)
-        var yy = referenceDate.getYear
-        val mmOpt: Option[Int] = monthNames.get(probableMm) match {
-          case Some(mm) =>
-            if (referenceDate.getMonthValue > mm) yy += 1
-            Some(mm)
-          case None if Set("coming", "comming", "next", "nxt", "following",
-            "folowing").contains(probableMm) =>
-            val n = referenceDate.plusMonths(1)
-            yy = n.getYear
-            Some(n.getMonthValue)
-          case None => None
-        }
-        mmOpt.foreach { mm =>
-          val days = weekdaysForMonth(ordinalsMap(m.group(2)), mm, yy)
-          if (days.nonEmpty)
-            found += days.map(d => DetectedDate(d, mm, yy, "date", original))
-        }
+    c.runShared(nthWeekMonth, pad = " ") { m =>
+      val probableMm = m.group(3)
+      val monthYear: Option[(Int, Int)] = monthNames.get(probableMm) match {
+        case Some(mm) =>
+          Some((mm, referenceDate.getYear + (if (referenceDate.getMonthValue > mm) 1 else 0)))
+        case None if Set("coming", "comming", "next", "nxt", "following",
+          "folowing").contains(probableMm) =>
+          val n = referenceDate.plusMonths(1)
+          Some((n.getMonthValue, n.getYear))
+        case None => None
       }
-      found.foreach(addShared)
+      monthYear.map { case (mm, yy) =>
+        weekdaysForMonth(ordinalsMap(m.group(2)), mm, yy)
+          .map(d => DetectedDate(d, mm, yy, "date", m.group(1)))
+      }
     }
 
-    results.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }
 
@@ -586,25 +431,19 @@ object TimeDetector {
     * clock+meridiem form (the only one the reference's own test YAML
     * exercises for tz) captures it.
     */
-  lazy val timezoneMap: Map[String, String] = {
-    val in = getClass.getResourceAsStream("/graft/lang/time/en/timezones.csv")
-    if (in == null) Map.empty
-    else try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
-        .flatMap { line =>
-          val cols = line.split(",", -1)
-          if (cols.length < 3) Nil
-          else cols(1).split("\\|").map(v =>
-            v.strip().toLowerCase(java.util.Locale.ROOT) -> cols(2).strip())
-        }.toMap
-    } finally in.close()
-  }
+  lazy val timezoneMap: Map[String, String] =
+    graft.BundledResource.lines("/graft/lang/time/en/timezones.csv").drop(1)
+      .flatMap { line =>
+        val cols = line.split(",", -1)
+        if (cols.length < 3) Nil
+        else cols(1).split("\\|").map(v =>
+          v.strip().toLowerCase(java.util.Locale.ROOT) -> cols(2).strip())
+      }.toMap
 
   /** Longest-first alternation of the tz variants (regex-escaped). */
   lazy val timezoneAlt: String =
-    if (timezoneMap.isEmpty) raw"\b\B" // unmatchable
-    else timezoneMap.keys.toSeq.sortBy(-_.length)
-      .map(java.util.regex.Pattern.quote).mkString("|")
+    timezoneMap.keys.toSeq.sortBy(-_.length).map(Pattern.quote).mkString("|")
+
   /** Deterministic stand-in for the reference's wall-clock `now` in the
     * bare-time meridiem rule (_get_meridiem, time_detection.py:1393-1432):
     * a data pipeline must not change answers between runs, so the
@@ -709,206 +548,115 @@ final class TimeDetector(entityName: String = "time",
     "am"
   }
 
+  /** Meridiem from a daytime word anywhere in `text`: morning words → am,
+    * noon/evening words → pm, night words → am when hh = 12 or hh < 5 else
+    * pm; None when the text holds no daytime word.
+    */
+  private def daytimeMeridiem(text: String, am: Pattern, pm: Pattern,
+      night: Pattern): Option[Int => String] =
+    if (am.matcher(text).find()) Some(_ => "am")
+    else if (pm.matcher(text).find()) Some(_ => "pm")
+    else if (night.matcher(text).find()) Some(hh => if (hh == 12 || hh < 5) "am" else "pm")
+    else None
+
   def detect(text0: String): Seq[DetectedTime] = {
     // reference pads the text with a space on both ends (detect_time:
     // self.text = ' ' + text + ' ') — the \s-wrapped day-word probes
     // depend on it at message edges
-    var processed = " " + text0.toLowerCase(java.util.Locale.ROOT) + " "
-    val results = ListBuffer.empty[(Int, DetectedTime)]
-
-    def consume(original: String): Int = {
-      val p = Pattern.compile(Pattern.quote(original))
-      val m = p.matcher(processed)
-      if (!m.find()) -1
-      else {
-        val at = m.start()
-        processed = processed.substring(0, at) + tag + processed.substring(m.end())
-        at
-      }
-    }
-    def add(t: DetectedTime): Unit = {
-      val at = consume(t.original)
-      if (at >= 0) results += ((at, t))
-    }
+    val c = new Cascade[DetectedTime](
+      " " + text0.toLowerCase(java.util.Locale.ROOT) + " ", tag,
+      Cascade.literal, _.original)
 
     def tzOf(g: String*): String = g.flatMap(Option(_)).headOption
       .flatMap(TimeDetector.timezoneMap.get).getOrElse("UTC")
+    // "N mins|hours" forms: minutes or hours by the unit's first letter
+    def duration(nn: String)(m: Matcher) = {
+      val n = m.group(2).toInt
+      val isMin = m.group(3).startsWith("m")
+      Some(DetectedTime(if (isMin) 0 else n, if (isMin) n else 0, nn,
+        m.group(1).strip()))
+    }
+    // 24h clock forms: hour, optional minutes, tz on either side; nn via
+    // _get_meridiem (0 / >= 12 → 'hrs')
+    def clock24(m: Matcher) = {
+      val hh = m.group(3).toInt
+      val mm = Option(m.group(4)).map(_.toInt).getOrElse(0)
+      Some(DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip(),
+        tzOf(m.group(2), m.group(5))))
+    }
 
     // Sub-detector order mirrors the reference's _detect_time pipeline
     // (en/time_detection.py:145-215, form_check=False; the range
     // sub-detectors live in TimeRangeDetector).
     // 1. 12h with minutes
-    locally {
-      val m = p12h.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val nn = if (m.group(5).startsWith("a")) "am" else "pm"
-        found += DetectedTime(m.group(3).toInt, m.group(4).toInt, nn,
-          m.group(1).strip(), tzOf(m.group(2), m.group(6)))
-      }
-      found.foreach(add)
+    c.run(p12h) { m =>
+      Some(DetectedTime(m.group(3).toInt, m.group(4).toInt,
+        if (m.group(5).startsWith("a")) "am" else "pm",
+        m.group(1).strip(), tzOf(m.group(2), m.group(6))))
     }
     // 2. 12h without minutes
-    locally {
-      val m = p12hNoMin.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val nn = if (m.group(4).startsWith("a")) "am" else "pm"
-        found += DetectedTime(m.group(3).toInt, 0, nn,
-          m.group(1).strip(), tzOf(m.group(2), m.group(5)))
-      }
-      found.foreach(add)
+    c.run(p12hNoMin) { m =>
+      Some(DetectedTime(m.group(3).toInt, 0,
+        if (m.group(4).startsWith("a")) "am" else "pm",
+        m.group(1).strip(), tzOf(m.group(2), m.group(5))))
     }
     // 3. relative difference ("in 15mins", "about 25 minutes") → df
-    locally {
-      val m = diffTime.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val n = m.group(2).toInt
-        val isMin = m.group(3).startsWith("m")
-        found += DetectedTime(if (isMin) 0 else n, if (isMin) n else 0, "df",
-          m.group(1).strip())
-      }
-      found.foreach(add)
-    }
+    c.run(diffTime)(duration("df"))
     // 4-6. "X mins later" (df), "every X hours" / "once in X days" (ev)
-    locally {
-      val m = laterTime.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val n = m.group(2).toInt
-        val isMin = m.group(3).startsWith("m")
-        found += DetectedTime(if (isMin) 0 else n, if (isMin) n else 0, "df",
-          m.group(1).strip())
-      }
-      found.foreach(add)
-      val m2 = everyX.matcher(processed)
-      val found2 = ListBuffer.empty[DetectedTime]
-      while (m2.find()) {
-        val n = m2.group(2).toInt
-        val isMin = m2.group(3).startsWith("m")
-        found2 += DetectedTime(if (isMin) 0 else n, if (isMin) n else 0, "ev",
-          m2.group(1).strip())
-      }
-      found2.foreach(add)
-      val m3 = onceInX.matcher(processed)
-      val found3 = ListBuffer.empty[DetectedTime]
-      while (m3.find()) {
-        val days = if (m3.group(2) == "a") 1 else m3.group(2).toInt
-        found3 += DetectedTime(24 * days, 0, "ev", m3.group(1).strip())
-      }
-      found3.foreach(add)
+    c.run(laterTime)(duration("df"))
+    c.run(everyX)(duration("ev"))
+    c.run(onceInX) { m =>
+      val days = if (m.group(2) == "a") 1 else m.group(2).toInt
+      Some(DetectedTime(24 * days, 0, "ev", m.group(1).strip()))
     }
-    // 7. restricted 24h (00/13-23 + minutes; nn = within-12h meridiem,
-    // 0 / >= 12 short-circuit to 'hrs')
-    locally {
-      val m = restricted24.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val hh = m.group(3).toInt
-        val mm = m.group(4).toInt
-        found += DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip(),
-          tzOf(m.group(2), m.group(5)))
-      }
-      found.foreach(add)
-    }
+    // 7. restricted 24h (00/13-23 + minutes)
+    c.run(restricted24)(clock24)
     // 8. clock + daytime word ("5:30 evening", "02:59 morning")
-    locally {
-      val hasAm = amWords.matcher(processed).find()
-      val hasPm = pmWords.matcher(processed).find()
-      val hasNight = nightWords.matcher(processed).find()
-      if (hasAm || hasPm || hasNight) {
-        val m = wordClock.matcher(processed)
-        val found = ListBuffer.empty[DetectedTime]
-        while (m.find()) {
-          val hh = m.group(2).toInt
-          val mm = m.group(3).toInt
-          val nn =
-            if (hasAm) "am"
-            else if (hasPm) "pm"
-            else if (hh == 12 || hh < 5) "am" else "pm" // night words (:1158)
-          found += DetectedTime(hh, mm, nn, m.group(1).strip())
-        }
-        found.foreach(add)
+    daytimeMeridiem(c.text, amWords, pmWords, nightWords).foreach { nn =>
+      c.run(wordClock) { m =>
+        val hh = m.group(2).toInt
+        Some(DetectedTime(hh, m.group(3).toInt, nn(hh), m.group(1).strip()))
       }
     }
     // 9. prefix word + bare hour with a daytime word ("at 8 in the
     // morning", "on 12 night"); NO daytime word anywhere → the whole
-    // sub-detector aborts, exactly like the reference's early return
+    // sub-detector finds nothing, exactly like the reference's early return
     locally {
-      val m = prefixHourWord.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      var aborted = false
-      while (!aborted && m.find()) {
+      lazy val nn = daytimeMeridiem(c.text, amWordsWs, pmWordsWs, nightWordsWs)
+      c.run(prefixHourWord) { m =>
         val t1 = m.group(2).toInt
-        val nn =
-          if (amWordsWs.matcher(processed).find()) "am"
-          else if (pmWordsWs.matcher(processed).find()) "pm"
-          else if (nightWordsWs.matcher(processed).find())
-            (if (t1 == 12 || t1 < 5) "am" else "pm")
-          else { aborted = true; "" }
-        if (!aborted) found += DetectedTime(t1, 0, nn, m.group(1).strip())
+        nn.map(f => DetectedTime(t1, 0, f(t1), m.group(1).strip()))
       }
-      found.foreach(add)
     }
     // 10. 24h format — branch 1 (hour + minutes, lookahead-guarded; the
     // original excludes a trailing hours-word), branch 2 only when branch
     // 1 finds nothing (optional minutes + required hours-word)
-    locally {
-      val m = p24a.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val hh = m.group(3).toInt
-        val mm = m.group(4).toInt
-        found += DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip(),
-          tzOf(m.group(2), m.group(5)))
-      }
-      if (found.nonEmpty) found.foreach(add)
-      else {
-        val m2 = p24b.matcher(processed)
-        val found2 = ListBuffer.empty[DetectedTime]
-        while (m2.find()) {
-          val hh = m2.group(3).toInt
-          val mm = Option(m2.group(4)).map(_.toInt).getOrElse(0)
-          found2 += DetectedTime(hh, mm, meridiemOf(hh, mm),
-            m2.group(1).strip(), tzOf(m2.group(2), m2.group(5)))
-        }
-        found2.foreach(add)
-      }
-    }
+    if (c.run(p24a)(clock24) == 0) c.run(p24b)(clock24)
     // 4. prefix word + bare 12h time, meridiem inferred within 12 hours of
     // the reference time ("lets meet at 5 today" → 5 pm when it's noon)
-    locally {
-      val m = prefixBareTime.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        val hh = m.group(3).toInt
-        val mm = Option(m.group(4)).map(_.toInt).getOrElse(0)
-        found += DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip())
-      }
-      found.foreach(add)
+    c.run(prefixBareTime) { m =>
+      val hh = m.group(3).toInt
+      val mm = Option(m.group(4)).map(_.toInt).getOrElse(0)
+      Some(DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip()))
     }
     // 4b. 12h time + o'clock/hours suffix ("5 o'clock"). Reference-bug
     // parity (time_detection.py:1373-1376): the code reads the HOUR group
     // into the minutes slot (pattern[3] is the hour, not the minutes), so
     // "5 o'clock" reports mm = 5. Colon-separated forms never reach this
     // detector — the 24h format consumes them first (reference order too).
-    locally {
-      val m = oclockTime.matcher(processed)
-      val found = ListBuffer.empty[DetectedTime]
-      while (m.find()) {
-        // reference does int(time_part): non-digit forms raise there (we
-        // skip instead of crashing — the only intentional divergence)
-        val timePart = m.group(2).strip()
-        if (timePart.forall(_.isDigit)) {
-          val hh = timePart.toInt
-          val mm = m.group(3).toInt // the reference's pattern[3] = hour group
-          found += DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip())
-        }
+    // The reference does int(time_part): non-digit forms raise there (we
+    // skip instead of crashing — the only intentional divergence).
+    c.run(oclockTime) { m =>
+      val timePart = m.group(2).strip()
+      if (!timePart.forall(_.isDigit)) None
+      else {
+        val hh = timePart.toInt
+        val mm = m.group(3).toInt // the reference's pattern[3] = hour group
+        Some(DetectedTime(hh, mm, meridiemOf(hh, mm), m.group(1).strip()))
       }
-      found.foreach(add)
     }
 
-    results.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }
+

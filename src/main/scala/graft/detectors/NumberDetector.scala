@@ -1,7 +1,6 @@
 package graft.detectors
 
 import java.util.regex.Pattern
-import scala.collection.mutable.ListBuffer
 
 /** Detected scalar: stringified value + optional unit + original span text —
   * the reference's detector envelope (value/unit/original_text,
@@ -50,8 +49,8 @@ object SpanBoundary {
 
 /** Number detection: digits (with thousands commas, decimal point, scale
   * suffix like `2.2k`) first, then number words — the reference's ordered
-  * `detector_preferences` pipeline with tag consumption between stages
-  * (standard_number_detector.py:66-102).
+  * `detector_preferences` pipeline (standard_number_detector.py:66-102),
+  * claiming spans through [[Cascade]] under the [[SpanBoundary]] rule.
   */
 final class NumberDetector(
     entityName: String = "number",
@@ -90,16 +89,22 @@ final class NumberDetector(
     s.map(c => if (c.isDigit) ('0' + Character.digit(c, 10)).toChar else c)
 
   def detect(text: String): Seq[Detected] = {
-    var processed = text.toLowerCase(java.util.Locale.ROOT)
-    // (spanStart, Detected): results are span-sorted at the end, matching
-    // the reference's position sort (standard_number_detector.py:95-101, O5)
-    val out = ListBuffer.empty[(Int, Detected)]
+    val c = new Cascade[Detected](text.toLowerCase(java.util.Locale.ROOT),
+      tag, SpanBoundary.pattern, _.original)
+    // the unit capture reads the text as the earlier claims left it, so
+    // each number's span is settled just before its claim; a number
+    // without the required unit is still claimed, only not kept
+    def claimWithUnit(value: String, span: String): Unit =
+      if (digitCountOk(value)) {
+        val (unit, original) = captureUnit(span, c.text)
+        val at = c.claim(original)
+        if (at >= 0 && (!requireUnit || unit.isDefined))
+          c.keep(at, Detected(value, unit, original))
+      }
 
     // stage 1: digits (+ scale suffix); trailing pad so an end-of-string
     // scale suffix ("...costs 2k") still matches the separator class
-    val m = digitPattern.matcher(processed + " ")
-    val stage1 = ListBuffer.empty[Detected]
-    while (m.find()) {
+    c.find(digitPattern, pad = " ") { m =>
       val (numStr, scale, originalRaw) =
         if (m.group(2) != null && isNumeric(m.group(2)))
           (asciiDigits(m.group(2)).replace(",", ""), digitScales(m.group(3)),
@@ -108,8 +113,9 @@ final class NumberDetector(
           (asciiDigits(m.group(4)).replace(",", ""), 1L,
             m.group(4).strip().stripSuffix(",").stripSuffix(".").strip())
         else (null, 0L, null)
-      if (numStr != null && numStr.nonEmpty && numStr != "." && originalRaw.nonEmpty) {
-        val value: String =
+      if (numStr == null || numStr.isEmpty || numStr == "." || originalRaw.isEmpty) None
+      else {
+        val value =
           if (!numStr.contains('.')) {
             // BigInt: python's int() is unbounded and range engines run
             // with maxDigits=100 — a >18-digit run must not throw
@@ -119,34 +125,14 @@ final class NumberDetector(
             val v = numStr.toDouble * scale
             if (v.isWhole) v.toLong.toString else v.toString
           }
-        stage1 += Detected(value, None, originalRaw)
+        Some((value, originalRaw))
       }
-    }
-    for (d <- stage1) {
-      val (unit, original) = captureUnit(d.original, processed)
-      if (digitCountOk(d.value)) {
-        val (consumed, at) = consumeOnceAt(processed, original)
-        if (at >= 0) {
-          processed = consumed
-          if (!requireUnit || unit.isDefined)
-            out += ((at, Detected(d.value, unit, original)))
-        }
-      }
-    }
+    }.foreach { case (value, span) => claimWithUnit(value, span) }
 
     // stage 2: number words over the consumed text
-    val (nums, origs) = NumberWords.numbersFromWords(processed, wordMap)
-    for ((n, o) <- nums.zip(origs);
-        value = NumberWords.numString(n) if digitCountOk(value)) {
-      val (unit, original) = captureUnit(o, processed)
-      val (consumed, at) = consumeOnceAt(processed, original)
-      if (at >= 0) {
-        processed = consumed
-        if (!requireUnit || unit.isDefined)
-          out += ((at, Detected(value, unit, original)))
-      }
-    }
-    out.sortBy(_._1).map(_._2).toSeq
+    val (nums, origs) = NumberWords.numbersFromWords(c.text, wordMap)
+    for ((n, o) <- nums.zip(origs)) claimWithUnit(NumberWords.numString(n), o)
+    c.results
   }
 
   private def isNumeric(s: String): Boolean = {
@@ -173,15 +159,5 @@ final class NumberDetector(
       if (m.group(3) != null) (Some(unitsMap(m.group(4).strip())), m.group(3).strip())
       else (Some(unitsMap(m.group(2).strip())), m.group(1).strip())
     } else (None, original)
-  }
-
-  /** Span-boundary tag substitution, first occurrence only
-    * (standard_number_detector.py:367-381 span template). Returns the new
-    * text and the match position (-1 when not found).
-    */
-  private def consumeOnceAt(text: String, original: String): (String, Int) = {
-    val m = SpanBoundary.pattern(original).matcher(text)
-    if (!m.find()) (text, -1)
-    else (text.substring(0, m.start()) + tag + text.substring(m.end()), m.start())
   }
 }

@@ -47,13 +47,9 @@ object PersonName {
     * OCCURRING_WITH_NAME / INDIC_BADWORDS / INDIC_QUESTIONWORDS — shipped
     * verbatim as resources under graft/lang/name/hi/).
     */
-  private def loadHiSet(name: String): Set[String] = {
-    val in = getClass.getResourceAsStream(s"/graft/lang/name/hi/$name.csv")
-    if (in == null) Set.empty
-    else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
+  private def loadHiSet(name: String): Set[String] =
+    graft.BundledResource.lines(s"/graft/lang/name/hi/$name.csv").drop(1)
       .map(_.strip()).filter(_.nonEmpty).toSet
-    finally in.close()
-  }
   private lazy val hiPrevVariations = loadHiSet("prev_message_variations")
   private lazy val hiStopwords = loadHiSet("stopwords")
   private lazy val hiCommonWithName = loadHiSet("common_with_name")

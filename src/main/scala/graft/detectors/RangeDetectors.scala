@@ -105,30 +105,17 @@ final class NumberRangeDetector(entityName: String = "number_range",
       }
     }
 
-    val results = ListBuffer.empty[(Int, DetectedRange)]
+    // phase 2: the range sub-detectors claim their whole matches
+    val c = new Cascade[DetectedRange](tagged, tag, Cascade.literal, _.original)
 
     def original(span: String): String =
       raw"__dnumber_(\d+)__".r.replaceAllIn(span,
         m => java.util.regex.Matcher.quoteReplacement(byIdx(m.group(1).toInt).original))
 
-    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedRange): Unit = {
-      var m = p.matcher(tagged)
-      val found = ListBuffer.empty[(String, DetectedRange)]
-      // requireUnit = the reference's unit_type gate: a range whose number
-      // carries no unit of the requested type is not a range at all
-      while (m.find()) {
-        val r = mk(m)
-        if (!requireUnit || r.unit.isDefined) found += ((m.group(), r))
-      }
-      for ((span, r) <- found) {
-        val mm = Pattern.compile(Pattern.quote(span)).matcher(tagged)
-        if (mm.find()) {
-          results += ((mm.start(), r))
-          tagged = tagged.substring(0, mm.start()) + tag + tagged.substring(mm.end())
-        }
-      }
-      m = null
-    }
+    // requireUnit = the reference's unit_type gate: a range whose number
+    // carries no unit of the requested type is not a range at all
+    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedRange): Unit =
+      c.runMatch(p)(m => Some(mk(m)).filter(r => !requireUnit || r.unit.isDefined))
 
     def numAt(m: java.util.regex.Matcher, g: Int): Detected = byIdx(m.group(g).toInt)
 
@@ -168,7 +155,7 @@ final class NumberRangeDetector(entityName: String = "number_range",
       DetectedRange(Some(n.value), Some(n.value), n.unit, original(m.group()))
     }
 
-    results.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }
 

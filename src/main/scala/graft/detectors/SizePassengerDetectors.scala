@@ -26,37 +26,14 @@ object ShoppingSizeDetector {
     raw"\b(?:size|sizes)\s+(\d{1,2})\b|\b(\d{1,2})\s+(?:size|sizes)\b")
 
   def detect(text0: String): Seq[Detected] = {
-    var processed = text0.toLowerCase(java.util.Locale.ROOT)
-    val out = ListBuffer.empty[(Int, Detected)]
-    def consume(span: String): Int = {
-      val m = Pattern.compile(raw"\b" + Pattern.quote(span) + raw"\b")
-        .matcher(processed)
-      if (!m.find()) -1
-      else {
-        val at = m.start()
-        processed = processed.substring(0, at) + "__shopping_size__" +
-          processed.substring(m.end())
-        at
-      }
+    val c = new Cascade[Detected](text0.toLowerCase(java.util.Locale.ROOT),
+      "__shopping_size__", Cascade.wordBounded, _.original)
+    c.run(pDict)(m => Some(Detected(sizeMap(m.group(1)), None, m.group(1))))
+    c.run(pNumeric) { m =>
+      val v = if (m.group(1) != null) m.group(1) else m.group(2)
+      Some(Detected(v, None, m.group().strip()))
     }
-    val m1 = pDict.matcher(processed)
-    val d1 = ListBuffer.empty[Detected]
-    while (m1.find()) d1 += Detected(sizeMap(m1.group(1)), None, m1.group(1))
-    d1.foreach { d =>
-      val at = consume(d.original)
-      if (at >= 0) out += ((at, d))
-    }
-    val m2 = pNumeric.matcher(processed)
-    val d2 = ListBuffer.empty[Detected]
-    while (m2.find()) {
-      val v = if (m2.group(1) != null) m2.group(1) else m2.group(2)
-      d2 += Detected(v, None, m2.group().strip())
-    }
-    d2.foreach { d =>
-      val at = consume(d.original)
-      if (at >= 0) out += ((at, d))
-    }
-    out.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }
 

@@ -82,25 +82,18 @@ final class TimeRangeDetector {
     tagBare(Pattern.compile(
       raw"$ph\s*(?:to|till|until|and|-)\s*(\d{1,2})\b"), 2)
 
-    val results = ListBuffer.empty[(Int, DetectedTimeRange)]
+    // the range sub-detectors claim their whole matches; the 24h range
+    // found above keeps its place ahead of them
+    val c = new Cascade[DetectedTimeRange](tagged, "__time_range__",
+      Cascade.literal, _.original)
+    pre.foreach { case (at, r) => c.keep(at, r) }
 
     def original(span: String): String =
       raw"__dtime_(\d+)__".r.replaceAllIn(span,
         m => java.util.regex.Matcher.quoteReplacement(byIdx(m.group(1).toInt).original))
 
-    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedTimeRange): Unit = {
-      val m = p.matcher(tagged)
-      val found = ListBuffer.empty[(String, DetectedTimeRange)]
-      while (m.find()) found += ((m.group(), mk(m)))
-      for ((span, r) <- found) {
-        val mm = Pattern.compile(Pattern.quote(span)).matcher(tagged)
-        if (mm.find()) {
-          results += ((mm.start(), r))
-          tagged = tagged.substring(0, mm.start()) + "__time_range__" +
-            tagged.substring(mm.end())
-        }
-      }
-    }
+    def run(p: Pattern)(mk: java.util.regex.Matcher => DetectedTimeRange): Unit =
+      c.runMatch(p)(m => Some(mk(m)))
 
     /** "between 7 and 9 pm": the open side (nn=hrs from a bare hour) takes
       * the closed side's meridiem — the 12h range distribution rule.
@@ -145,25 +138,14 @@ final class TimeRangeDetector {
         (raw"no particular preference|no preference|no particular time|" +
           raw"no time|anytime|any time|all day|full day|entire day|entireday",
           (12, 0, "am"), (11, 59, "pm")))
-      for ((alt, s0, e0) <- dayparts) {
-        val p = Pattern.compile(raw"\b((?:$alt)\s*(?:in|of|at)?)\b")
-        val m = p.matcher(tagged)
-        val found = ListBuffer.empty[String]
-        while (m.find()) found += m.group(1).strip()
-        for (span <- found) {
-          val mm = Pattern.compile(Pattern.quote(span)).matcher(tagged)
-          if (mm.find()) {
-            val st = DetectedTime(s0._1, s0._2, s0._3, span)
-            val en = DetectedTime(e0._1, e0._2, e0._3, span)
-            results += ((mm.start(), DetectedTimeRange(Some(st), Some(en),
-              "range", span)))
-            tagged = tagged.substring(0, mm.start()) + "__time_range__" +
-              tagged.substring(mm.end())
-          }
+      for ((alt, s0, e0) <- dayparts)
+        c.run(Pattern.compile(raw"\b((?:$alt)\s*(?:in|of|at)?)\b")) { m =>
+          val span = m.group(1).strip()
+          Some(DetectedTimeRange(Some(DetectedTime(s0._1, s0._2, s0._3, span)),
+            Some(DetectedTime(e0._1, e0._2, e0._3, span)), "range", span))
         }
-      }
     }
 
-    (pre ++ results).sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 }

@@ -1,6 +1,5 @@
 package graft.detectors.lang
 
-import java.nio.charset.StandardCharsets
 import scala.collection.mutable.LinkedHashMap
 
 /** CSV-driven language constant tables for the standard date/time regex
@@ -43,16 +42,9 @@ object TupleDict {
     TupleDict(out)
   }
 
-  private def readResource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing language resource $path")
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Built-in language table (classpath resource under /graft/lang). */
   def resource(kind: String, lang: String, file: String): TupleDict =
-    parse(readResource(s"/graft/lang/$kind/$lang/$file"))
+    parse(graft.BundledResource.text(s"/graft/lang/$kind/$lang/$file"))
 }
 
 /** The three tables a date language needs. Columns mirror the reference CSVs:

@@ -1,10 +1,10 @@
 package graft.detectors.lang
 
-import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
 import scala.collection.mutable.{LinkedHashMap, ListBuffer}
 
-import graft.detectors.{Detected, NumberDetection, NumberDetector, NumberWords}
+import graft.BundledResource
+import graft.detectors.{Cascade, Detected, NumberDetection, NumberDetector, NumberWords}
 import graft.detectors.NumberWords.NumberVariant
 
 /** Per-language numeral vocabulary for the number engines (F18/F19/F22
@@ -38,13 +38,6 @@ object NumberLangData {
       /** unit variant -> (canonical value, unit type) */
       units: Map[String, (String, String)])
 
-  private def readResource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing number language resource $path")
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   private def rows(csv: String): Iterator[Vector[String]] = {
     val lines = csv.split("\r?\n").iterator.filter(_.nonEmpty)
     if (lines.hasNext) lines.next() // header
@@ -62,7 +55,7 @@ object NumberLangData {
     val scales = Map.newBuilder[String, Long]
     val base = LinkedHashMap.empty[String, Double]
     // numerals_constant: number,name_variants,number_value,number_type
-    rows(readResource(s"/graft/lang/number/$lang/numerals_constant.csv"))
+    rows(BundledResource.text(s"/graft/lang/number/$lang/numerals_constant.csv"))
       .foreach { cols =>
         val numberText = cols(0).strip()
         val variants = variantsOf(cols(1))
@@ -89,7 +82,7 @@ object NumberLangData {
     // units: unit_type,unit_value,unit_variants (absent for some langs)
     val units = Map.newBuilder[String, (String, String)]
     if (getClass.getResource(s"/graft/lang/number/$lang/units.csv") != null)
-      rows(readResource(s"/graft/lang/number/$lang/units.csv")).foreach { cols =>
+      rows(BundledResource.text(s"/graft/lang/number/$lang/units.csv")).foreach { cols =>
         val uType = cols(0).strip()
         val uValue = cols(1).strip()
         variantsOf(cols(2)).foreach(v =>
@@ -108,7 +101,7 @@ object NumberLangData {
 
   /** Range keyword table: (variants, position, range_type) rows. */
   def rangeKeywords(lang: String): Seq[(Seq[String], Int, String)] =
-    rows(readResource(s"/graft/lang/number_range/$lang/number_range_keywords.csv"))
+    rows(BundledResource.text(s"/graft/lang/number_range/$lang/number_range_keywords.csv"))
       .map(cols => (variantsOf(cols(0)).map(_.toLowerCase(java.util.Locale.ROOT)),
         cols(1).strip().toInt, cols(2).strip()))
       .toSeq
@@ -220,24 +213,16 @@ final class ChineseNumberDetector(entityName: String = "number",
 
   def detect(text: String): Seq[Detected] = {
     if (text == null) return Seq.empty
-    // reference removes hyphens up front
-    var processed = text.replaceAll("-+", "")
-    val out = ListBuffer.empty[(Int, Detected)]
-    val m = pat.matcher(processed)
-    val found = ListBuffer.empty[String]
-    while (m.find()) if (m.group(1).strip().nonEmpty) found += m.group(1).strip()
-    for (original <- found) {
-      numberOf(original).filter(digitCountOk).foreach { value =>
-        // first-occurrence literal consumption (reference tag sub count=1)
-        val mm = Pattern.compile(Pattern.quote(original)).matcher(processed)
-        if (mm.find()) {
-          out += ((mm.start(), Detected(value, None, original)))
-          processed = processed.substring(0, mm.start()) + tag +
-            processed.substring(mm.end())
-        }
-      }
+    // reference removes hyphens up front, then claims each number's first
+    // literal occurrence (tag sub count=1)
+    val c = new Cascade[Detected](text.replaceAll("-+", ""), tag,
+      Cascade.literal, _.original)
+    c.run(pat) { m =>
+      val original = m.group(1).strip()
+      if (original.isEmpty) None
+      else numberOf(original).filter(digitCountOk).map(Detected(_, None, original))
     }
-    out.sortBy(_._1).map(_._2).toSeq
+    c.results
   }
 
   private def digitCountOk(value: String): Boolean = {

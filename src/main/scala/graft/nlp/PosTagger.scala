@@ -110,13 +110,9 @@ object PosTagger {
       }
   }
 
-  private def loadResourceLines(path: String): Seq[String] = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+  private def loadResourceLines(path: String): Seq[String] =
+    graft.BundledResource.lines(path)
       .map(_.strip()).filter(l => l.nonEmpty && !l.startsWith("#")).toVector
-    finally in.close()
-  }
 
   /** Parse "word_TAG word_TAG ..." lines (tag = substring after the LAST
     * underscore, so hyphenated/apostrophe words survive).

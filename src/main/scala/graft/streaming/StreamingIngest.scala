@@ -17,8 +17,10 @@ import graft.index.{IndexBuilder, IndexConfig, Snapshot, SnapshotMeta}
   * batch's delta picks up the appended rows (buildDelta skips keys that
   * already landed).
   *
-  * Scale: batches after the first land as DELTA generations — O(batch)
-  * work, manifest-union reads (IndexBuilder.buildDelta). The delta chain is
+  * Scale: batches after the first land as DELTA generations with
+  * manifest-union reads (IndexBuilder.buildDelta). Only the postings are
+  * O(batch): stages 1, 2 and 5 still scan the base generations' docs and
+  * dictionary, so a delta's cost grows with the base. The delta chain is
   * auto-compacted into a full rebuild once it exceeds `maxDeltaChain`
   * generations, bounding per-query segment fan-in.
   */
