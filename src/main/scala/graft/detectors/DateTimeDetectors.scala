@@ -293,7 +293,7 @@ final class DateDetector(referenceDate: LocalDate,
           Seq(DetectedDate(d1, m1, yy1, "date", original),
             DetectedDate(dd2, mm2, yy2, "date", original))
         }
-      }
+      }.filter(_.forall(d => isValidDate(d.dd, d.mm, d.yy))) // bumped year
     }
     // "21st jan to 30th [feb]": start date anchors; a month-less end day
     // resolves to the closest date with that day after the start
@@ -305,19 +305,21 @@ final class DateDetector(referenceDate: LocalDate,
       val yy0 = referenceDate.getYear
       monthNames.get(m.group(3)).filter(isValidDate(dd1, _, yy0)).flatMap { mm1 =>
         val yy1 = if (LocalDate.of(yy0, mm1, dd1).isBefore(referenceDate)) yy0 + 1 else yy0
-        val dt1 = LocalDate.of(yy1, mm1, dd1)
-        val end = Option(m.group(5)).flatMap(monthNames.get) match {
-          case Some(mm2) if isValidDate(dd2, mm2, yy1) =>
-            val dt2 = LocalDate.of(yy1, mm2, dd2)
-            Some((dd2, mm2, if (dt2.isBefore(dt1)) yy1 + 1 else yy1))
-          case Some(_) => None
-          case None => nextDateWithDd(dd2, dt1)
+        // a year bump can land on a 29 February that does not exist
+        Option.when(isValidDate(dd1, mm1, yy1))(LocalDate.of(yy1, mm1, dd1)).flatMap { dt1 =>
+          val end = Option(m.group(5)).flatMap(monthNames.get) match {
+            case Some(mm2) if isValidDate(dd2, mm2, yy1) =>
+              val dt2 = LocalDate.of(yy1, mm2, dd2)
+              Some((dd2, mm2, if (dt2.isBefore(dt1)) yy1 + 1 else yy1))
+            case Some(_) => None
+            case None => nextDateWithDd(dd2, dt1)
+          }
+          end.map { case (d2, m2, y2) =>
+            Seq(DetectedDate(dd1, mm1, yy1, "date", original),
+              DetectedDate(d2, m2, y2, "date", original))
+          }
         }
-        end.map { case (d2, m2, y2) =>
-          Seq(DetectedDate(dd1, mm1, yy1, "date", original),
-            DetectedDate(d2, m2, y2, "date", original))
-        }
-      }
+      }.filter(_.forall(d => isValidDate(d.dd, d.mm, d.yy)))
     }
     // "21st to 30th of coming month" (en/date_detection.py:1760-1824)
     c.runShared(rangeDdToDdNextMonth) { m =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -48,11 +48,14 @@ object Dedup {
     * shipped this as a count window, which shuffled the FULL row set by
     * bucket key and re-scanned it for the audit; guide §2.3 "aggregate
     * before you shuffle"). Over-cap buckets are by construction the
-    * exceptional degenerate keys, so the audit reads the tiny bad-bucket
-    * list and the surviving rows come from a broadcast anti-join against
-    * it — the capped row set itself never pays an exchange. Drops are
-    * recorded under `op` (see [[lastCapDrops]]) and WARN-logged with
-    * auto-sizing `guidance`, exactly as before.
+    * exceptional degenerate keys, so their list is collected ONCE, bounded
+    * like the broadcast it feeds: the audit sums the collected rows and the
+    * surviving rows come from a broadcast anti-join against the same rows
+    * (none when nothing is over the cap) — the capped row set itself
+    * never pays an exchange. A lazy list cost an extra aggregation job for
+    * the audit and re-ran in each self-join branch. Drops are recorded
+    * under `op` (see [[lastCapDrops]]) and WARN-logged with auto-sizing
+    * `guidance`.
     */
   private def capBucketsAudited(rows: DataFrame, partCols: Seq[String],
       cap: Int, op: String, guidance: String,
@@ -77,22 +80,20 @@ object Dedup {
         val par = rows.sparkSession.sparkContext.defaultParallelism
         if (m0.rdd.getNumPartitions < par) m0.repartition(par) else m0
       } else m0
-    // sizing reads the un-spread blocks (partial agg needs no width); the
-    // bad-bucket list stays LAZY — the audit folds it in one job here and
-    // each anti-join branch re-derives it from the materialized blocks
-    // (a tiny aggregation; an eager checkpoint of it cost a whole extra
-    // job per capped operator call)
-    val bad = m0.groupBy(keys: _*).agg(count(lit(1)).as("bsz"))
+    // sizing reads the un-spread blocks (partial agg needs no width)
+    val sized = m0.groupBy(keys: _*).agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > cap)
-    val d = bad.agg(count(lit(1)).as("b"),
-      coalesce(sum("bsz"), lit(0L)).as("r")).head()
-    val drops = CapDrops(d.getLong(0), d.getLong(1))
+    val bad = sized.collect()
+    val drops = CapDrops(bad.length, bad.map(_.getAs[Long]("bsz")).sum)
     capDropsByOp.put(op, drops)
     if (drops.droppedRows > 0)
       log.warn(s"$op: maxBucketSize=$cap dropped ${drops.droppedBuckets} " +
         s"bucket(s) / ${drops.droppedRows} row(s) before the self-join — " +
         s"pairs inside them cannot surface from this key. $guidance")
-    m.join(broadcast(bad.select(keys: _*)), partCols, "left_anti")
+    if (bad.isEmpty) m
+    else m.join(broadcast(rows.sparkSession.createDataFrame(
+      java.util.Arrays.asList(bad: _*), sized.schema).select(keys: _*)),
+      partCols, "left_anti")
   }
 
   /** The blocked-pair kernel under the four capped near-dup families —
@@ -969,18 +970,36 @@ object Dedup {
     * id as its cluster label (= the canonical survivor, consistent with the
     * other ops' min-id rule).
     *
-    * Algorithm: min-label propagation with pointer jumping — each round
-    * (a) takes the min label over neighbors, (b) compresses label chains
-    * (label := label(label)), so convergence is O(log diameter) rounds,
-    * not O(diameter); each round is two hash joins + an aggregation, all
-    * keyed on ids (the 100 TB shape — no adjacency ever materializes on
-    * one node). Deterministic: min() fixpoints are unique, so partitioning
-    * and round count cannot change the answer. Iteration caps at `maxIter`
-    * with a convergence check per round (a filter-isEmpty scan of the
-    * round's checkpointed blocks — no extra join; rounds are bounded by
-    * log diameter, in practice 3-5 for near-dup clusters); reaching the
-    * cap unconverged throws IllegalStateException rather than return
-    * labels that split components.
+    * Algorithm: min-label propagation with pointer jumping. The seed is
+    * one aggregation over the mirrored edges, label(v) = min(v, neighbors).
+    * A certificate then checks it once: if no edge (src, dst) has
+    * label(dst) < label(src), labels are constant on each component, and
+    * as each is an id of its component no larger than its own, each is the
+    * component's minimum. LSH near-dup graphs are mostly cliques, which the
+    * seed solves, so the usual call ends there with no round.
+    *
+    * Otherwise each round (a) takes the min label over each id and its
+    * neighbors and (b) compresses label chains (label := label(label)), so
+    * convergence takes O(log diameter) rounds, not O(diameter). A round is
+    * the neighbor join, one aggregation that both sides of the pointer-jump
+    * self-join read, and a checkpoint whose job also counts the changed
+    * labels; the loop ends at the first round that changes none. On a small
+    * graph a round is 4 Spark jobs (broadcast edges, the aggregation,
+    * broadcast jump table, checkpoint) and the certificate 3. Every join is
+    * keyed on ids (the 100 TB shape: no adjacency on one node), and the
+    * min-label fixpoint is unique, so partitioning and round count cannot
+    * change the answer. Reaching `maxIter` rounds unconverged throws
+    * IllegalStateException rather than return labels that split
+    * components; `maxIter = 0` accepts only a seed the certificate proves.
+    *
+    * Jobs per call on 20 disjoint 4-cliques and on 16-node, 64-node and
+    * shuffled-id 50-node paths (JobCountSpec's session): 12 / 33 / 47 / 187
+    * with the former confirming round of 7 jobs, 7 / 23 / 31 / 111 now.
+    * Measured and rejected, same graphs: the certificate after every round
+    * in place of the changed-label count, 7 / 28 / 42 / 182; a jump table
+    * reading only the label, so each join side runs the aggregation,
+    * 7 / 27 / 38 / 150; a filter-isEmpty job for the count,
+    * 7 / 27 / 37 / 137; unknown in place of stored sizes, 9 / 33 / 45 / 165.
     *
     * Returns (id, label) for every id appearing in `pairs`; singletons
     * (docs with no dup pair) are absent by construction — callers keep the
@@ -990,81 +1009,61 @@ object Dedup {
       maxIter: Int = 25): DataFrame = {
     requireIntegralId(pairs, idACol, "connectedComponents")
     requireIntegralId(pairs, idBCol, "connectedComponents")
-    // ONE eager materialization covers the caller's pair pipeline AND the
-    // mirrored edge list: explode emits both directions in a single pass
-    // (the former p.union(p.swap) read the pair plan from two branches and
-    // so needed pairs checkpointed separately first — two jobs, two
-    // materialized copies). No distinct: min() is duplicate-insensitive.
-    // The explicit hash partitioning on dst is PRESERVED by the checkpoint
-    // (LogicalRDD keeps the physical plan's outputPartitioning), so every
-    // round's neighbor join reads the — at scale, large — edge table in
-    // place and only the label table moves: the per-round edge re-shuffle
-    // this loop used to pay is replaced by one shuffle at build time
-    // (guide §2.4, keyed operations share one exchange).
-    val edges = pairs
+    // ONE eager materialization covers the caller's pair pipeline and the
+    // mirrored edges (explode emits both directions; min() needs no
+    // distinct). No repartition: under AQE a checkpoint keeps no output
+    // partitioning, so hashing on dst only added a shuffle job
+    val edges = Bridge.withStoredSize(pairs
       .select(col(idACol).cast(LongType).as("src"),
         col(idBCol).cast(LongType).as("dst"))
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     // seed labels with round 1's neighbor-min for free: one aggregation
-    // over the edge list replaces BOTH the distinct-ids materialization
-    // and the first loop round's three joins (label(v) = min(v, min
-    // neighbor) is exactly what round 1 would compute from identity
-    // labels); the min-label fixpoint is unique, so seeding cannot change
-    // the result, only the round count. The groupBy(src) output is
-    // hash-partitioned on id after the alias (alias-aware partitioning),
-    // so the first round's label-side joins start co-partitioned.
-    var labels = edges.groupBy(col("src"))
+    // over the edge list replaces both the distinct-ids materialization and
+    // a first round from identity labels; the min-label fixpoint is unique,
+    // so seeding cannot change the result, only the round count
+    var labels = Bridge.withStoredSize(edges.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("label"))
       .select(col("src").as("id"), col("label"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
+    // neighbor-min: each id's label as `prev` beside the smallest label
+    // among it and its neighbors. The ids' own labels join the neighbor
+    // rows as self-loops, so one join and one aggregation give both
+    def neighborMin(labels: DataFrame): DataFrame = edges
+      .join(labels.withColumnRenamed("id", "dst"), "dst")
+      .select(col("src"), col("label"), lit(false).as("self"))
+      .union(labels.select(col("id"), col("label"), lit(true)))
+      .groupBy(col("src").as("id"))
+      .agg(max(when(col("self"), col("label"))).as("prev"),
+        min(col("label")).as("label"))
+    // the certificate (see above), once: a failed one costs 3 jobs, and
+    // repeating it every round costs more than the final round it saves
+    var converged =
+      neighborMin(labels).filter(col("label") < col("prev")).isEmpty
     var iter = 0
-    var converged = false
     while (!converged && iter < maxIter) {
       val tRound = System.nanoTime()
-      // (a) neighbor-min: the smallest label among me and my neighbors
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("label").as("nlabel"))
-      // carry the pre-round label through as `prev` so the convergence
-      // check is a scan of the checkpointed result, not a third join
-      val propagated = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-      // (b) pointer jump: label := label(label) — compresses label chains
-      // so a long path converges logarithmically. The jump table reads the
-      // POST-neighbor-min labels (propagated), not the round's input:
-      // fresher pointers contract strictly further per round, and any
-      // intermediate label state reaches the same unique min-label
-      // fixpoint. (A second jump per round was measured on the real
-      // SemDeDup graphs: round count stayed at 6 — their decay is limited
-      // by plateau-rooted neighbor-min propagation, not pointer chains —
-      // so the extra label-keyed self-join was pure cost and is not done.)
+      val propagated = neighborMin(labels)
+      // pointer jump on the post-neighbor-min labels (fresher pointers
+      // contract further). A target's label is never above its prev, so
+      // `jump` reads both and the two join sides prune to one aggregation,
+      // which AQE runs once (a reused exchange). A second jump per round
+      // left the SemDeDup graphs' plateau-limited round count at 6.
       val byLabel = propagated
-        .select(col("id").as("label"), col("label").as("jump"))
-      val next = propagated.join(byLabel, Seq("label"), "left")
-        .select(col("id"), col("prev"),
-          least(col("label"), coalesce(col("jump"), col("label"))).as("label"))
-        // labels leave each round hash-partitioned on id (preserved by the
-        // checkpoint): the next round's neighbor join (id renamed dst) and
-        // propagated join both start co-partitioned — the rename is alias-
-        // aware, so neither re-shuffles the label table
-        .repartition(col("id"))
-        .localCheckpoint(true)
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
-      // a further round plans against an unknown size: the estimate the
-      // checkpoint carries over compounds every round (a join's estimate is
-      // the product of its children's), and a graph needing a few dozen
-      // rounds spent minutes planning, not seconds. Already the seed's
-      // estimate is past any broadcast threshold, so the joins plan as
-      // before; converged labels go back to the caller untouched
-      labels = (if (converged) next else Bridge.withUnknownSize(next))
-        .select(col("id"), col("label"))
+        .select(col("id").as("label"), least(col("prev"), col("label")).as("jump"))
+      // the changed-label count rides on the checkpoint's own job; the
+      // next round plans against the stored size, never a compounded one
+      val changed = Observation()
+      labels = Bridge.withStoredSize(propagated.join(byLabel, Seq("label"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("jump"), col("label"))).as("label"),
+          col("prev"))
+        .observe(changed, count(when(col("label") =!= col("prev"), 1)).as("n"))
+        .localCheckpoint(true))
+      converged = changed.get("n") == 0L
       iter += 1
       if (log.isDebugEnabled)
         log.debug(f"connectedComponents round $iter: " +
@@ -1075,7 +1074,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within maxIter = $maxIter rounds")
-    labels
+    labels.select(col("id"), col("label"))
   }
 
   /** End-to-end near-dup removal: candidate pairs from MinHash-LSH →

@@ -3,9 +3,11 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkEntry
@@ -23,10 +25,14 @@ import graft.query.{IndexReader, Searcher}
   *    `collect()` as Bench does. Pass 1 is Bench's cold order and prints
   *    as `(warm-up)`: it pays seconds of class loading and JIT, so each
   *    query's median and minimum are over passes 2..trials (trials ≥ 2).
-  *  - `jobs <sfDir> <query>`: one line per Spark job (id, start offset,
-  *    duration, call site), so a multi-job operator's cost (eager
-  *    checkpoints, CC rounds, the final collect) is attributed without
-  *    the UI. The listener bus is drained before each summary line.
+  *  - `jobs <sfDir> <query> [passes]`: one line per Spark job (id, start
+  *    offset, duration, SQL execution id, call site), grouped by SQL
+  *    execution, so a multi-job operator's cost (eager checkpoints, CC
+  *    rounds, the final collect) is attributed without the UI. A job's call
+  *    site is its SQL execution's: under AQE a query stage's job starts on a
+  *    pool thread, and its own stages name only that thread's frame. Each
+  *    pass after the first (default: none) prints one line with its job
+  *    total. The listener bus is drained before each summary line.
   *  - `plan <sfDir> <outDir> <suffix> [query ...]`: writes the formatted
   *    physical plan of each query (all when none are named) to
   *    `<outDir>/<query>_<suffix>.txt`.
@@ -62,9 +68,12 @@ object Probe {
           s"trials must be an integer >= 2 (pass 1 is a warm-up): $trials")
         val qs = known(names)
         time(_, sfDir, trials.toInt, qs)
-      case Seq("jobs", sfDir, name) =>
+      case Seq("jobs", sfDir, name, rest @ _*) if rest.length <= 1 =>
         known(Seq(name))
-        jobs(_, sfDir, name)
+        val passes = rest.headOption.getOrElse("1")
+        require(passes.nonEmpty && passes.forall(_.isDigit) && passes.toInt >= 1,
+          s"passes must be a positive integer: $passes")
+        jobs(_, sfDir, name, passes.toInt)
       case Seq("plan", sfDir, outDir, suffix, names @ _*) =>
         val qs = known(names)
         plan(_, sfDir, outDir, suffix, qs)
@@ -75,7 +84,7 @@ object Probe {
           s"k must be a positive integer: $k")
         parity(_, indexDir, k.toInt, rest.lift(1))
       case _ => throw new IllegalArgumentException("usage: Probe " +
-        "time <sfDir> <trials> [query ...] | jobs <sfDir> <query> | " +
+        "time <sfDir> <trials> [query ...] | jobs <sfDir> <query> [passes] | " +
         "plan <sfDir> <outDir> <suffix> [query ...] | tiers <indexDir> | " +
         "parity <indexDir> [k] [otherIndexDir]")
     }
@@ -135,26 +144,43 @@ object Probe {
     })
   }
 
-  private def jobs(spark: SparkSession, sfDir: String, name: String): Unit = {
+  private def jobs(spark: SparkSession, sfDir: String, name: String,
+      passes: Int): Unit = {
     val sc = spark.sparkContext
     val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
     val ended = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobEnd]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = started.put(js.jobId, js)
       override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.add(je)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlSites.put(s.executionId, s.description)
+        case _ =>
+      }
     }
-    // job lines print from this thread once the bus has delivered every
-    // event posted so far, so none lands after the summary it belongs to
-    def flushJobs(t0: Long): Unit = {
+    // the jobs that ended since the last call, once the bus has delivered
+    // every event posted so far, so none lands after the summary it belongs to
+    def endedJobs(): Seq[(SparkListenerJobStart, SparkListenerJobEnd)] = {
       Bridge.drainListeners(sc)
-      Iterator.continually(ended.poll()).takeWhile(_ != null).toSeq.sortBy(_.jobId)
-        .foreach { je =>
-          val js = started.remove(je.jobId)
-          // a job's final stage is named after the job's call site
-          val site = js.stageInfos.maxByOption(_.stageId).fold("?")(_.name)
+      Iterator.continually(ended.poll()).takeWhile(_ != null).toSeq
+        .map(je => (started.remove(je.jobId), je))
+    }
+    def flushJobs(t0: Long): Unit = {
+      val done = endedJobs()
+      def sqlId(js: SparkListenerJobStart): Option[Long] = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      // SQL executions in the order of their first job
+      done.groupBy { case (js, _) => sqlId(js) }.values.toSeq
+        .sortBy(_.map(_._2.jobId).min)
+        .foreach(_.sortBy(_._2.jobId).foreach { case (js, je) =>
+          val ex = sqlId(js)
+          // a job outside SQL is named by its final stage, which carries
+          // the job's call site
+          val site = ex.flatMap(id => Option(sqlSites.get(id)))
+            .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("?")(_.name))
           println(f"[job] ${je.jobId}%4d  +${(js.time - t0) / 1e3}%7.3f  " +
-            f"${(je.time - js.time) / 1e3}%7.3f s  $site")
-        }
+            f"${(je.time - js.time) / 1e3}%7.3f s  sql ${ex.fold("-")(_.toString)}%4s  $site")
+        })
     }
     sc.addSparkListener(listener)
     try {
@@ -167,6 +193,12 @@ object Probe {
       val total = (System.currentTimeMillis() - t0) / 1e3
       flushJobs(t0)
       println(f"[probe] $name total $total%7.3f s")
+      for (pass <- 2 to passes) {
+        val p0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).collect()
+        val sec = (System.nanoTime() - p0) / 1e9
+        println(f"[probe] $name warm pass $pass: ${endedJobs().size} jobs $sec%7.3f s")
+      }
     } finally sc.removeSparkListener(listener)
   }
 

@@ -108,6 +108,22 @@ class DateTimeSpec extends AnyFunSuite {
   private def times(text: String): Seq[(Int, Int, String)] =
     td.detect(text).map(t => (t.hh, t.mm, t.nn))
 
+  test("range forms emit no range when a year bump lands on 29 February") {
+    // from 2028-03-10, 29 February has passed and 2029 is no leap year:
+    // neither range form may throw or emit 29/2/2029; the day ordinals
+    // then resolve on their own
+    val leap = new DateDetector(LocalDate.of(2028, 3, 10))
+    def leapDates(text: String) = leap.detect(text).map(d => (d.dd, d.mm, d.yy))
+    assert(leapDates("29th feb to 3rd mar") == Seq((29, 3, 2028), (3, 3, 2029)))
+    assert(leapDates("21st to 29th of feb") == Seq((21, 3, 2028), (29, 3, 2028)))
+    // before 29 February passes, both stay ranges in the leap year
+    val early = new DateDetector(LocalDate.of(2028, 2, 1))
+    assert(early.detect("29th feb to 3rd mar").map(d => (d.dd, d.mm, d.yy)) ==
+      Seq((29, 2, 2028), (3, 3, 2028)))
+    assert(early.detect("21st to 29th of feb").map(d => (d.dd, d.mm, d.yy)) ==
+      Seq((21, 2, 2028), (29, 2, 2028)))
+  }
+
   test("clock with meridiem — hours not normalized (ref yaml en_1)") {
     assert(times("the time is 12:35 am est") == Seq((12, 35, "am")))
     assert(times("meet me at 10:33 pm at the cafe") == Seq((10, 33, "pm")))

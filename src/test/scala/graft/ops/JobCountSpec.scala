@@ -1,0 +1,67 @@
+package graft.ops
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.{SparkEntry, SparkTestBase}
+
+/** Spark-job pins for connected components and a curate pass. On tables
+  * this small each job runs a task or two, so its fixed cost (code
+  * generation, closure cleaning, scheduling) dominates and the job count is
+  * the cost model; these pins keep a later change from quietly adding
+  * rounds or eager passes.
+  */
+class JobCountSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** Spark jobs `body` starts, counted by a listener drained afterwards. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { body; Bridge.drainListeners(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  private def ccJobs(edges: Seq[(Long, Long)]): Int = {
+    val pairs = edges.toDF("idA", "idB")
+    jobsOf(Dedup.connectedComponents(pairs, "idA", "idB", maxIter = 64).collect())
+  }
+
+  private def path(ids: Seq[Long]): Seq[(Long, Long)] = ids.zip(ids.tail)
+
+  private val cliques = (0L until 20L).flatMap { c =>
+    val ns = (0L until 4L).map(c * 10 + _)
+    for (a <- ns; b <- ns if a < b) yield (a, b)
+  }
+  private val path16 = path(0L until 16L)
+  private val path64 = path(0L until 64L)
+  private val shuffledPath50 =
+    path(new scala.util.Random(17).shuffle((0 until 50).map(_ * 3L + 1)))
+
+  test("connected components: a seed-solved graph skips the rounds, and paths cost no more") {
+    // before the certificate (every call ran at least one confirming
+    // round, 7 jobs each) the same spec read 12 / 33 / 47 / 187 jobs
+    val counts = Seq(cliques, path16, path64, shuffledPath50).map(ccJobs)
+    info(s"jobs: ${counts.mkString(" / ")}")
+    assert(counts.head <= 9, counts)
+    assert(counts.sum <= 12 + 33 + 47 + 187, counts)
+  }
+
+  test("a warm q_curation_rep pass runs at most 30 jobs") {
+    // 40 before the certificate and the collected cap-audit list
+    val sf = "perfbench/data/sf0.01"
+    def pass(): Unit = SparkEntry.queries("q_curation_rep")(spark, sf).collect()
+    pass()
+    val n = jobsOf(pass())
+    info(s"jobs: $n")
+    assert(n <= 30, n)
+  }
+}

@@ -151,6 +151,15 @@ class OpsSpec extends SparkTestBase {
       nBits = 2, minCosine = -1.0, maxBucketSize = 8).count()
     val ed = Dedup.lastCapDrops("embeddingNearDupPairs").get
     assert(ed.droppedBuckets == 1 && ed.droppedRows == 40)
+    // the 30 identical docs beside 300 distinct ones whose shared words
+    // collide in further over-cap buckets; each of the five input
+    // partitions holds part of every wide bucket
+    val distinct = (30L until 330L).map(i => (i, s"row ${i % 12} of group ${i % 5} item $i"))
+      .toDF("doc_id", "text")
+    Dedup.minHashLsh(dups.union(distinct).repartition(5), "text", "doc_id",
+      shingleSize = 2, numHashes = 16, bands = 8, minJaccard = 0.5,
+      maxBucketSize = 8).count()
+    assert(Dedup.lastCapDrops("minHashLsh").contains(Dedup.CapDrops(51, 1042)))
   }
 
   test("integral-id guard: lossy id casts fail fast, not silently") {
@@ -1436,13 +1445,16 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("connected components ≡ an in-JVM union-find over random graphs") {
-    // seeded graphs on shuffled, non-contiguous ids: a path of 40–59 nodes
-    // (the propagation worst case, laid out in random id order), small
-    // random trees, isolated pairs, and duplicate and reversed edges.
-    // maxIter is above the path length, which bounds the round count: on
-    // random-id paths this long min-label propagation with one pointer
-    // jump can need more than the default 25 rounds, and this property
-    // pins the labels, not the round count
+    // seeded graphs on shuffled, non-contiguous ids, in two families.
+    // Multi-round: a path of 40–59 nodes (the propagation worst case, laid
+    // out in random id order), small random trees, isolated pairs.
+    // Seed-solved: cliques, and stars centred on their smallest id — every
+    // node neighbours its component's minimum, so the seed labels are the
+    // answer and the certificate ends the call before any round. Both get
+    // duplicate and reversed edges. maxIter is above the path length, which
+    // bounds the round count: on random-id paths this long min-label
+    // propagation with one pointer jump can need more than the default 25
+    // rounds, and this property pins the labels, not the round count
     val maxIter = 64
     def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -1456,24 +1468,38 @@ class OpsSpec extends SparkTestBase {
       }
       parent.keys.toSeq.map(x => x -> find(x)).toMap
     }
+    def components(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
+      Dedup.connectedComponents(edges.toDF("idA", "idB"), "idA", "idB", iters)
+        .as[(Long, Long)].collect().toMap
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       val ids = rnd.shuffle((0 until 1000).map(i => i * 7L + 3)).iterator
+      def noisy(edges: Seq[(Long, Long)]) = rnd.shuffle(edges ++ edges.take(10) ++
+        edges.filter(_ => rnd.nextBoolean()).map(_.swap))
       val path = Seq.fill(40 + rnd.nextInt(20))(ids.next())
       val trees = Seq.fill(4) {
         val nodes = Seq.fill(2 + rnd.nextInt(7))(ids.next())
         nodes.indices.tail.map(i => (nodes(rnd.nextInt(i)), nodes(i)))
       }.flatten
       val isolated = Seq.fill(3)((ids.next(), ids.next()))
-      val edges = path.zip(path.tail) ++ trees ++ isolated
-      val noisy = rnd.shuffle(edges ++ edges.take(10) ++
-        edges.filter(_ => rnd.nextBoolean()).map(_.swap))
-      val got = Dedup.connectedComponents(noisy.toDF("idA", "idB"), "idA", "idB",
-        maxIter).as[(Long, Long)].collect().toMap
-      assert(got == unionFindLabels(noisy), s"seed $seed")
+      val multi = noisy(path.zip(path.tail) ++ trees ++ isolated)
+      val got = components(multi, maxIter)
+      assert(got == unionFindLabels(multi), s"seed $seed")
       assert(got.groupBy(_._2).forall { case (label, members) =>
         members.keys.min == label }, s"seed $seed: labels are component minima")
       assert(got(path.head) == path.min, s"seed $seed: the path is one component")
+      val cliques = Seq.fill(4) {
+        val nodes = Seq.fill(3 + rnd.nextInt(4))(ids.next())
+        for (a <- nodes; b <- nodes if a < b) yield (a, b)
+      }.flatten
+      val stars = Seq.fill(4) {
+        val nodes = Seq.fill(4 + rnd.nextInt(6))(ids.next())
+        nodes.filter(_ != nodes.min).map(leaf => (leaf, nodes.min))
+      }.flatten
+      val solved = noisy(cliques ++ stars)
+      assert(components(solved, maxIter) == unionFindLabels(solved), s"seed $seed: seed-solved")
+      // no round at all: the certificate alone accepts the seed labels
+      assert(components(solved, 0) == unionFindLabels(solved), s"seed $seed: certificate")
     }
   }
 

@@ -45,6 +45,18 @@ class ProbeSpec extends SparkTestBase {
     assert(out.filter(_.startsWith("[job]")).forall(_.contains(" at ")), out)
   }
 
+  test("jobs: SQL jobs carry their execution's call site; one total per warm pass") {
+    val out = output("jobs", sfDir, "q_window_rank", "3")
+    val jobLines = out.filter(_.startsWith("[job]"))
+    // AQE query stages start on a pool thread; their execution names the action
+    assert(jobLines.nonEmpty && jobLines.forall(l => l.contains(" sql ") && l.contains(" at ")), out)
+    assert(!jobLines.exists(_.contains("CompletableFuture")), out)
+    val warm = out.filter(_.contains("q_window_rank warm pass"))
+    assert(warm.length == 2 && warm.head.contains("pass 2:") && warm.last.contains("pass 3:"), out)
+    assert(warm.forall(_.matches(""".*pass \d: \d+ jobs .*""")), out)
+    assert(out.indexWhere(_.contains("q_window_rank total")) < out.indexOf(warm.head), out)
+  }
+
   test("tiers: one p50/p95/qps line per serving tier") {
     val dir = tmpDir("graft-probe-tiers")
     graft.index.IndexBuilder.build(graft.corpus.CodeCorpus.generate(spark, 40L, seed = 7L),
@@ -70,7 +82,9 @@ class ProbeSpec extends SparkTestBase {
 
   test("main rejects bad arguments before a session starts") {
     for (args <- Seq(Seq("time", sfDir, "1"), Seq("time", sfDir, "x"),
-        Seq("jobs", sfDir, "no_such_query"), Seq("plan", sfDir), Seq("explain"),
+        Seq("jobs", sfDir, "no_such_query"), Seq("jobs", sfDir, "q_window_rank", "0"),
+        Seq("jobs", sfDir, "q_window_rank", "x"), Seq("jobs", sfDir, "q_window_rank", "2", "3"),
+        Seq("plan", sfDir), Seq("explain"),
         Seq("parity", sfDir, "0"), Seq("parity", sfDir, "x"),
         Seq("parity", sfDir, "10", sfDir, "extra")))
       intercept[IllegalArgumentException](Probe.main(args.toArray))
