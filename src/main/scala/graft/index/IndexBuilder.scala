@@ -1,12 +1,16 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Build-time configuration.
   *
@@ -63,15 +67,23 @@ private[index] final case class DocRow(docId: Long, repo: String,
   *   corpus ─ docShard = pmod(hash(key), docShards) ─ exchange of shard
   *            ranges onto ≤ defaultParallelism tasks ─ (shard, key) sort ─
   *            one pass: dense docId + sha256 + analyze/tf ─► docs/
+  *            (+ per-docShard docs, doclen sum, fingerprint sum)
   *   docs ─ per-partition dict partials (term, df, cf, maxTf) ─
-  *          groupBy(term) of |vocab|-sized partials ─► dict/ (+ hot-term map)
+  *          groupBy(term) of |vocab|-sized partials ─► dict/
+  *          (+ hot-term map, observed on the write)
   *   docs ─ per-partition COMPLETE compressed partial posting lists per
   *          (term, salt) ─ shuffle one byte-array per (partition,term,salt)
   *          onto ≤ defaultParallelism tasks of bucket ranges ─
   *          ordered concat-merge per (term, salt) ─► segments/ (bucket dirs)
-  *   segments ─ per-bucket metrics ─► lineage/
-  *   manifest vN + atomic pointer swap ─► meta/
+  *          (+ per-bucket shards, postings, posting bytes)
+  *   stage 3's per-bucket figures ─ one driver-written file ─► lineage/
+  *   stats + sizing summed from the figures; manifest vN + atomic
+  *   pointer swap ─► meta/
   * }}}
+  * The figures in parentheses ride on the stage's own write (an
+  * accumulator on the write's result stage, or an `Observation`) and are
+  * kept as the stage's `StageSummary`; no stage reads back what an earlier
+  * one wrote to learn a count.
   *
   * A delta (`buildDelta`) runs the same five stages as generation N+1
   * layered on a base snapshot; a full build is the delta with no base.
@@ -81,8 +93,9 @@ private[index] final case class DocRow(docId: Long, repo: String,
   *   2  base dict ∪ delta partials ─ groupBy(term); existing terms keep
   *      their FROZEN salt counts ─► dict/ (rewritten whole)
   *   3-4  segments/ and lineage/ of the delta's docs only
-  *   5  stats and sizing over base ∪ delta docs/lineage; the manifest's
-  *      baseVersions = base.allVersions (manifest union)
+  *   5  stats and sizing summed over the base generations' and the delta's
+  *      summaries; the manifest's baseVersions = base.allVersions
+  *      (manifest union)
   * }}}
   *
   * Scale properties: corpus content is exchanged exactly once (docId
@@ -98,7 +111,9 @@ private[index] final case class DocRow(docId: Long, repo: String,
   * a `_GRAFT_STAMP` build token; re-running the same version resumes after
   * the last complete stage (checkpoint resumability per north_rule). The
   * token names the base generations, so a delta and a full build at the
-  * same version number never reuse each other's stage output.
+  * same version number never reuse each other's stage output. A stage
+  * counts as complete only with its summary, and later stages read the
+  * summaries whether the earlier stages ran or resumed.
   */
 object IndexBuilder {
 
@@ -123,7 +138,6 @@ object IndexBuilder {
     * few cores).
     */
   private def dictPartials(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import org.apache.spark.unsafe.types.UTF8String
     final class Stat { var df = 0L; var cf = 0L; var maxTf = 0 }
     val partialRdd = docs.select(col("tfs")).queryExecution.toRdd
       .mapPartitions { rows =>
@@ -166,14 +180,14 @@ object IndexBuilder {
     */
   private def writeSegments(spark: SparkSession, docs: DataFrame,
       hotTerms: Map[String, Int], segmentsDir: String, numBuckets: Int,
-      storeNorms: Boolean): Unit = {
+      storeNorms: Boolean): Seq[String] = {
     import spark.implicits._
     val hotB = spark.sparkContext.broadcast(hotTerms)
+    val figures = spark.sparkContext.collectionAccumulator[Array[Long]]("segments")
     val storeNormsL = storeNorms
     val partialRdd = docs.select(col("docId"), col("tfs"), col("doclen"))
       .queryExecution.toRdd
       .mapPartitions { rows =>
-        import org.apache.spark.unsafe.types.UTF8String
         final class Buf(val numSalts: Int) {
           // one growable (ids, tfs, dls) triple per salt shard of this term
           val ids = Array.fill(numSalts)(new Array[Long](4))
@@ -259,6 +273,8 @@ object IndexBuilder {
       .as[(String, Int, Int, Long, Long, Int, Array[Byte], Int)]
       .mapPartitions { it =>
         val in = it.buffered
+        // bucket -> (shards, postings, posting bytes) of this task's rows
+        val byBucket = scala.collection.mutable.LongMap.empty[Array[Long]]
         new Iterator[SegmentRow] {
           override def hasNext: Boolean = in.hasNext
           override def next(): SegmentRow = {
@@ -280,13 +296,17 @@ object IndexBuilder {
             // each doc lives in exactly one docs partition, so the partials
             // are disjoint even where a scan that packed non-adjacent files
             // into one partition makes their docId ranges overlap
-            SegmentRow(term, salt, numSalts, df, maxTf,
+            val row = SegmentRow(term, salt, numSalts, df, maxTf,
               PostingCodec.merge(parts.toSeq), bucket)
+            val f = byBucket.getOrElseUpdate(bucket, new Array[Long](3))
+            f(0) += 1; f(1) += df; f(2) += row.postings.length
+            row
           }
-        }
+        } ++ { byBucket.foreach { case (b, f) => figures.add(b +: f) }; Iterator.empty }
       }
     segs.write.mode(SaveMode.Overwrite)
       .partitionBy("bucket").parquet(segmentsDir)
+    StageSummary.fold(figures.value.asScala.toSeq)
   }
 
   def build(
@@ -300,11 +320,12 @@ object IndexBuilder {
 
   /** Incremental (delta) build — the streaming-scale path: index ONLY
     * `newCorpus` as generation N+1 LAYERED on the current snapshot instead
-    * of rebuilding everything. Only the postings are O(batch): stage 1's
-    * offsets job groups every base generation's docs, stage 2 rewrites the
-    * whole dictionary and stage 5 re-reads every generation's docs for the
-    * stats, so a delta still scans the base's docs and dictionary. With no
-    * snapshot yet this is a full build.
+    * of rebuilding everything. The offsets and the stats come from the base
+    * generations' stage summaries, and the postings, lineage and summaries
+    * are the batch's alone. Two parts still grow with the base: stage 1's
+    * key anti-join scans the keys of every base generation's docs, and
+    * stage 2 rewrites the whole dictionary. With no snapshot yet this is a
+    * full build.
     *
     * Contract (same on-disk format, manifest-union semantics):
     *  - new docs continue each docShard's dense rank (per-shard base offsets
@@ -385,7 +406,7 @@ object IndexBuilder {
     def stampPath(dir: String) = Paths.get(dir, "_GRAFT_STAMP")
     def done(dir: String): Boolean =
       new java.io.File(dir, "_SUCCESS").exists() &&
-        Files.exists(stampPath(dir)) &&
+        Files.exists(StageSummary.path(dir)) && Files.exists(stampPath(dir)) &&
         new String(Files.readAllBytes(stampPath(dir)), UTF_8) == buildToken
 
     def timed[T](label: String)(f: => T): T = {
@@ -395,12 +416,15 @@ object IndexBuilder {
       r
     }
     val mode = if (base.isEmpty) "stage" else "delta"
-    // stage n writes `dir` unless a completed, same-token output is there
-    def stage(n: Int, name: String, dir: String)(write: => Unit): Unit =
+    // stage n writes `dir` and its summary unless a completed, same-token
+    // output is there; every later stage reads the summary either way
+    def stage(n: Int, name: String, dir: String)(write: => Seq[String]): Seq[String] = {
       if (!done(dir)) timed(s"$mode$n $name") {
-        write
+        StageSummary.write(dir, write)
         Files.write(stampPath(dir), buildToken.getBytes(UTF_8))
       }
+      StageSummary.read(dir).get
+    }
 
     // ---- stage 1: forward index (docId, metadata, sha256, tfs, doclen) ----
     // Bucket-dense docIds: docId = docShard << 40 | rankWithinShard, where
@@ -417,7 +441,10 @@ object IndexBuilder {
     //    range-sampling job, no zipWithIndex passes
     // The analyze pass (sha256 + tf map) rides the same pass that assigns
     // ids, so corpus content is read and materialized exactly once.
-    stage(1, "docs", docsDir) {
+    // stage 1's offsets and stage 5's totals: the base generations'
+    // per-docShard figures, never a rescan of their docs
+    lazy val baseDocFigures = dirs("docs").init.flatMap(StageSummary.docFigures(spark, _))
+    val docFigureLines = stage(1, "docs", docsDir) {
       val rows = corpus
         .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"))
       val baseDocs = base.map(prev => spark.read.schema(IndexSchemas.docs)
@@ -425,10 +452,11 @@ object IndexBuilder {
       // per-shard dense-rank offsets (docShard = docId >>> 40): a delta
       // continues each shard after its base docs, a full build starts at 0.
       // At most docShards entries, so the map rides in the task closure.
-      val offsets: Map[Long, Long] = baseDocs.fold(Map.empty[Long, Long])(
-        _.groupBy(shiftrightunsigned(col("docId"), 40).as("shard"))
-          .agg(count(lit(1)).as("n"))
-          .as[(Long, Long)].collect().toMap)
+      val offsets: Map[Long, Long] =
+        baseDocFigures.groupMapReduce(_(0))(_(1))(_ + _)
+      // (shard, docs, doclen sum, xxhash64(sha256) sum) per task and shard,
+      // added once per partition: the write's result stage runs this pass
+      val figures = spark.sparkContext.collectionAccumulator[Array[Long]]("docs")
       // a delta skips keys the base already indexes (upsert identity)
       val fresh = baseDocs.fold(rows)(prev => rows
         .dropDuplicates("repo", "path", "commit")
@@ -447,8 +475,11 @@ object IndexBuilder {
           val md = java.security.MessageDigest.getInstance("SHA-256")
           var shard = -1L
           var i = 0L
+          val f = new Array[Long](3) // docs, doclen sum, fingerprint sum
+          def flush(): Unit =
+            if (f(0) > 0) { figures.add(shard +: f.clone()); java.util.Arrays.fill(f, 0L) }
           it.map { case (repo, path, commit, lang, content, s) =>
-            if (s != shard) { shard = s; i = offsets.getOrElse(shard, 0L) }
+            if (s != shard) { flush(); shard = s; i = offsets.getOrElse(shard, 0L) }
             val docId = (shard << 40) | i
             i += 1
             md.reset()
@@ -457,10 +488,14 @@ object IndexBuilder {
             var doclen = 0
             var j = 0
             while (j < tfs.length) { doclen += tfs(j)._2; j += 1 }
+            // Spark's xxhash64(sha256): the fingerprint stage 5 sums
+            f(0) += 1; f(1) += doclen
+            f(2) += XxHash64Function.hash(UTF8String.fromString(sha), StringType, 42L)
             DocRow(docId, repo, path, commit, lang, sha, tfs.toMap, doclen)
-          }
+          } ++ { flush(); Iterator.empty }
         }
         .write.mode(SaveMode.Overwrite).parquet(docsDir)
+      StageSummary.fold(figures.value.asScala.toSeq)
     }
     val docs = spark.read.schema(IndexSchemas.docs).parquet(docsDir)
 
@@ -469,7 +504,7 @@ object IndexBuilder {
     // into one HashMap and emits per-partition (term, df, cf, maxTf)
     // partials — the exchange carries |vocab| x partitions skinny rows
     // instead of one row per posting (~160x fewer at code-corpus shapes).
-    stage(2, "dict", dictDir) {
+    val hotLines = stage(2, "dict", dictDir) {
       val saltThreshold = cfg.saltThreshold
       val maxSalts = cfg.maxSalts
       val numSaltsU = udf((df: Long) => Hashing.numSaltsFor(df, saltThreshold, maxSalts))
@@ -478,7 +513,7 @@ object IndexBuilder {
         .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
       // a delta merges the base dict's stats; existing terms keep their salt
       // counts, so every stored segment stays addressable
-      base.fold(partials.withColumn("numSalts", numSaltsU(col("df")))) { prev =>
+      val dict = base.fold(partials.withColumn("numSalts", numSaltsU(col("df")))) { prev =>
         spark.read.schema(IndexSchemas.dict).parquet(prev.dictDir(indexDir))
           .select(col("term"), col("df"), col("cf"), col("maxTf"),
             col("numSalts").as("oldSalts"))
@@ -488,54 +523,45 @@ object IndexBuilder {
             max("oldSalts").as("oldSalts"))
           .withColumn("numSalts", coalesce(col("oldSalts"), numSaltsU(col("df"))))
           .drop("oldSalts")
-      }.write.mode(SaveMode.Overwrite).parquet(dictDir)
+      }
+      // hot terms ride on the write: tiny by construction (df > saltThreshold)
+      val hot = Observation()
+      dict.observe(hot, collect_list(when(col("numSalts") > 1,
+          struct(col("numSalts"), col("term")))).as("hot"))
+        .write.mode(SaveMode.Overwrite).parquet(dictDir)
+      hot.get("hot").asInstanceOf[scala.collection.Seq[Row]].toSeq
+        .map(r => s"${r.getInt(0)}\t${r.getString(1)}")
     }
-    val dict = spark.read.schema(IndexSchemas.dict).parquet(dictDir)
-
-    // hot terms: tiny by construction (df > saltThreshold) → driver map
-    val hotTerms: Map[String, Int] = timed("hot-term collect")(dict.filter(col("numSalts") > 1)
-      .select("term", "numSalts").as[(String, Int)].collect().toMap)
+    val hotTerms: Map[String, Int] = timed("hot-term collect")(hotLines.map { l =>
+      val Array(salts, term) = l.split("\t", 2)
+      term -> salts.toInt
+    }.toMap)
 
     // ---- stage 3: posting segments of this generation's docs ----
-    stage(3, "segments", segmentsDir) {
+    val segmentLines = stage(3, "segments", segmentsDir) {
       writeSegments(spark, docs, hotTerms, segmentsDir, cfg.numBuckets, storeNorms)
     }
 
-    // ---- stage 4: per-partition lineage + metrics ----
+    // ---- stage 4: per-bucket lineage + metrics, from stage 3's figures ----
     stage(4, "lineage", lineageDir) {
-      spark.read.schema(IndexSchemas.segments).parquet(segmentsDir)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("numShards"),
-          sum("shardDf").as("numPostings"),
-          sum(length(col("postings"))).as("postingBytes"))
-        .withColumn("snapshotVersion", lit(version))
-        .write.mode(SaveMode.Overwrite).parquet(lineageDir)
+      StageSummary.writeLineage(lineageDir, version, segmentLines)
+      segmentLines
     }
 
     // ---- stage 5: stats over every generation + manifest + pointer swap ----
-    val statsRow = timed(s"${mode}5 stats")(
-      spark.read.schema(IndexSchemas.docs).parquet(dirs("docs"): _*).agg(
-        count(lit(1)).as("n"),
-        avg(col("doclen")).as("avgdl"),
-        // order-independent corpus fingerprint over the per-row sha256
-        // invariant; decimal sum avoids ANSI long-overflow at scale
-        sum(xxhash64(col("sha256")).cast(DecimalType(38, 0))).as("fp"))
-        .collect()(0))
-    val n = statsRow.getLong(0)
-    val avgdl = if (statsRow.isNullAt(1)) 0.0 else statsRow.getDouble(1)
-    val fp = if (statsRow.isNullAt(2)) 0L
-      else statsRow.getDecimal(2).toBigInteger.longValue()
-
-    // sizing totals into the manifest: readers pick their serving tier
-    // with zero Spark jobs at open()
-    val sizing = spark.read.schema(IndexSchemas.lineage).parquet(dirs("lineage"): _*)
-      .agg(sum("numShards"), sum("postingBytes")).collect()(0)
-    val meta = SnapshotMeta(version, n, avgdl, cfg.numBuckets,
-      cfg.saltThreshold, cfg.maxSalts, cfg.k1, cfg.b, fp, hotTerms,
-      baseVersions = baseVersions,
-      sizedShards = if (sizing.isNullAt(0)) 0L else sizing.getLong(0),
-      sizedPostingBytes = if (sizing.isNullAt(1)) 0L else sizing.getLong(1),
-      analyzer = cfg.analyzer)
+    // order-independent corpus fingerprint = the per-row xxhash64(sha256)
+    // sum mod 2^64; exact avgdl = doclen sum / n; sizing totals let readers
+    // pick their serving tier with zero Spark jobs at open()
+    val meta = timed(s"${mode}5 stats") {
+      val docFigs = baseDocFigures ++ StageSummary.parse(docFigureLines)
+      val sizes = dirs("lineage").flatMap(StageSummary.lineageFigures(spark, _))
+      val n = docFigs.map(_(1)).sum
+      SnapshotMeta(version, n, if (n == 0) 0.0 else docFigs.map(_(2)).sum.toDouble / n,
+        cfg.numBuckets, cfg.saltThreshold, cfg.maxSalts, cfg.k1, cfg.b,
+        docFigs.map(_(3)).sum, hotTerms, baseVersions = baseVersions,
+        sizedShards = sizes.map(_(1)).sum, sizedPostingBytes = sizes.map(_(3)).sum,
+        analyzer = cfg.analyzer)
+    }
     Snapshot.commit(indexDir, meta)
     meta
   }

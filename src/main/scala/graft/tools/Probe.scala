@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkEntry
+import graft.corpus.CodeCorpus
+import graft.index.{IndexBuilder, IndexConfig}
 import graft.query.{IndexReader, Searcher}
 
 /** Measurement probe over the contract queries and the serving tiers, in
@@ -45,6 +47,9 @@ import graft.query.{IndexReader, Searcher}
   *    one fuzzy query. With a second index (same corpus, built at another
   *    core count), also checks that both carry the same corpus stats and
   *    answer every query identically.
+  *  - `build <nDocs> <dir>`: builds Bench's index shape (`CodeCorpus` seed
+  *    42, Bench's `IndexConfig`) at `dir` and prints each build stage's
+  *    time, the total and the build's Spark job count.
   */
 object Probe {
 
@@ -83,10 +88,15 @@ object Probe {
         require(k.nonEmpty && k.forall(_.isDigit) && k.toInt >= 1,
           s"k must be a positive integer: $k")
         parity(_, indexDir, k.toInt, rest.lift(1))
+      case Seq("build", nDocs, dir) =>
+        // Bench's salt threshold is nDocs / 8, which must be positive
+        require(nDocs.nonEmpty && nDocs.forall(_.isDigit) && nDocs.toLong >= 8,
+          s"nDocs must be an integer >= 8: $nDocs")
+        build(_, nDocs.toLong, dir)
       case _ => throw new IllegalArgumentException("usage: Probe " +
         "time <sfDir> <trials> [query ...] | jobs <sfDir> <query> [passes] | " +
         "plan <sfDir> <outDir> <suffix> [query ...] | tiers <indexDir> | " +
-        "parity <indexDir> [k] [otherIndexDir]")
+        "parity <indexDir> [k] [otherIndexDir] | build <nDocs> <dir>")
     }
   }
 
@@ -263,5 +273,25 @@ object Probe {
       }
       println(s"[parity] $same/${queries.length} identical across build parallelisms")
     }
+  }
+
+  private def build(spark: SparkSession, nDocs: Long, dir: String): Unit = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val corpus = CodeCorpus.generate(spark, nDocs, seed = 42L)
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val meta = IndexBuilder.build(corpus, dir,
+        IndexConfig(numBuckets = 64, saltThreshold = nDocs / 8, maxSalts = 16),
+        onStageTime = (label, sec) => println(f"[probe] $label%-16s $sec%8.3f s"))
+      val sec = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListeners(sc)
+      println(f"[probe] build total $sec%8.3f s  ${jobs.get} Spark jobs  " +
+        s"(v${meta.version}: ${meta.numDocs} docs, ${meta.sizedPostingBytes} posting bytes)")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -195,6 +195,38 @@ class EngineSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  /** sha-256 over each generation's sorted `lineage/` rows (`indexDigest`
+    * does not read lineage). */
+  private def lineageDigest(dir: String): String = {
+    val rows = Snapshot.load(dir).get.allVersions.flatMap { v =>
+      s"v$v lineage" +: spark.read.schema(IndexSchemas.lineage)
+        .parquet(s"$dir/v$v/lineage").collect().toSeq.map(_.mkString("|")).sorted
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.digest(rows.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("lineage pin: per-bucket shard, posting and byte counts of full and full-plus-delta builds") {
+    // Constants computed when stage 4 aggregated the written segments
+    // table; the same builds as the output pin above.
+    val expected = Map(
+      (0.0, "full") -> "a5f2d2d5682df4545ec0a8b1f0c1a1faa35fd4286b0afd46bebbbde5336afc60",
+      (0.0, "delta") -> "36fd2571861300b9ac9d5f52480b85023bca836905eb082676a9a1c7ab53146c",
+      (0.75, "full") -> "7a8453996538b5ebe3df9ba40bb972e9212a0b10b02b8e239735dcb8a154bc27",
+      (0.75, "delta") -> "d95ec28f31e6e0321f8698bfb2961e3b156236e902c35646954fd8a2889941ae")
+    val got = Seq(0.0, 0.75).flatMap { b =>
+      val cfg = IndexConfig(numBuckets = 4, saltThreshold = 300L, maxSalts = 8, b = b)
+      val dir = tmpDir("graft-lineage-pin")
+      IndexBuilder.build(CodeCorpus.generate(spark, 400L, seed = 5L), dir, cfg)
+      val full = lineageDigest(dir)
+      val c2 = CodeCorpus.generate(spark, 800L, seed = 5L)
+      IndexBuilder.buildDelta(c2.unionByName(c2), dir, cfg)
+      Seq((b, "full") -> full, (b, "delta") -> lineageDigest(dir))
+    }.toMap
+    assert(got == expected)
+  }
+
   test("property: docId = shard << 40 | (base docs in shard + rank among new keys), any task count") {
     import spark.implicits._
     type Key = (String, String, String)
@@ -540,6 +572,46 @@ class EngineSpec extends SparkTestBase {
     assert(m2f.baseVersions.isEmpty && m2f.numDocs == 250)
     assert(spark.read.parquet(s"$dir/v2/docs").count() == 250)
     assert(m2f.corpusFingerprint == m2.corpusFingerprint)
+
+    // later stages read only the summaries completed stages leave: losing
+    // the outputs of stages 2-5, or of 4-5, of a full build and of the
+    // delta on it, the re-runs commit the uninterrupted manifests and
+    // lineage rows (hot terms at this threshold, so the dict summary counts)
+    val rdir = tmpDir("graft-resume-summaries")
+    val cfg = IndexConfig(numBuckets = 4, saltThreshold = 100L, maxSalts = 4)
+    val (c1, c2) = (CodeCorpus.generate(spark, 300, seed = 4L),
+      CodeCorpus.generate(spark, 500, seed = 4L))
+    def rows(v: Int, name: String, schema: org.apache.spark.sql.types.StructType,
+        cols: Seq[String]) = spark.read.schema(schema).parquet(s"$rdir/v$v/$name")
+      .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    def state(m: SnapshotMeta) = (m.toJson,
+      rows(m.version, "lineage", IndexSchemas.lineage, IndexSchemas.lineage.fieldNames))
+    def docKeys(v: Int) = rows(v, "docs", IndexSchemas.docs, Seq("docId", "repo", "path", "commit"))
+    def rm(path: String): Unit = if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+      java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+        .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    val full = IndexBuilder.build(c1, rdir, cfg)
+    val delta = IndexBuilder.buildDelta(c2, rdir, cfg)
+    assert(full.hotTerms.nonEmpty && delta.baseVersions == Seq(1))
+    val want = Seq(state(full), state(delta))
+    val v2docs = docKeys(2)
+    def rerun(lost: Seq[String]): Seq[(String, Seq[String])] = {
+      rm(s"$rdir/meta")
+      for (v <- Seq(1, 2); t <- lost) rm(s"$rdir/v$v/$t")
+      val m1 = IndexBuilder.build(c1, rdir, cfg, versionOpt = Some(1))
+      Seq(state(m1), state(IndexBuilder.buildDelta(c2, rdir, cfg)))
+    }
+    assert(rerun(Seq("dict", "segments", "lineage")) == want, "stages 2-5 lost")
+    assert(rerun(Seq("lineage")) == want, "stages 4-5 lost")
+    // a base generation written before summaries: the delta takes its
+    // offsets and totals from the same aggregate over the base's docs
+    // and lineage tables, so docIds and the manifest do not move
+    for (t <- Seq("docs", "lineage")) rm(s"$rdir/v1/$t/_GRAFT_SUMMARY")
+    rm(s"$rdir/meta/v2.json")
+    Snapshot.commit(rdir, full)
+    rm(s"$rdir/v2")
+    assert(state(IndexBuilder.buildDelta(c2, rdir, cfg)) == want(1))
+    assert(docKeys(2) == v2docs)
   }
 
   test("queries with no matching terms return empty") {

@@ -80,13 +80,26 @@ class ProbeSpec extends SparkTestBase {
     assert(out.contains("[parity] 13/13 identical across build parallelisms"), out)
   }
 
+  test("build: one line per build stage, then the total and its Spark jobs") {
+    val dir = tmpDir("graft-probe-build")
+    val out = output("build", "200", dir)
+    // the labels perfbench maps to its index.<stage>_s metrics
+    for (stage <- Seq("stage1 docs", "stage2 dict", "hot-term collect",
+        "stage3 segments", "stage4 lineage", "stage5 stats"))
+      assert(out.count(_.startsWith(s"[probe] $stage ")) == 1, out)
+    assert(out.exists(_.matches(
+      """\[probe\] build total +[0-9.]+ s  \d+ Spark jobs  \(v1: 200 docs, \d+ posting bytes\)""")), out)
+    assert(graft.index.Snapshot.load(dir).exists(_.numDocs == 200))
+  }
+
   test("main rejects bad arguments before a session starts") {
     for (args <- Seq(Seq("time", sfDir, "1"), Seq("time", sfDir, "x"),
         Seq("jobs", sfDir, "no_such_query"), Seq("jobs", sfDir, "q_window_rank", "0"),
         Seq("jobs", sfDir, "q_window_rank", "x"), Seq("jobs", sfDir, "q_window_rank", "2", "3"),
         Seq("plan", sfDir), Seq("explain"),
         Seq("parity", sfDir, "0"), Seq("parity", sfDir, "x"),
-        Seq("parity", sfDir, "10", sfDir, "extra")))
+        Seq("parity", sfDir, "10", sfDir, "extra"),
+        Seq("build", "7", sfDir), Seq("build", "x", sfDir), Seq("build", "100")))
       intercept[IllegalArgumentException](Probe.main(args.toArray))
     assert(!spark.sparkContext.isStopped)
   }
